@@ -26,6 +26,7 @@ from key_resource_table_extractor_spark import job  # noqa: E402
 from key_resource_table_extractor_spark import operators  # noqa: E402
 from key_resource_table_extractor_spark.schemas import (  # noqa: E402
     DOCUMENT_SPANS_SCHEMA,
+    NESTED_RESULT_DDL,
 )
 
 
@@ -68,9 +69,9 @@ def _doc_ids_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full extraction cascade (SURVEY §7.2 v1–v2 semantics).
-    Fused synth+extract in one Python stage (make_synth_extract_fn)."""
+    Fused synth+extract in one mapInArrow stage (make_synth_extract_fn)."""
     ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInPandas(
+    out = ids.mapInArrow(
         job.make_synth_extract_fn(), job.EXTRACTED_SPANS_DDL
     )
     return job.data_spans(out)
@@ -85,9 +86,8 @@ def q_extract_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested result-JSON variant of the flagship (reference S7 shape).
     Fused synth+extract like the flat path."""
     ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInPandas(
-        job.make_synth_extract_fn(nested=True),
-        "doc_id string, result string",
+    return ids.mapInArrow(
+        job.make_synth_extract_fn(output_mode="nested"), NESTED_RESULT_DDL
     )
 
 
@@ -99,11 +99,11 @@ def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     model's fold evidence (an anchor-less source line with >=2 non-empty
     cells is a covered detected row, not a wrap fragment)."""
     ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInPandas(
+    return ids.mapInArrow(
         job.make_synth_extract_fn(
-            nested=True, with_colspans=True, row_model="anchor"
+            output_mode="nested-colspans", row_model="anchor"
         ),
-        "doc_id string, result string",
+        NESTED_RESULT_DDL,
     )
 
 
@@ -111,7 +111,7 @@ def q_extract_spans_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship under the detected-row merge model (J4 analog,
     row_model="anchor") instead of the continuation-vote model."""
     ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInPandas(
+    out = ids.mapInArrow(
         job.make_synth_extract_fn(row_model="anchor"),
         job.EXTRACTED_SPANS_DDL,
     )
@@ -125,10 +125,10 @@ def q_extract_spans_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # always dark; to give every rows-only op periodic driver visibility we
 # ROTATE per round: three redundant D queries (each with an in-window
 # sibling exercising the same plan shape) step out and a trio of
-# rows-only ops steps in. The rotation index derives from the latest
-# CORRECTNESS_r*.json the driver committed, so it advances exactly once
-# per round and every trio is driver-recorded at least every third
-# round. Out-of-window D queries are still value-checked by
+# rows-only ops steps in. The rotation index derives from the
+# checked-in ROUND file, so it advances exactly once per round and every
+# trio is driver-recorded at least every third round. Out-of-window D
+# queries are still value-checked by
 # scripts/check_queries.py and tests/test_queries_vs_duckdb.py;
 # tests pin the window invariants so additions can't silently demote.
 DRIVER_GATE_WINDOW = 50
@@ -187,14 +187,10 @@ def _rotation_index() -> int:
     `ROUND` file (the current round number, bumped each round alongside
     the snapshot — index = (ROUND - 1) % len, matching the historical
     max(CORRECTNESS_r{N}) derivation since round N runs with rounds
-    1..N-1's artifacts committed); else the legacy CORRECTNESS glob for
-    a tree without the file. The ROUND file makes a fresh clone resolve
-    the same index as the working tree deterministically. The resolved
-    index and its source are logged once per process so every gate
-    record is attributable to a window composition."""
-    import glob
-    import re
-
+    1..N-1's artifacts committed). The ROUND file makes a fresh clone
+    resolve the same index as the working tree deterministically. The
+    resolved index and its source are logged once per process so every
+    gate record is attributable to a window composition."""
     global _ROTATION_LOGGED
     here = os.path.dirname(os.path.abspath(__file__))
     env = os.environ.get("KRT_ROTATION_INDEX", "").strip()
@@ -207,7 +203,7 @@ def _rotation_index() -> int:
                 f"KRT_ROTATION_INDEX must be an integer, got {env!r}"
             ) from None
         src = f"env={env}"
-    elif os.path.exists(round_file):
+    else:
         with open(round_file) as fh:
             raw = fh.read().strip()
         try:
@@ -218,14 +214,6 @@ def _rotation_index() -> int:
             ) from None
         ri = (rnd - 1) % len(ROWS_ONLY_ROTATION)
         src = f"ROUND={rnd}"
-    else:
-        ns = [
-            int(mm.group(1))
-            for f in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (mm := re.search(r"CORRECTNESS_r(\d+)\.json$", f))
-        ]
-        ri = (max(ns) if ns else 0) % len(ROWS_ONLY_ROTATION)
-        src = f"max(CORRECTNESS_r*)={max(ns) if ns else 0}"
     if not _ROTATION_LOGGED:
         _ROTATION_LOGGED = True
         print(

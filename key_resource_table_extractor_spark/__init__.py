@@ -9,8 +9,8 @@ text+media spans::
     (doc_id: string,
      spans: array<struct<kind:string, text:string, media_ref:string, offset:int>>)
 
-All per-document logic runs inside vectorized pandas/Arrow UDFs
-(``mapInPandas``); there are no per-row Python UDFs anywhere. The module
+All per-document extraction runs inside one vectorized Arrow batch
+function (``mapInArrow``); there are no per-row Python UDFs anywhere. The module
 layout:
 
 - ``spec``       — the pinned thresholds/regexes of the extraction semantics
@@ -18,7 +18,7 @@ layout:
 - ``synth``      — deterministic synthetic span-corpus generator (seeded)
 - ``oracle``     — pure-Python reference implementation (the executable spec)
 - ``extractor``  — vectorized pandas/numpy implementation used inside Spark
-- ``job``        — the Spark job: salted repartition → mapInPandas → sink,
+- ``job``        — the Spark job: salted repartition → mapInArrow → sink,
                    with checkpoint-table resume (left anti join)
 - ``operators``  — SQL-expressible relational/dedup/similarity/text operators
                    (the ``queries()``/``oracle_sql()`` surface)

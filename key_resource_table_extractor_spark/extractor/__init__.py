@@ -1,7 +1,1 @@
-from .pipeline import (  # noqa: F401
-    extract_nested_batch,
-    extract_pandas_batch,
-    make_map_in_arrow_fn,
-    make_map_in_pandas_fn,
-    make_nested_map_in_pandas_fn,
-)
+from .pipeline import make_map_in_arrow_fn  # noqa: F401

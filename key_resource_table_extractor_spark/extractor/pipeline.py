@@ -2,7 +2,9 @@
 
 The whole five-stage cascade of the reference (SURVEY.md §0) runs as a pure
 function over one Arrow batch of ``(doc_id, spans)`` rows inside
-``mapInPandas`` / ``mapInArrow``. Design:
+``mapInArrow`` — every Spark extraction shape runs ``make_map_in_arrow_fn``
+(or, for the fused synthetic-input queries, its ``make_extract_fn`` step).
+Design:
 
 - batch-global passes (line features, in-table scoring, gap fill, island
   detection) are fully vectorized with pandas/numpy over *all* lines of *all*
@@ -27,6 +29,7 @@ import traceback
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from .. import spec
 
@@ -41,6 +44,8 @@ _RRID_PAT = spec.RRID_REGEX
 _KIND_ERROR = "error"
 
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
+NESTED_COLUMNS = ["doc_id", "result"]
+OUTPUT_MODES = ("spans", "nested", "nested-colspans")
 
 
 # --------------------------------------------------------------------------
@@ -543,6 +548,16 @@ def _extract_doc_regions(
 # batch entry points
 # --------------------------------------------------------------------------
 
+def _append_meta_row(out: dict, doc_id: str, kind: str, text: str) -> None:
+    """Append a row outside every table (an error or the stats row),
+    filling each lineage column the accumulator carries."""
+    row = {"doc_id": doc_id, "kind": kind, "text": text, "media_ref": "",
+           "offset": -1, "table": -1, "row": -1, "col": -1,
+           "fullspan": False, "cfirst": -1, "clast": -1, "rowspan": 1}
+    for c, vals in out.items():
+        vals.append(row[c])
+
+
 def extract_columnar(
     doc_ids: np.ndarray,
     span_doc: np.ndarray,
@@ -557,6 +572,7 @@ def extract_columnar(
     gap_min_spaces: int = spec.GAP_MIN_SPACES,
     with_extents: bool = False,
     midcol_rowspans: bool = False,
+    null_offset: np.ndarray | None = None,
 ) -> dict:
     """Extraction over flat columnar span arrays for a batch of docs.
     Returns a dict of output columns (lists / numpy arrays), including the
@@ -569,7 +585,15 @@ def extract_columnar(
     extents (``cfirst``/``clast``) for spanning-cell recovery — only the
     colspan-aware nested renderer needs them, and the extra per-cell work
     costs ~20% kernel throughput, so the flat path skips them.
+
+    ``null_offset`` marks spans whose offset was null in the input (their
+    ``offsets`` entry is a placeholder): a doc with such a text or media
+    span cannot be ordered, so it yields one ``kind='error'`` row.
     """
+    bad_doc = np.zeros(len(doc_ids), dtype=bool)
+    if null_offset is not None:
+        placed = (kinds == spec.KIND_TEXT) | (kinds == spec.KIND_MEDIA)
+        bad_doc[span_doc[null_offset & placed]] = True
     order = np.lexsort((offsets, span_doc))
     span_doc, kinds, texts = span_doc[order], kinds[order], texts[order]
     media_refs, offsets = media_refs[order], offsets[order]
@@ -617,9 +641,11 @@ def extract_columnar(
         l0, l1 = line_doc_bounds[d], line_doc_bounds[d + 1]
         m0, m1 = media_doc_bounds[d], media_doc_bounds[d + 1]
         s0, s1 = seg_bounds[d], seg_bounds[d + 1]
-        if l0 == l1:
+        if l0 == l1 and not bad_doc[d]:
             continue
         try:
+            if bad_doc[d]:
+                raise ValueError("a text or media span has a null offset")
             n_tables += _extract_doc_regions(
                 str(doc_ids[d]),
                 li_off[l0:l1],
@@ -641,18 +667,10 @@ def extract_columnar(
             )
         except Exception:  # per-doc isolation (reference stores err_msg)
             n_errors += 1
-            out["doc_id"].append(str(doc_ids[d]))
-            out["kind"].append(_KIND_ERROR)
-            out["text"].append(traceback.format_exc()[-500:])
-            out["media_ref"].append("")
-            out["offset"].append(-1)
-            out["table"].append(-1)
-            out["row"].append(-1)
-            out["col"].append(-1)
-            out["fullspan"].append(False)
-            if with_extents:
-                out["cfirst"].append(-1)
-                out["clast"].append(-1)
+            _append_meta_row(
+                out, str(doc_ids[d]), _KIND_ERROR,
+                traceback.format_exc()[-500:],
+            )
 
     # per-batch lineage/metrics row (aggregated into the checkpoint table by
     # job.run_extraction — replaces the reference's Postgres job metrics)
@@ -673,18 +691,9 @@ def extract_columnar(
             "doc_id_max": str(max(doc_ids)),
             "partition_id": int(partition_id),
         }
-        out["doc_id"].append("__stats__")
-        out["kind"].append("stats")
-        out["text"].append(json.dumps(stats, sort_keys=True))
-        out["media_ref"].append("")
-        out["offset"].append(-1)
-        out["table"].append(-1)
-        out["row"].append(-1)
-        out["col"].append(-1)
-        out["fullspan"].append(False)
-        if with_extents:
-            out["cfirst"].append(-1)
-            out["clast"].append(-1)
+        _append_meta_row(
+            out, "__stats__", "stats", json.dumps(stats, sort_keys=True)
+        )
 
     # seq: 0-based per doc in emission order (docs are emitted contiguously),
     # computed from run lengths — no pandas groupby on the hot path
@@ -703,75 +712,20 @@ def extract_columnar(
     return out
 
 
-def _columns_to_pandas(out: dict) -> pd.DataFrame:
-    return pd.DataFrame({c: out[c] for c in OUTPUT_COLUMNS})
-
-
-def _batch_to_columnar(pdf: pd.DataFrame):
-    n = len(pdf)
-    doc_ids = pdf["doc_id"].to_numpy()
-    span_lists = [
-        s if isinstance(s, (list, np.ndarray)) else []
-        for s in pdf["spans"].tolist()
-    ]
-    lens = np.array([len(s) for s in span_lists], dtype=np.int64)
-    span_doc = np.repeat(np.arange(n), lens)
-    flat = [sp for lst in span_lists for sp in lst]
-    kinds = np.array([s["kind"] for s in flat], dtype=object)
-    texts = np.array([s["text"] for s in flat], dtype=object)
-    media = np.array([s["media_ref"] for s in flat], dtype=object)
-    offs = np.array(
-        [s["offset"] if s["offset"] is not None else 0 for s in flat],
-        dtype=np.int64,
-    )
-    return doc_ids, span_doc, kinds, texts, media, offs
-
-
-def extract_pandas_batch(
-    pdf: pd.DataFrame,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-) -> pd.DataFrame:
-    """Extraction over a ``(doc_id, spans)`` pandas batch (mapInPandas)."""
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {c: pd.Series(dtype="string" if c not in ("seq", "offset") else "int32")
-             for c in OUTPUT_COLUMNS}
-        )
-    return _columns_to_pandas(
-        extract_columnar(
-            *_batch_to_columnar(pdf),
-            merge_rows=merge_rows,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            row_model=row_model,
-            gap_min_spaces=gap_min_spaces,
-        )
-    )
-
-
-def extract_nested_batch(
-    pdf: pd.DataFrame,
-    merge_rows: bool = True,
-    with_colspans: bool = False,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-    midcol_rowspans: bool = False,
-) -> pd.DataFrame:
-    """One row per doc: the reference's result-JSON wrapper
+def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
+    """Fold ``extract_columnar`` output into one ``(doc_id, result)`` row
+    per doc: the reference's result-JSON wrapper
     ``{"paper_id": ..., "result": {"pages": [{"page": N, "tables":
     [{"rows": [[cell, ...], ...]}]}]}}`` (reference
     HybridTableTextContentExtractor.java:87-107, row_merger.py:180-204;
     FIXTURES.md §4). One extracted region = one page with one table.
+    Docs without a table (and error docs) get no row.
 
-    ``with_colspans=True`` emits cells as ``{"content", "colspan"}`` dicts
-    (the gold-JSON cell shape, reference html_table_converter.py:60-72,
-    merge_model_data_prep.py:296-320). Spanning cells are recovered two ways:
+    ``with_colspans=True`` (``out`` must then carry the extents of
+    ``extract_columnar(..., with_extents=True)``) emits cells as
+    ``{"content", "colspan"}`` dicts (the gold-JSON cell shape, reference
+    html_table_converter.py:60-72, merge_model_data_prep.py:296-320).
+    Spanning cells are recovered two ways:
 
     - full-width spanning rows (every source line single-segment, exactly one
       non-empty cell — the section-divider shape the reference models as a
@@ -819,26 +773,6 @@ def extract_nested_batch(
     GriTS grids honor it (eval/grits_like.py), so both recovered and
     unrecoverable rowspans are compared fairly
     (tests/test_colspan_rowspan.py)."""
-    if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="string"),
-                             "result": pd.Series(dtype="string")})
-    out = extract_columnar(
-        *_batch_to_columnar(pdf),
-        merge_rows=merge_rows,
-        excepted_lines=excepted_lines,
-        excepted_pages=excepted_pages,
-        row_model=row_model,
-        gap_min_spaces=gap_min_spaces,
-        with_extents=with_colspans,
-        midcol_rowspans=midcol_rowspans,
-    )
-    return nested_from_columnar(out, with_colspans)
-
-
-def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
-    """Fold ``extract_columnar`` output into the one-row-per-doc nested
-    result-JSON frame (the tail of ``extract_nested_batch``, split out so
-    the fused synth+extract path can reuse it on pre-built columns)."""
     docs: dict[str, dict] = {}
     fullspan: dict[tuple, bool] = {}
     extents: dict[tuple, tuple] = {}
@@ -860,7 +794,7 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
                 rowspans.setdefault(key, {})[out["col"][i]] = (
                     out["rowspan"][i]
                 )
-    rows = []
+    ids, results = [], []
     for doc_id in sorted(docs):
         pages = []
         for t in sorted(docs[doc_id]):
@@ -884,8 +818,12 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
                 _apply_rowspan_occupancy(grid)
             pages.append({"page": int(t) + 1, "tables": [{"rows": grid}]})
         result = {"paper_id": doc_id, "result": {"pages": pages}}
-        rows.append((doc_id, json.dumps(result, sort_keys=True)))
-    return pd.DataFrame(rows, columns=["doc_id", "result"])
+        ids.append(doc_id)
+        results.append(json.dumps(result, sort_keys=True))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, type=pa.string()), pa.array(results, type=pa.string())],
+        names=NESTED_COLUMNS,
+    )
 
 
 def _apply_rowspan_occupancy(grid: list[list[dict]]) -> list[list[dict]]:
@@ -956,7 +894,7 @@ def _cells_with_colspans(
     rowspans: dict[int, int] | None = None,
 ) -> list[dict]:
     """Render one logical row into gold-JSON ``{"content", "colspan"}`` cells
-    using the cells' physical column extents (see ``extract_nested_batch``).
+    using the cells' physical column extents (see ``nested_from_columnar``).
     Claiming is left-to-right; a span absorbs only free EMPTY neighbors
     within its measured extent, so two competing spans never overlap.
     ``rowspans`` maps a logical CONTENT column to its recovered rowspan
@@ -1005,109 +943,111 @@ def _cells_with_colspans(
     return row_cells
 
 
-def make_map_in_pandas_fn(
+# --------------------------------------------------------------------------
+# the one Spark entry: decode the Arrow batch → extract_columnar → encode
+# --------------------------------------------------------------------------
+
+def _decode_spans(rb: pa.RecordBatch):
+    """A ``(doc_id, spans)`` batch as ``extract_columnar`` columns plus its
+    null-offset mask (None when no offset is null) — columnar-side, no
+    per-span Python dicts. ``flatten`` honours a sliced ListArray's offset
+    (its ``.values`` would still hold the FULL child) and skips the values
+    behind null span lists."""
+    spans = rb.column("spans")
+    lens = spans.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    vals = spans.flatten()
+    offsets = vals.field("offset")
+    null_offset = (
+        offsets.is_null().to_numpy(zero_copy_only=False)
+        if offsets.null_count else None
+    )
+    columns = (
+        rb.column("doc_id").to_numpy(zero_copy_only=False),
+        np.repeat(np.arange(rb.num_rows), lens),
+        vals.field("kind").to_numpy(zero_copy_only=False),
+        vals.field("text").to_numpy(zero_copy_only=False),
+        vals.field("media_ref").to_numpy(zero_copy_only=False),
+        offsets.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64),
+    )
+    return columns, null_offset
+
+
+def _flat_batch(out: dict) -> pa.RecordBatch:
+    """``extract_columnar`` output as ``OUTPUT_COLUMNS`` span rows."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(out["doc_id"], type=pa.string()),
+            pa.array(out["seq"], type=pa.int32()),
+            pa.array(out["kind"], type=pa.string()),
+            pa.array(out["text"], type=pa.string()),
+            pa.array(out["media_ref"], type=pa.string()),
+            pa.array(out["offset"], type=pa.int32()),
+        ],
+        names=OUTPUT_COLUMNS,
+    )
+
+
+def make_extract_fn(
+    output_mode: str = "spans",
     merge_rows: bool = True,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
     row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-):
-    """Iterator-style fn for ``DataFrame.mapInPandas`` (Arrow-batched)."""
-
-    def fn(batches):
-        for pdf in batches:
-            yield extract_pandas_batch(
-                pdf,
-                merge_rows=merge_rows,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
-
-    return fn
-
-
-def make_nested_map_in_pandas_fn(
-    merge_rows: bool = True,
-    with_colspans: bool = False,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
+    gap_min_spaces: int | None = None,
     midcol_rowspans: bool = False,
 ):
-    """mapInPandas fn emitting the nested result-JSON (one row per doc)."""
+    """The shared extract-and-encode step: ``fn(columns, null_offset)``
+    runs ``extract_columnar`` once over decoded span columns and encodes
+    the result as one Arrow batch — flat ``OUTPUT_COLUMNS`` span rows for
+    ``output_mode="spans"``, ``(doc_id, result)`` rows (via
+    ``nested_from_columnar``) for "nested" and "nested-colspans". An
+    unknown mode raises ``ValueError`` here, before any data is touched.
 
-    def fn(batches):
-        for pdf in batches:
-            yield extract_nested_batch(
-                pdf,
-                merge_rows=merge_rows,
-                with_colspans=with_colspans,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-                midcol_rowspans=midcol_rowspans,
-            )
+    ``merge_rows`` is the reference's use_row_info switch analog;
+    ``row_model`` ("votes" | "anchor" | "none") picks the merge mechanism
+    explicitly — "anchor" is the detected-row J4 analog
+    (PDFTableExtractor2.java:334-380); ``excepted_lines``/
+    ``excepted_pages`` drop text lines / detected regions by per-doc
+    index, negative = from the end (PDFTableExtractor2.java:93-128);
+    ``gap_min_spaces=None`` means ``spec.GAP_MIN_SPACES``;
+    ``midcol_rowspans`` opts into non-col-0 rowspan recovery (see
+    ``nested_from_columnar`` for the sparse-column trade-off)."""
+    if output_mode not in OUTPUT_MODES:
+        raise ValueError(
+            f"unknown output_mode {output_mode!r}; expected one of "
+            f"{OUTPUT_MODES}"
+        )
+    colspans = output_mode == "nested-colspans"
+    kw = dict(
+        merge_rows=merge_rows,
+        excepted_lines=excepted_lines,
+        excepted_pages=excepted_pages,
+        row_model=row_model,
+        gap_min_spaces=(
+            spec.GAP_MIN_SPACES if gap_min_spaces is None else gap_min_spaces
+        ),
+        with_extents=colspans,
+        midcol_rowspans=midcol_rowspans,
+    )
+
+    def fn(columns, null_offset=None) -> pa.RecordBatch:
+        out = extract_columnar(*columns, null_offset=null_offset, **kw)
+        if output_mode == "spans":
+            return _flat_batch(out)
+        return nested_from_columnar(out, colspans)
 
     return fn
 
 
-def make_map_in_arrow_fn(
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-):
-    """Zero-copy-ish fn for ``DataFrame.mapInArrow`` — flattens the
-    list<struct> spans column columnar-side, no per-span Python dicts."""
-    import pyarrow as pa
+def make_map_in_arrow_fn(output_mode: str = "spans", **options):
+    """The ``DataFrame.mapInArrow`` fn every extraction runs: each
+    ``(doc_id, spans)`` batch is decoded once, extracted once and encoded
+    by the ``output_mode`` adapter. ``options`` are those of
+    ``make_extract_fn``."""
+    extract = make_extract_fn(output_mode, **options)
 
     def fn(batches):
         for rb in batches:
-            tbl = pa.table(rb)
-            doc_ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-            spans = tbl.column("spans").combine_chunks()
-            if isinstance(spans, pa.ChunkedArray):
-                spans = spans.combine_chunks()
-            la = spans if isinstance(spans, pa.ListArray) else spans.chunk(0)
-            offs = la.offsets.to_numpy(zero_copy_only=False)
-            lens = offs[1:] - offs[:-1]
-            span_doc = np.repeat(np.arange(len(doc_ids)), lens)
-            # slice the child array by the offset window: a sliced ListArray
-            # (nonzero offs[0]) keeps the FULL child in .values — indexing it
-            # directly would misalign span_doc with the value arrays
-            vals = la.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
-            kinds = vals.field("kind").to_numpy(zero_copy_only=False)
-            texts = vals.field("text").to_numpy(zero_copy_only=False)
-            media = vals.field("media_ref").to_numpy(zero_copy_only=False)
-            offsets = vals.field("offset").to_numpy(zero_copy_only=False)
-            out = extract_columnar(
-                doc_ids, span_doc,
-                np.asarray(kinds, dtype=object),
-                np.asarray(texts, dtype=object),
-                np.asarray(media, dtype=object),
-                np.asarray(offsets, dtype=np.int64),
-                merge_rows=merge_rows,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
-            # build arrow arrays directly — no pandas on the output path
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["seq"], type=pa.int32()),
-                    pa.array(out["kind"], type=pa.string()),
-                    pa.array(out["text"], type=pa.string()),
-                    pa.array(out["media_ref"], type=pa.string()),
-                    pa.array(out["offset"], type=pa.int32()),
-                ],
-                names=OUTPUT_COLUMNS,
-            )
+            yield extract(*_decode_spans(rb))
 
     return fn

@@ -26,8 +26,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
-from .extractor.pipeline import make_map_in_arrow_fn, make_map_in_pandas_fn
-from .schemas import DOCUMENT_SPANS_SCHEMA, EXTRACTED_SPANS_DDL
+from .extractor.pipeline import make_extract_fn, make_map_in_arrow_fn
+from .schemas import (
+    DOCUMENT_SPANS_SCHEMA,
+    EXTRACTED_SPANS_DDL,
+    NESTED_RESULT_DDL,
+)
 
 STATS_KIND = "stats"
 ERROR_KIND = "error"
@@ -77,16 +81,10 @@ def synthesize_spans(
 def make_synth_extract_fn(
     seed: int = 42,
     key_format: str = "sfdoc_{}",
-    nested: bool = False,
-    with_colspans: bool = False,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int | None = None,
-    midcol_rowspans: bool = False,
+    output_mode: str = "spans",
+    **options,
 ):
-    """Fused synth+extract ``mapInPandas`` fn over a bare ``doc_id`` frame.
+    """Fused synth+extract ``mapInArrow`` fn over a bare ``doc_id`` frame.
 
     The un-fused shape (generate spans → Arrow → exchange → Arrow →
     extract) pays for the span payload three times: pandas→Arrow struct
@@ -94,62 +92,40 @@ def make_synth_extract_fn(
     text, and Arrow→numpy back into the extractor. Fusing keeps the spans
     as plain Python tuples inside ONE task (guide §8: shuffle the 8-byte
     doc ids, never the payload) — the only rows that ever cross Arrow are
-    the extraction OUTPUT rows. Byte-identical results: generation is
-    keyed by doc_id only and extraction is a pure per-doc function
-    (pinned by tests/test_modes_and_nested.py fused-equality tests).
+    the extraction OUTPUT rows. Only the input adapter is its own: the
+    generated spans go through the same ``make_extract_fn`` step as every
+    other extraction (``options`` are its options). Byte-identical
+    results: generation is keyed by doc_id only and extraction is a pure
+    per-doc function (pinned by tests/test_modes_and_nested.py
+    fused-equality tests).
     """
     import numpy as np
 
-    from . import spec
-    from .extractor.pipeline import (
-        _columns_to_pandas,
-        extract_columnar,
-        nested_from_columnar,
-    )
-
-    gap = spec.GAP_MIN_SPACES if gap_min_spaces is None else gap_min_spaces
-    kw = dict(
-        merge_rows=merge_rows,
-        excepted_lines=excepted_lines,
-        excepted_pages=excepted_pages,
-        row_model=row_model,
-        gap_min_spaces=gap,
-    )
-    if nested:
-        kw.update(with_extents=with_colspans, midcol_rowspans=midcol_rowspans)
+    extract_fn = make_extract_fn(output_mode, **options)
 
     def fn(batches):
-        import pandas as pd
-
         gen = synth.generate_doc
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = [key_format.format(i) for i in pdf["doc_id"].tolist()]
+        for rb in batches:
+            ids = rb.column("doc_id").to_pylist()
+            keys = [key_format.format(i) for i in ids]
             lens = np.empty(len(keys), dtype=np.int64)
             flat: list[tuple] = []
             for j, k in enumerate(keys):
                 sp = gen(k, seed)
                 lens[j] = len(sp)
                 flat.extend(sp)
-            span_doc = np.repeat(np.arange(len(keys)), lens)
             if flat:
                 kinds, texts, media, offs = zip(*flat)
             else:
                 kinds = texts = media = offs = ()
-            out = extract_columnar(
+            yield extract_fn((
                 np.array(keys, dtype=object),
-                span_doc,
+                np.repeat(np.arange(len(keys)), lens),
                 np.array(kinds, dtype=object),
                 np.array(texts, dtype=object),
                 np.array(media, dtype=object),
                 np.array(offs, dtype=np.int64),
-                **kw,
-            )
-            if nested:
-                yield nested_from_columnar(out, with_colspans)
-            else:
-                yield _columns_to_pandas(out)
+            ))
 
     return fn
 
@@ -172,149 +148,37 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, key)
 
 
-def size_balanced_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    heavy_quantile: float = 0.99,
-    salt: int = 0,
-    exact_per_partition: int = 4,
-) -> DataFrame:
-    """Skew-aware repartition: round-robin the heaviest docs, hash the rest.
-
-    Three bands by span count:
-
-    - SUPER-HEAVY — docs STRICTLY above the ``1 - cap/n`` approx-quantile
-      (``cap = exact_per_partition * num_partitions``): placed round-robin
-      by descending size, so the k uniquely-heaviest docs land on k distinct
-      partitions. Strictly-above bounds the exact-placement window to ~cap
-      rows by the quantile definition even under heavy ties — never a global
-      sort of the whole heavy tail through one task.
-    - HEAVY (above ``heavy_quantile`` up to the super-heavy cut, including
-      any tie mass AT the cut): salted hash with a DIFFERENT salt than the
-      light band — equal-sized docs gain nothing from exact round-robin, a
-      hash spread balances them in expectation without any sort.
-    - LIGHT — salted hash.
-
-    Output is byte-identical to any other partitioning (extraction is
-    per-doc pure) — pinned by the determinism test.
-    """
-    from pyspark.sql import Window
-
-    sized = df.withColumn("__sz", F.size("spans"))
-    agg = sized.agg(
-        F.expr(f"approx_percentile(__sz, {heavy_quantile})").alias("t"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    thr = int(agg["t"] or 0)
-    n_rows = int(agg["n"] or 0)
-    cap = max(exact_per_partition * num_partitions, 1)
-    # second threshold: quantile with at most ~cap rows STRICTLY above it
-    q2 = max(heavy_quantile, 1.0 - cap / n_rows) if n_rows else heavy_quantile
-    thr2 = thr
-    if q2 > heavy_quantile:
-        thr2_row = sized.agg(
-            F.expr(f"approx_percentile(__sz, {q2})").alias("t")
-        ).collect()[0]
-        thr2 = max(int(thr2_row["t"] or 0), thr)
-    super_heavy = sized.where(F.col("__sz") > F.lit(thr2))
-    mid = sized.where(
-        (F.col("__sz") >= F.lit(thr)) & (F.col("__sz") <= F.lit(thr2))
-    )
-    light = sized.where(F.col("__sz") < F.lit(thr))
-    w = Window.orderBy(F.desc("__sz"), F.asc("doc_id"))
-    super_p = super_heavy.withColumn(
-        "__p",
-        F.pmod(F.row_number().over(w) - 1, F.lit(num_partitions)).cast("int"),
-    )
-
-    def _hash_p(frame, s):
-        return frame.withColumn(
-            "__p",
-            F.pmod(
-                F.xxhash64(F.col("doc_id"), F.lit(s)), F.lit(num_partitions)
-            ).cast("int"),
-        )
-
-    return (
-        super_p.unionByName(_hash_p(mid, salt + 1))
-        .unionByName(_hash_p(light, salt))
-        .repartition(num_partitions, F.col("__p"))
-        .drop("__sz", "__p")
-    )
-
-
 # --------------------------------------------------------------------------
 # extract
 # --------------------------------------------------------------------------
 
+def _extraction(output_mode: str, **options):
+    """``df -> df.mapInArrow(...)`` running the one extraction entry
+    (``pipeline.make_map_in_arrow_fn``); building it validates
+    ``output_mode`` before any Spark work."""
+    fn = make_map_in_arrow_fn(output_mode, **options)
+    ddl = EXTRACTED_SPANS_DDL if output_mode == "spans" else NESTED_RESULT_DDL
+    return lambda df: df.mapInArrow(fn, ddl)
+
+
 def extract(
     df: DataFrame,
-    use_arrow: bool = True,
     merge_rows: bool = True,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
     row_model: str | None = None,
     gap_min_spaces: int | None = None,
 ) -> DataFrame:
-    """spans table → extracted span rows (+ per-batch stats rows).
-
-    ``merge_rows`` is the reference's use_row_info switch analog;
-    ``row_model`` ("votes" | "anchor" | "none") picks the merge mechanism
-    explicitly — "anchor" is the detected-row J4 analog
-    (PDFTableExtractor2.java:334-380);
-    ``excepted_lines``/``excepted_pages`` drop text lines / detected
-    regions by per-doc index, negative = from the end (the reference's
-    excepted lines/pages config, PDFTableExtractor2.java:93-128)."""
-    from . import spec
-
-    kw = dict(
+    """spans table → extracted span rows (+ per-batch stats rows). The
+    options are those of ``pipeline.make_extract_fn``."""
+    return _extraction(
+        "spans",
         merge_rows=merge_rows,
         excepted_lines=excepted_lines,
         excepted_pages=excepted_pages,
         row_model=row_model,
-        gap_min_spaces=(
-            spec.GAP_MIN_SPACES if gap_min_spaces is None else gap_min_spaces
-        ),
-    )
-    if use_arrow:
-        return df.mapInArrow(make_map_in_arrow_fn(**kw), EXTRACTED_SPANS_DDL)
-    return df.mapInPandas(make_map_in_pandas_fn(**kw), EXTRACTED_SPANS_DDL)
-
-
-def extract_grouped(
-    df: DataFrame,
-    merge_rows: bool = True,
-    row_model: str | None = None,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    gap_min_spaces: int | None = None,
-) -> DataFrame:
-    """Alternative execution shape: ``groupBy(doc_id).applyInPandas``.
-
-    Semantically identical to ``extract`` (equality-tested); useful when
-    the input has been exploded to finer granularity upstream and Spark
-    must guarantee doc-grouping itself. Costs a shuffle on doc_id — the
-    one-row-per-doc ``mapInArrow`` path is the default for that reason.
-    """
-    from .extractor.pipeline import extract_pandas_batch
-
-    from . import spec
-
-    def fn(pdf):
-        out = extract_pandas_batch(
-            pdf,
-            merge_rows=merge_rows,
-            row_model=row_model,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            gap_min_spaces=(
-                spec.GAP_MIN_SPACES if gap_min_spaces is None
-                else gap_min_spaces
-            ),
-        )
-        return out[out["kind"].isin(DATA_KINDS)]
-
-    return df.groupBy("doc_id").applyInPandas(fn, EXTRACTED_SPANS_DDL)
+        gap_min_spaces=gap_min_spaces,
+    )(df)
 
 
 def extract_nested(
@@ -329,27 +193,17 @@ def extract_nested(
 ) -> DataFrame:
     """spans table → one row per doc with the reference's result-JSON
     wrapper (S7 sink parity; FIXTURES.md §4). ``with_colspans`` switches
-    cells to the gold-JSON ``{"content", "colspan"}`` shape.
-    ``midcol_rowspans`` opts into non-col-0 rowspan recovery (see
-    ``extract_nested_batch`` for the sparse-column trade-off)."""
-    from . import spec
-    from .extractor.pipeline import make_nested_map_in_pandas_fn
-
-    return df.mapInPandas(
-        make_nested_map_in_pandas_fn(
-            merge_rows=merge_rows,
-            with_colspans=with_colspans,
-            row_model=row_model,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            gap_min_spaces=(
-                spec.GAP_MIN_SPACES if gap_min_spaces is None
-                else gap_min_spaces
-            ),
-            midcol_rowspans=midcol_rowspans,
-        ),
-        "doc_id string, result string",
-    )
+    cells to the gold-JSON ``{"content", "colspan"}`` shape (see
+    ``pipeline.nested_from_columnar``)."""
+    return _extraction(
+        "nested-colspans" if with_colspans else "nested",
+        merge_rows=merge_rows,
+        row_model=row_model,
+        excepted_lines=excepted_lines,
+        excepted_pages=excepted_pages,
+        gap_min_spaces=gap_min_spaces,
+        midcol_rowspans=midcol_rowspans,
+    )(df)
 
 
 def data_spans(out: DataFrame) -> DataFrame:
@@ -403,7 +257,6 @@ def run_extraction(
     n_buckets: int = 8,
     partitions_per_bucket: int | None = None,
     salt: int = 0,
-    use_arrow: bool = True,
     fail_after_bucket: int | None = None,
     buckets: list[int] | None = None,
     excepted_lines: list[int] | None = None,
@@ -427,7 +280,8 @@ def run_extraction(
     discipline — a 10^9-doc nested export is resumable exactly like the
     flat one. Nested buckets carry no per-batch stats rows, so their
     checkpoint rows record doc counts and doc_id bounds with zeroed
-    span/table/error tallies.
+    span/table/error tallies. Any other mode raises ``ValueError`` before
+    the bucket-count marker or any bucket is written.
 
     Per-bucket metrics (the per-batch ``kind='stats'`` rows plus the output
     row count) are collected with ``df.observe()`` DURING the single write
@@ -448,6 +302,14 @@ def run_extraction(
     """
     from pyspark.sql import Observation
 
+    extract_bucket = _extraction(
+        output_mode,
+        excepted_lines=excepted_lines,
+        excepted_pages=excepted_pages,
+        row_model=row_model,
+        gap_min_spaces=gap_min_spaces,
+        midcol_rowspans=midcol_rowspans,
+    )
     run_id = run_id or uuid.uuid4().hex[:12]
     partitions_per_bucket = (
         partitions_per_bucket or spark.sparkContext.defaultParallelism
@@ -478,15 +340,8 @@ def run_extraction(
         bdf = bucketed.filter(F.col("__bucket") == b).drop("__bucket")
         bdf = salted_repartition(bdf, partitions_per_bucket, salt)
         obs = Observation(f"krt_{run_id}_{b}_{uuid.uuid4().hex[:6]}")
+        out = extract_bucket(bdf)
         if output_mode == "spans":
-            out = extract(
-                bdf,
-                use_arrow=use_arrow,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
             out = out.observe(
                 obs,
                 F.sum(_stat("n_docs").cast("long")).alias("n_docs"),
@@ -500,15 +355,6 @@ def run_extraction(
                 ).alias("n_spans_out"),
             )
         else:
-            out = extract_nested(
-                bdf,
-                with_colspans=(output_mode == "nested-colspans"),
-                row_model=row_model,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                gap_min_spaces=gap_min_spaces,
-                midcol_rowspans=midcol_rowspans,
-            )
             out = out.observe(
                 obs,
                 F.count(F.lit(1)).alias("n_docs"),
@@ -1220,7 +1066,6 @@ def upsert_docs(
     spark: SparkSession,
     input_df: DataFrame,
     output_path: str,
-    use_arrow: bool = True,
     output_mode: str = "spans",
     n_buckets: int | None = None,
     dry_run: bool = False,
@@ -1341,16 +1186,9 @@ def upsert_docs(
             }
         finally:
             ids.unpersist()
+    new_rows = _extraction(output_mode, **extract_kw)(input_df)
     if output_mode == "spans":
-        new_rows = data_spans(extract(input_df, use_arrow=use_arrow, **extract_kw))
-    elif output_mode in ("nested", "nested-colspans"):
-        new_rows = extract_nested(
-            input_df,
-            with_colspans=(output_mode == "nested-colspans"),
-            **extract_kw,
-        )
-    else:
-        raise ValueError(f"unknown output_mode: {output_mode}")
+        new_rows = data_spans(new_rows)
     stage_root = f"{output_path}.staging/upsert_rows"
     stage_path = jvm.org.apache.hadoop.fs.Path(stage_root)
     (

@@ -37,6 +37,9 @@ EXTRACTED_SPANS_DDL = (
     "doc_id string, seq int, kind string, text string, media_ref string, offset int"
 )
 
+# nested output: one result-JSON row per document (FIXTURES.md §4)
+NESTED_RESULT_DDL = "doc_id string, result string"
+
 # checkpoint table: per-bucket lineage + metrics (replaces the reference's
 # Postgres jobs/job_detail store, task_manager.py:122-168)
 CHECKPOINT_SCHEMA = T.StructType(

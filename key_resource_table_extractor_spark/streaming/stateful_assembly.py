@@ -16,6 +16,7 @@ explicit document-complete markers.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -23,7 +24,8 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
-from ..extractor.pipeline import OUTPUT_COLUMNS, extract_pandas_batch
+from .. import spec
+from ..extractor.pipeline import OUTPUT_COLUMNS, extract_columnar
 
 END_KIND = "end"
 
@@ -77,17 +79,16 @@ def _assemble(key, pdfs, state: GroupState):
         state.update((kinds, texts, refs, offsets))
         return iter(())
     state.remove()
-    spans = [
-        {"kind": k, "text": t, "media_ref": m, "offset": o}
-        for k, t, m, o in sorted(
-            zip(kinds, texts, refs, offsets), key=lambda x: x[3]
-        )
-    ]
-    out = extract_pandas_batch(
-        pd.DataFrame({"doc_id": [doc_id], "spans": [spans]})
+    out = extract_columnar(
+        np.array([doc_id], dtype=object),
+        np.zeros(len(kinds), dtype=np.int64),
+        np.array(kinds, dtype=object),
+        np.array(texts, dtype=object),
+        np.array(refs, dtype=object),
+        np.array(offsets, dtype=np.int64),
     )
-    out = out[out["kind"].isin(["text", "media"])][OUTPUT_COLUMNS]
-    return iter([out])
+    out = pd.DataFrame({c: out[c] for c in OUTPUT_COLUMNS})
+    return iter([out[out["kind"].isin([spec.KIND_TEXT, spec.KIND_MEDIA])]])
 
 
 def run_stateful_assembly(

@@ -221,7 +221,8 @@ scan + shuffle + extract. Run: `python scripts/scaling_bench.py`.
 ## Single-core kernel throughput
 
 ~2,000 docs/s/core for the pure extraction kernel
-(`extract_pandas_batch`, measured in-process on the seed-42 corpus) —
+(`make_map_in_arrow_fn`, the one mapInArrow batch function every
+extraction runs, measured in-process on the seed-42 corpus) —
 the Spark job at 32 cores reaches ~19k docs/s end-to-end including scan,
 shuffle and Arrow boundaries.
 """)

@@ -19,3 +19,24 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def extract_batch(pdf, output_mode: str = "spans", **options):
+    """Run the production extraction entry (``make_map_in_arrow_fn``) in
+    process over a ``(doc_id, spans)`` pandas frame whose spans are lists
+    of span dicts; returns the output rows as a pandas frame."""
+    import pyarrow as pa
+
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        make_map_in_arrow_fn,
+    )
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": list(pdf["doc_id"]), "spans": list(pdf["spans"])},
+        schema=pa.schema([("doc_id", pa.string()),
+                          ("spans", pa.list_(span))]),
+    )
+    out = make_map_in_arrow_fn(output_mode, **options)([batch])
+    return pa.Table.from_batches(list(out)).to_pandas()

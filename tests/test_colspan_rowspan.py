@@ -21,13 +21,11 @@ from key_resource_table_extractor_spark.eval import (
     grits_content,
     grits_factored,
 )
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_nested_batch,
-)
 from key_resource_table_extractor_spark.sources import (
     gold_table_grid,
     gold_table_to_spans,
 )
+from tests.conftest import extract_batch
 
 
 def _cell(content, colspan=1, rowspan=None):
@@ -83,8 +81,8 @@ def _nested_rows(nested):
 def test_midrow_colspan_round_trip():
     """Gold row [("",1), (content, colspan=2)] survives render → extract →
     with_colspans output with the SAME cell shape."""
-    nested = extract_nested_batch(
-        _pdf_of(MIDSPAN_TBL), merge_rows=False, with_colspans=True
+    nested = extract_batch(
+        _pdf_of(MIDSPAN_TBL), "nested-colspans", merge_rows=False
     )
     rows = _nested_rows(nested)
     # drop the prepended title row, compare the data rows cell-for-cell
@@ -105,7 +103,7 @@ def test_rowspan_round_trip():
     covered position, and the extracted content grid matches it exactly."""
     gold_grid = gold_table_grid(ROWSPAN_TBL)
     assert gold_grid[2] == ["Primer rev AAGCTT", "IDT", ""]  # filler carried
-    nested = extract_nested_batch(_pdf_of(ROWSPAN_TBL), merge_rows=False)
+    nested = extract_batch(_pdf_of(ROWSPAN_TBL), "nested", merge_rows=False)
     rows = _nested_rows(nested)
     assert rows[1:] == gold_grid  # title row aside, exact grid round-trip
     # the dict-shape grid keeps extents aligned via a filler dict cell
@@ -131,7 +129,7 @@ def test_folded_continuation_recovers_colspan():
         ])],
         columns=["doc_id", "spans"],
     )
-    rows = _nested_rows(extract_nested_batch(pdf, with_colspans=True))
+    rows = _nested_rows(extract_batch(pdf, "nested-colspans"))
     spanning = [
         c for r in rows for c in r
         if c["colspan"] == 2 and "continuation flowing" in c["content"]
@@ -159,8 +157,7 @@ def test_unevidenced_span_stays_colspan_one():
         ],
     }
     rows = _nested_rows(
-        extract_nested_batch(_pdf_of(tbl), merge_rows=False,
-                             with_colspans=True)
+        extract_batch(_pdf_of(tbl), "nested-colspans", merge_rows=False)
     )
     bar = next(r for r in rows if r[0]["content"].startswith("Bar"))
     assert [(c["content"], c["colspan"]) for c in bar] == [
@@ -205,8 +202,8 @@ def test_anchor_rowspan_gold_round_trip():
     gold-JSON cell shape exactly — carrier cell bears rowspan=2, covered
     row OMITS the covered position (HTML occupancy), and the rowspan-aware
     GriTS grids score full identity."""
-    nested = extract_nested_batch(
-        _pdf_of(ROWSPAN_COL0_TBL), row_model="anchor", with_colspans=True
+    nested = extract_batch(
+        _pdf_of(ROWSPAN_COL0_TBL), "nested-colspans", row_model="anchor"
     )
     rows = _nested_rows(nested)
     pred = rows[1:]  # drop the prepended title row
@@ -238,8 +235,8 @@ def test_anchor_rowspan_run_of_three():
         ],
     }
     pred = _nested_rows(
-        extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                             with_colspans=True, midcol_rowspans=True)
+        extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor",
+                      midcol_rowspans=True)
     )[1:]
     assert pred[1][0]["rowspan"] == 3
     assert len(pred[2]) == 2 and len(pred[3]) == 2
@@ -264,7 +261,7 @@ def test_anchor_rowspan_skips_wrap_fragments():
         columns=["doc_id", "spans"],
     )
     rows = _nested_rows(
-        extract_nested_batch(pdf, row_model="anchor", with_colspans=True)
+        extract_batch(pdf, "nested-colspans", row_model="anchor")
     )
     assert not any("rowspan" in c for r in rows for c in r)
     foo = next(r for r in rows if r[0]["content"].startswith("Anti-Foo"))
@@ -298,8 +295,8 @@ def test_mid_column_rowspan_gold_round_trip():
         grits_topology,
     )
 
-    nested = extract_nested_batch(
-        _pdf_of(ROWSPAN_MID_TBL), row_model="anchor", with_colspans=True,
+    nested = extract_batch(
+        _pdf_of(ROWSPAN_MID_TBL), "nested-colspans", row_model="anchor",
         midcol_rowspans=True,
     )
     pred = _nested_rows(nested)[1:]  # drop the prepended title row
@@ -337,8 +334,8 @@ def test_mid_column_rowspan_prefix_of_run():
         ],
     }
     pred = _nested_rows(
-        extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                             with_colspans=True, midcol_rowspans=True)
+        extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor",
+                      midcol_rowspans=True)
     )[1:]
     assert pred[1][0]["rowspan"] == 3      # anchor spans the whole run
     assert pred[1][2]["rowspan"] == 2      # mid column spans its prefix
@@ -374,8 +371,8 @@ def test_non_anchor_rowspan_still_flat():
     has no fold evidence — emitted flat, scored fairly by the
     rowspan-aware grids (unchanged documented deviation)."""
     rows = _nested_rows(
-        extract_nested_batch(_pdf_of(ROWSPAN_TBL), row_model="anchor",
-                             with_colspans=True)
+        extract_batch(_pdf_of(ROWSPAN_TBL), "nested-colspans",
+                      row_model="anchor")
     )
     assert not any("rowspan" in c for r in rows for c in r)
 
@@ -385,7 +382,7 @@ def test_votes_model_emits_no_rowspans():
     groups are single wrapped rows, so the default nested-colspans path
     stays rowspan-free on the same input."""
     rows = _nested_rows(
-        extract_nested_batch(_pdf_of(ROWSPAN_COL0_TBL), with_colspans=True)
+        extract_batch(_pdf_of(ROWSPAN_COL0_TBL), "nested-colspans")
     )
     assert not any("rowspan" in c for r in rows for c in r)
 
@@ -424,8 +421,7 @@ def test_rowspan_property_round_trip():
             r_i += span
         tbl = {"name": f"prop{trial}", "rows": rows}
         pred = _nested_rows(
-            extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                                 with_colspans=True)
+            extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor")
         )[1:]
         c = grits_content(pred, rows)
         t = grits_factored(pred, rows)
@@ -476,8 +472,8 @@ def test_mid_rowspan_property_round_trip():
             r_i += span
         tbl = {"name": f"mprop{trial}", "rows": rows}
         pred = _nested_rows(
-            extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                                 with_colspans=True, midcol_rowspans=True)
+            extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor",
+                          midcol_rowspans=True)
         )[1:]
         assert grits_content(pred, rows) == (1.0, 1.0, 1.0), (trial, pred)
         assert grits_factored(pred, rows) == (1.0, 1.0, 1.0, 1.0), trial
@@ -523,7 +519,7 @@ def test_rowspan_never_carried_by_header_or_divider():
         columns=["doc_id", "spans"],
     )
     rows = _nested_rows(
-        extract_nested_batch(pdf, row_model="anchor", with_colspans=True)
+        extract_batch(pdf, "nested-colspans", row_model="anchor")
     )
     assert not any("rowspan" in c for r in rows for c in r), rows
     # the anchor-less full row still stands alone (not folded)
@@ -560,8 +556,7 @@ def test_sparse_column_false_positive_is_gated():
     gold = tbl["rows"]
     # default: flat mid columns — exact round-trip, full identity
     pred = _nested_rows(
-        extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                             with_colspans=True)
+        extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor")
     )[1:]
     assert pred[1][0].get("rowspan") == 2       # col-0 recovery still on
     assert not any(
@@ -573,8 +568,8 @@ def test_sparse_column_false_positive_is_gated():
     # opt-in: the empty NOTE cell under the covered run is claimed as a
     # spurious rowspan=2 — the false-positive direction, score degraded
     pred_on = _nested_rows(
-        extract_nested_batch(_pdf_of(tbl), row_model="anchor",
-                             with_colspans=True, midcol_rowspans=True)
+        extract_batch(_pdf_of(tbl), "nested-colspans", row_model="anchor",
+                      midcol_rowspans=True)
     )[1:]
     assert pred_on[1][2].get("rowspan") == 2    # the spurious claim
     f1c = grits_content(pred_on, gold)[0]

@@ -14,8 +14,8 @@ from key_resource_table_extractor_spark import oracle, spec
 from key_resource_table_extractor_spark.extractor.pipeline import (
     _assign_columns,
     _column_union,
-    extract_pandas_batch,
 )
+from tests.conftest import extract_batch
 
 
 def spans(*lines, media_at=()):
@@ -41,7 +41,7 @@ def run_batch(span_list, doc_id="d0"):
             ],
         }
     )
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     out = out[out["kind"].isin(["text", "media"])]
     return list(zip(out["kind"], out["text"], out["media_ref"], out["offset"]))
 
@@ -259,7 +259,7 @@ def test_error_isolation_bad_doc_does_not_fail_batch():
             ],
         }
     )
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     assert (out[out.doc_id == "ok"]["kind"] == "text").any()
     # stats row present and consistent
     stats = out[out["kind"] == "stats"]

@@ -12,14 +12,12 @@ import pandas as pd
 import pytest
 
 from key_resource_table_extractor_spark import oracle
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_pandas_batch,
-)
 from key_resource_table_extractor_spark.sources import (
     gold_table_to_spans,
     load_gold_tables,
 )
 from key_resource_table_extractor_spark.sources.gold_json import norm_cell
+from tests.conftest import extract_batch
 
 GOLD_DIR = (
     "/root/reference/data/table_content_extract/"
@@ -52,7 +50,7 @@ def test_gold_roundtrip_content_and_equality(gold):
             )
         )
     pdf = pd.DataFrame(rows, columns=["doc_id", "spans"])
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     out = out[out["kind"].isin(["text", "media"])]
 
     for tbl in gold:

@@ -14,14 +14,12 @@ from key_resource_table_extractor_spark.eval import (
     grits_content,
     grits_topology,
 )
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_nested_batch,
-)
 from key_resource_table_extractor_spark.sources import (
     gold_table_grid,
     gold_table_to_spans,
     load_gold_tables,
 )
+from tests.conftest import extract_batch
 
 GOLD_DIR = (
     "/root/reference/data/table_content_extract/"
@@ -144,7 +142,9 @@ def test_pipeline_scores_high_on_gold_corpus():
                 for (k, t, m, o) in spans
             ])
         )
-    nested = extract_nested_batch(pd.DataFrame(rows, columns=["doc_id", "spans"]))
+    nested = extract_batch(
+        pd.DataFrame(rows, columns=["doc_id", "spans"]), "nested"
+    )
     by_doc = dict(zip(nested["doc_id"], nested["result"]))
     f1s = []
     top_f1s = []
@@ -199,7 +199,7 @@ def test_colspan_round_trip_on_gold_corpus():
         ])],
         columns=["doc_id", "spans"],
     )
-    nested = extract_nested_batch(pdf, merge_rows=False, with_colspans=True)
+    nested = extract_batch(pdf, "nested-colspans", merge_rows=False)
     res = json.loads(nested["result"].iloc[0])
     pred_rows = [
         r

@@ -20,6 +20,7 @@ import pandas as pd
 import pytest
 
 from key_resource_table_extractor_spark.eval import grits_factored
+from tests.conftest import extract_batch
 
 
 # ---------------------------------------------------------------------------
@@ -156,9 +157,6 @@ def test_factored_parity_gold_corpus():
     set, plus identity)."""
     import os
 
-    from key_resource_table_extractor_spark.extractor.pipeline import (
-        extract_nested_batch,
-    )
     from key_resource_table_extractor_spark.sources import (
         gold_table_grid,
         gold_table_to_spans,
@@ -185,7 +183,7 @@ def test_factored_parity_gold_corpus():
         )
         import json
 
-        nested = extract_nested_batch(pdf)
+        nested = extract_batch(pdf, "nested")
         res = json.loads(nested["result"].iloc[0])
         pred = [
             row

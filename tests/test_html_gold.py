@@ -9,15 +9,13 @@ import os
 import pandas as pd
 import pytest
 
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_pandas_batch,
-)
 from key_resource_table_extractor_spark.sources import (
     gold_table_to_html,
     gold_table_to_spans,
     html_to_gold_tables,
     load_gold_tables,
 )
+from tests.conftest import extract_batch
 
 GOLD_DIR = (
     "/root/reference/data/table_content_extract/"
@@ -104,5 +102,5 @@ def test_html_ingest_feeds_extraction():
         ])],
         columns=["doc_id", "spans"],
     )
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     assert (out["kind"] == "text").sum() > 0

@@ -3,11 +3,14 @@ batches — the batch must not fail and well-formed docs must be unaffected."""
 
 from __future__ import annotations
 
-import pandas as pd
+import json
+import warnings
 
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_pandas_batch,
-)
+import pandas as pd
+import pytest
+
+from tests.conftest import extract_batch
+
 
 GOOD = [
     {"kind": "text", "text": "Key Resources Table", "media_ref": "", "offset": 0},
@@ -16,6 +19,11 @@ GOOD = [
     {"kind": "text", "text": "Anti-Foo              Abcam    RRID:AB_1",
      "media_ref": "", "offset": 2},
 ]
+
+
+def _table_rows(result: str) -> list[list[str]]:
+    pages = json.loads(result)["result"]["pages"]
+    return [r for p in pages for t in p["tables"] for r in t["rows"]]
 
 
 def test_null_spans_and_fields_do_not_poison_batch():
@@ -33,24 +41,88 @@ def test_null_spans_and_fields_do_not_poison_batch():
             ],
         }
     )
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     good = out[(out.doc_id == "good") & (out.kind == "text")]
     assert len(good) > 0
     assert (out["kind"] != "error").all()  # nothing crashed per-doc either
     # stats row counts all four docs
-    import json
-
     stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
     assert stats["n_docs"] == 4
     assert stats["n_errors"] == 0
+    nested = extract_batch(pdf, "nested")
+    assert list(nested["doc_id"]) == ["good"]
+    cells = [c for r in _table_rows(nested.iloc[0]["result"]) for c in r]
+    assert cells == list(good["text"])
+
+
+def test_null_offset_is_a_per_doc_error():
+    """A text or media span with a null offset cannot be ordered: its doc
+    yields exactly one error row (flat) or no row (nested), the other
+    docs — including those after it in the batch — come out as if it were
+    absent, and nothing warns."""
+    for bad_kind in ("text", "media"):
+        bad = [dict(s) for s in GOOD] + [
+            {"kind": bad_kind, "text": "x", "media_ref": "m", "offset": 9}
+        ]
+        bad[2 if bad_kind == "text" else -1]["offset"] = None
+        pdf = pd.DataFrame({"doc_id": ["a", "bad", "b"],
+                            "spans": [GOOD, bad, GOOD]})
+        ref = pd.DataFrame({"doc_id": ["a", "b"], "spans": [GOOD, GOOD]})
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = extract_batch(pdf)
+            nested = {m: extract_batch(pdf, m)
+                      for m in ("nested", "nested-colspans")}
+        rows = out[out.doc_id == "bad"]
+        assert list(rows["kind"]) == ["error"], rows
+        assert "null offset" in rows.iloc[0]["text"]
+        data = out[out.kind.isin(["text", "media"])].reset_index(drop=True)
+        exp = extract_batch(ref)
+        exp = exp[exp.kind.isin(["text", "media"])].reset_index(drop=True)
+        assert data.equals(exp)
+        for mode, got in nested.items():
+            assert got.equals(extract_batch(ref, mode)), mode
+        stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
+        assert stats["n_errors"] == 1
+
+
+def test_null_kind_span_is_dropped():
+    """A span whose kind is null is ignored, even with a null offset."""
+    spans = GOOD + [
+        {"kind": None, "text": "stray", "media_ref": None, "offset": None}
+    ]
+    pdf = pd.DataFrame({"doc_id": ["d"], "spans": [spans]})
+    ref = pd.DataFrame({"doc_id": ["d"], "spans": [GOOD]})
+    out, exp = extract_batch(pdf), extract_batch(ref)
+    assert out[out.doc_id == "d"].equals(exp[exp.doc_id == "d"])
+    assert extract_batch(pdf, "nested").equals(extract_batch(ref, "nested"))
 
 
 def test_empty_batch():
-    out = extract_pandas_batch(pd.DataFrame({"doc_id": [], "spans": []}))
-    assert list(out.columns) == [
-        "doc_id", "seq", "kind", "text", "media_ref", "offset",
-    ]
-    assert len(out) == 0
+    empty = pd.DataFrame({"doc_id": [], "spans": []})
+    for mode, columns in (
+        ("spans", ["doc_id", "seq", "kind", "text", "media_ref", "offset"]),
+        ("nested", ["doc_id", "result"]),
+    ):
+        out = extract_batch(empty, mode)
+        assert list(out.columns) == columns
+        assert len(out) == 0
+
+
+def test_unknown_output_mode_is_rejected_before_any_write(spark, tmp_path):
+    """A mistyped mode (e.g. nested_colspans for nested-colspans) must
+    fail before the bucket-count marker or any bucket is written, not
+    silently fall back to plain nested output."""
+    from key_resource_table_extractor_spark import job
+
+    inp = job.synthesize_spans(spark, 4, partitions=1)
+    out_dir = tmp_path / "out"
+    with pytest.raises(ValueError, match="nested_colspans"):
+        job.run_extraction(
+            spark, inp, str(out_dir), str(tmp_path / "cp"),
+            n_buckets=2, output_mode="nested_colspans",
+        )
+    assert not out_dir.exists()
 
 
 def test_sliced_list_array_in_arrow_path():

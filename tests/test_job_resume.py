@@ -124,13 +124,6 @@ def test_mega_doc_skew_present_and_handled(spark):
     assert out.count() > 0
 
 
-def test_grouped_extraction_equals_map_path(spark):
-    inp = job.synthesize_spans(spark, 120, partitions=3)
-    a = sorted_pdf(job.extract_grouped(inp))
-    b = sorted_pdf(job.data_spans(job.extract(inp)))
-    assert a.equals(b)
-
-
 def test_read_output_prunes_bucket_partitions(spark, tmp_path):
     from key_resource_table_extractor_spark.plans.audit import explain_str
 

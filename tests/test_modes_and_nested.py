@@ -8,10 +8,7 @@ import json
 import pandas as pd
 
 from key_resource_table_extractor_spark import oracle
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_nested_batch,
-    extract_pandas_batch,
-)
+from tests.conftest import extract_batch
 
 DOC = [
     ("text", "Key Resources Table", "", 0),
@@ -53,7 +50,7 @@ def test_gap_min_spaces_matches_oracle_and_changes_segmentation():
         ("text", "Bar protein             Sigma       RRID:SCR_004422", "", 3),
     ]
     for g in (1, 2, 3, 4):
-        out = extract_pandas_batch(pdf_of(doc), gap_min_spaces=g)
+        out = extract_batch(pdf_of(doc), gap_min_spaces=g)
         exp = [
             (k, t, o)
             for (_s, k, t, _m, o) in oracle.extract_document(
@@ -61,10 +58,10 @@ def test_gap_min_spaces_matches_oracle_and_changes_segmentation():
             )
         ]
         assert flat(out) == exp, g
-    default_texts = [t for _k, t, _o in flat(extract_pandas_batch(pdf_of(doc)))]
+    default_texts = [t for _k, t, _o in flat(extract_batch(pdf_of(doc)))]
     wide_texts = [
         t for _k, t, _o in flat(
-            extract_pandas_batch(pdf_of(doc), gap_min_spaces=3)
+            extract_batch(pdf_of(doc), gap_min_spaces=3)
         )
     ]
     # default: the 2-space run splits the cell, then max-overlap assignment
@@ -90,7 +87,7 @@ def test_anchor_row_model_matches_oracle_and_differs_from_votes():
     into the row above even when the vote model would not, and both
     implementations agree in every mode."""
     for mode in ("anchor", "votes", "none"):
-        out = extract_pandas_batch(pdf_of(ANCHOR_DOC), row_model=mode)
+        out = extract_batch(pdf_of(ANCHOR_DOC), row_model=mode)
         exp = [
             (k, t, o)
             for (_s, k, t, _m, o) in oracle.extract_document(
@@ -99,11 +96,11 @@ def test_anchor_row_model_matches_oracle_and_differs_from_votes():
         ]
         assert flat(out) == exp, mode
     anchor_texts = [
-        t for _k, t, _o in flat(extract_pandas_batch(pdf_of(ANCHOR_DOC),
+        t for _k, t, _o in flat(extract_batch(pdf_of(ANCHOR_DOC),
                                                      row_model="anchor"))
     ]
     votes_texts = [
-        t for _k, t, _o in flat(extract_pandas_batch(pdf_of(ANCHOR_DOC),
+        t for _k, t, _o in flat(extract_batch(pdf_of(ANCHOR_DOC),
                                                      row_model="votes"))
     ]
     assert "Abcam Lot 7" in anchor_texts  # folded by the anchor model
@@ -126,7 +123,7 @@ def test_excepted_lines_and_pages_match_oracle():
         dict(excepted_lines=[3], excepted_pages=[0]),
     ]
     for kw in cases:
-        out = extract_pandas_batch(pdf_of(DOC), **kw)
+        out = extract_batch(pdf_of(DOC), **kw)
         got = flat(out)
         exp = [
             (k, t, o)
@@ -136,16 +133,16 @@ def test_excepted_lines_and_pages_match_oracle():
     # semantics: dropping title+header keeps the region alive (RRID rows
     # still make it relevant) — parity covered above; excepting ALL lines
     # leaves nothing to extract
-    assert len(flat(extract_pandas_batch(pdf_of(DOC),
+    assert len(flat(extract_batch(pdf_of(DOC),
                                          excepted_lines=list(range(5))))) == 0
     # and excepting all pages yields nothing while baseline is non-empty
-    assert len(flat(extract_pandas_batch(pdf_of(DOC)))) > 0
-    assert len(flat(extract_pandas_batch(pdf_of(DOC), excepted_pages=[0, 1, 2]))) == 0
+    assert len(flat(extract_batch(pdf_of(DOC)))) > 0
+    assert len(flat(extract_batch(pdf_of(DOC), excepted_pages=[0, 1, 2]))) == 0
 
 
 def test_merge_flag_changes_output_and_matches_oracle():
-    merged = extract_pandas_batch(pdf_of(DOC), merge_rows=True)
-    raw = extract_pandas_batch(pdf_of(DOC), merge_rows=False)
+    merged = extract_batch(pdf_of(DOC), merge_rows=True)
+    raw = extract_batch(pdf_of(DOC), merge_rows=False)
     m_texts = [t for _k, t, _o in flat(merged)]
     r_texts = [t for _k, t, _o in flat(raw)]
     assert "Abcam continued text" in m_texts  # merged fold
@@ -161,7 +158,7 @@ def test_merge_flag_changes_output_and_matches_oracle():
 
 
 def test_nested_result_json_shape():
-    out = extract_nested_batch(pdf_of(DOC))
+    out = extract_batch(pdf_of(DOC), "nested")
     assert list(out.columns) == ["doc_id", "result"]
     res = json.loads(out.iloc[0]["result"])
     assert res["paper_id"] == "d0"
@@ -172,7 +169,7 @@ def test_nested_result_json_shape():
     # grid is dense: every row has the same width
     assert len({len(r) for r in rows}) == 1
     # nested cells == flat text spans, in traversal order
-    flat_out = extract_pandas_batch(pdf_of(DOC))
+    flat_out = extract_batch(pdf_of(DOC))
     flat_cells = [
         t for t, k in zip(flat_out["text"], flat_out["kind"]) if k == "text"
     ]

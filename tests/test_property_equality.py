@@ -8,9 +8,7 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from key_resource_table_extractor_spark import oracle
-from key_resource_table_extractor_spark.extractor.pipeline import (
-    extract_pandas_batch,
-)
+from tests.conftest import extract_batch
 
 # text lines built from a small alphabet with gap runs, RRIDs, headers,
 # indentation — the inputs that drive every branch of the cascade
@@ -82,7 +80,7 @@ def test_batch_equals_oracle_under_option_matrix(docs, kw):
             (k, t, m, o)
             for (_s, k, t, m, o) in oracle.extract_document(spans, **kw)
         ]
-    out = extract_pandas_batch(
+    out = extract_batch(
         pd.DataFrame(rows, columns=["doc_id", "spans"]), **kw
     )
     out = out[out["kind"].isin(["text", "media"])]
@@ -113,7 +111,7 @@ def test_batch_equals_oracle_on_random_docs(docs):
         )
         expected[doc_id] = [tuple(r) for r in oracle.extract_document(spans)]
     pdf = pd.DataFrame(rows, columns=["doc_id", "spans"])
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     out = out[out["kind"].isin(["text", "media"])]
     for doc_id, exp in expected.items():
         got = out[out.doc_id == doc_id].sort_values("seq")

@@ -1,17 +1,17 @@
 """Span-sequence equality: Spark pipeline vs pure-Python oracle
 (SURVEY.md §5 item 1 — the correctness contract of BASELINE.json).
 
-The Spark job (mapInArrow and mapInPandas paths) must produce, per document,
+The Spark job (its one mapInArrow entry) must produce, per document,
 exactly the oracle's ordered (kind, text, media_ref) sequence.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from key_resource_table_extractor_spark import oracle, synth
 from key_resource_table_extractor_spark import job
+from tests.conftest import extract_batch
 
 N_DOCS = 300
 
@@ -29,17 +29,16 @@ def oracle_frame(n_docs):
     )
 
 
-def spark_frame(spark, n_docs, use_arrow):
+def spark_frame(spark, n_docs):
     df = job.synthesize_spans(spark, n_docs, partitions=5)
-    out = job.data_spans(job.extract(df, use_arrow=use_arrow))
+    out = job.data_spans(job.extract(df))
     pdf = out.toPandas()
     return pdf.sort_values(["doc_id", "seq"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_span_sequence_equality(spark, use_arrow):
+def test_span_sequence_equality(spark):
     exp = oracle_frame(N_DOCS).sort_values(["doc_id", "seq"]).reset_index(drop=True)
-    got = spark_frame(spark, N_DOCS, use_arrow)
+    got = spark_frame(spark, N_DOCS)
     assert len(got) == len(exp), (len(got), len(exp))
     for col in ["doc_id", "seq", "kind", "text", "media_ref", "offset"]:
         mism = (got[col].astype(str) != exp[col].astype(str))
@@ -84,10 +83,6 @@ def test_duplicate_offset_media_equality():
     """Offsets are NOT required to be unique (DOCUMENT_SPANS_SCHEMA): two
     media spans sharing an offset must be deduped by span index, not offset
     value, in BOTH implementations (each emitted exactly once)."""
-    from key_resource_table_extractor_spark.extractor.pipeline import (
-        extract_pandas_batch,
-    )
-
     doc = [
         ("media", "", "img_a", 2),
         ("media", "", "img_b", 2),  # same offset, distinct span
@@ -110,7 +105,7 @@ def test_duplicate_offset_media_equality():
             ]],
         }
     )
-    out = extract_pandas_batch(pdf)
+    out = extract_batch(pdf)
     out = out[out["kind"].isin(["text", "media"])]
     got = list(
         zip(out["kind"], out["text"], out["media_ref"], out["offset"].astype(int))

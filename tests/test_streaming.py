@@ -27,7 +27,7 @@ def test_stream_equals_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     exp = (
-        job.data_spans(job.extract(corpus, use_arrow=False))
+        job.data_spans(job.extract(corpus))
         .orderBy("doc_id", "seq")
         .toPandas()
         .reset_index(drop=True)
