@@ -8,8 +8,9 @@ Replaces the reference's FastAPI + multiprocessing.Queue + Postgres job store
 - resumability = a checkpoint table of completed buckets; a re-run skips
   completed buckets entirely (reference analogue: skip-if-output-exists,
   scripts/batch_pdf_table_extractor.py:32-34 → SURVEY §2 O6 left anti join);
-- per-partition lineage/metrics = every Arrow batch emits one ``kind='stats'``
-  row (JSON metrics) which the job aggregates into the checkpoint row.
+- per-bucket lineage/metrics = ``observe()`` on each bucket's input and
+  output during its one write pass, plus the table/error counts of the
+  one ``kind='stats'`` row every flat-mode Arrow batch emits.
 
 At cluster scale the same code runs unchanged via ``spark-submit --py-files``:
 buckets are deterministic hash ranges of ``doc_id``, each bucket an
@@ -19,6 +20,7 @@ granularity without reprocessing completed doc ranges.
 
 from __future__ import annotations
 
+import datetime
 import re
 import time
 import uuid
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import synth
 from .extractor.pipeline import make_extract_fn, make_map_in_arrow_fn
 from .schemas import (
+    CHECKPOINT_SCHEMA,
     DOCUMENT_SPANS_SCHEMA,
     EXTRACTED_SPANS_DDL,
     NESTED_RESULT_DDL,
@@ -278,14 +281,17 @@ def run_extraction(
     "nested" / "nested-colspans" write the S7 result-JSON table (one
     (doc_id, result) row per doc) under the SAME bucket checkpoint
     discipline — a 10^9-doc nested export is resumable exactly like the
-    flat one. Nested buckets carry no per-batch stats rows, so their
-    checkpoint rows record doc counts and doc_id bounds with zeroed
-    span/table/error tallies. Any other mode raises ``ValueError`` before
-    the bucket-count marker or any bucket is written.
+    flat one. Any other mode raises ``ValueError`` before the
+    bucket-count marker or any bucket is written.
 
-    Per-bucket metrics (the per-batch ``kind='stats'`` rows plus the output
-    row count) are collected with ``df.observe()`` DURING the single write
-    pass — no post-write re-read of the bucket directory.
+    Per-bucket checkpoint metrics are collected with ``df.observe()``
+    DURING the single write pass — no post-write re-read of the bucket
+    directory. In every mode ``n_docs``, ``n_spans_in`` and the doc_id
+    bounds are observed on the bucket's input, so they count every doc
+    processed, including docs that yield no output row; ``n_spans_out``
+    is observed on the output. ``n_tables``/``n_errors`` come from the
+    per-batch ``kind='stats'`` rows, which only the flat mode emits, so
+    nested checkpoint rows leave them at 0.
 
     ``buckets`` restricts the run to a subset of bucket ids: at large K an
     orchestrator can shard buckets across concurrent driver processes
@@ -331,55 +337,53 @@ def run_extraction(
     is_stats = F.col("kind") == STATS_KIND
 
     def _stat(field):
-        return F.when(is_stats, F.get_json_object("text", f"$.{field}"))
+        return F.sum(
+            F.when(is_stats, F.get_json_object("text", f"$.{field}"))
+            .cast("long")
+        ).alias(field)
+
+    if output_mode == "spans":
+        out_metrics = [
+            F.sum(F.col("kind").isin(*DATA_KINDS).cast("long"))
+            .alias("n_spans_out"),
+            _stat("n_tables"),
+            _stat("n_errors"),
+        ]
+    else:  # one (doc_id, result) row per doc with a table
+        out_metrics = [F.count(F.lit(1)).alias("n_spans_out")]
 
     for b in todo:
         if b in done:
             continue
         t0 = time.time()
+        tag = f"{run_id}_{b}_{uuid.uuid4().hex[:6]}"
+        obs_in = Observation(f"krt_in_{tag}")
+        obs_out = Observation(f"krt_out_{tag}")
         bdf = bucketed.filter(F.col("__bucket") == b).drop("__bucket")
-        bdf = salted_repartition(bdf, partitions_per_bucket, salt)
-        obs = Observation(f"krt_{run_id}_{b}_{uuid.uuid4().hex[:6]}")
-        out = extract_bucket(bdf)
-        if output_mode == "spans":
-            out = out.observe(
-                obs,
-                F.sum(_stat("n_docs").cast("long")).alias("n_docs"),
-                F.sum(_stat("n_spans_in").cast("long")).alias("n_spans_in"),
-                F.sum(_stat("n_tables").cast("long")).alias("n_tables"),
-                F.sum(_stat("n_errors").cast("long")).alias("n_errors"),
-                F.min(_stat("doc_id_min")).alias("doc_id_min"),
-                F.max(_stat("doc_id_max")).alias("doc_id_max"),
-                F.sum(
-                    F.when(F.col("kind").isin(*DATA_KINDS), 1).otherwise(0)
-                ).alias("n_spans_out"),
-            )
-        else:
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.min("doc_id").alias("doc_id_min"),
-                F.max("doc_id").alias("doc_id_max"),
-                F.count(F.lit(1)).alias("n_spans_out"),
-            )
+        bdf = salted_repartition(bdf, partitions_per_bucket, salt).observe(
+            obs_in,
+            F.count(F.lit(1)).alias("n_docs"),
+            # a null span list is 0 spans
+            F.sum(F.coalesce(F.array_size("spans"), F.lit(0)))
+            .alias("n_spans_in"),
+            F.min("doc_id").alias("doc_id_min"),
+            F.max("doc_id").alias("doc_id_max"),
+        )
+        out = extract_bucket(bdf).observe(obs_out, *out_metrics)
         bucket_dir = f"{output_path}/bucket={b}"
         out.write.mode("overwrite").parquet(bucket_dir)
-        m = obs.get
-        cp_row = [(
-            run_id, b, m["doc_id_min"], m["doc_id_max"],
-            int(m["n_docs"] or 0), int(m.get("n_spans_in") or 0),
-            int(m["n_spans_out"] or 0), int(m.get("n_tables") or 0),
-            int(m.get("n_errors") or 0),
-            int((time.time() - t0) * 1000), "done",
-        )]
+        m = obs_in.get | obs_out.get
         spark.createDataFrame(
-            cp_row,
-            "run_id string, bucket int, doc_id_min string, doc_id_max string,"
-            " n_docs long, n_spans_in long, n_spans_out long, n_tables long,"
-            " n_errors long, wall_ms long, status string",
-        ).withColumn("ts", F.current_timestamp()).write.mode(
-            "overwrite"
-        ).parquet(
+            [(
+                run_id, b, m["doc_id_min"], m["doc_id_max"],
+                int(m["n_docs"]), int(m["n_spans_in"] or 0),
+                int(m["n_spans_out"] or 0), int(m.get("n_tables") or 0),
+                int(m.get("n_errors") or 0),
+                int((time.time() - t0) * 1000), "done",
+                datetime.datetime.now(),
+            )],
+            CHECKPOINT_SCHEMA,
+        ).write.mode("overwrite").parquet(
             # one subdirectory per checkpoint write: concurrent shard
             # drivers touch disjoint paths (see _read_checkpoint)
             f"{checkpoint_path}/cpw={run_id}_{b}_{uuid.uuid4().hex[:8]}"
@@ -412,59 +416,73 @@ def read_output(
 # must never count — a wrong K silently re-hashes every doc for
 # delete/upsert targeting.
 _BUCKET_DIR_RE = re.compile(r"^bucket=(\d+)$")
+# an interrupted swap's retired copy of a bucket, under the .staging root
+_BACKUP_DIR_RE = re.compile(r"^bucket=(\d+)\.old$")
 
 
-def _parquet_dir_stats(fs, path) -> tuple[int, int]:
-    """(file count, total bytes) of the .parquet files directly under
-    ``path`` — the one counting policy shared by compaction sizing and
-    output_status so the two can't drift."""
-    n, size = 0, 0
-    for f in fs.listStatus(path):
-        if f.getPath().getName().endswith(".parquet"):
-            n += 1
-            size += int(f.getLen())
-    return n, size
+def _fs(spark: SparkSession, output_path: str):
+    """(Hadoop FileSystem holding ``output_path``, the py4j JVM view)."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(output_path)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def _walk_bucket_file_stats(fs, jvm, root_path: str):
-    """(dir-name -> (parquet files, bytes), set of dir names) under
-    ``root_path`` from two bounded FS calls — one ``listStatus`` for the
-    directory set (an empty, fully-deleted bucket dir is legal state and
-    holds no files to walk) plus one recursive ``listFiles`` stream for
-    the per-directory file stats — instead of one ``listStatus`` per
-    bucket (VERDICT r7 item 7: the K=4096 dry-run metadata loops were
-    serial driver RPCs, seconds-to-minutes on an object store)."""
+def _bucket_inventory(fs, jvm, output_path: str):
+    """Where every bucket's data lives now, from filesystem metadata
+    alone: ``({bucket: (path, parquet files, bytes)}, sorted names under
+    the .staging root)``.
+
+    A bucket is its live ``bucket=N`` directory or, when an interrupted
+    swap retired it, its ``.staging/bucket=N.old`` backup; the live
+    directory wins. An empty directory is legal state (a fully-deleted
+    bucket) and appears with zero files. Only ``.parquet`` files directly
+    inside a bucket directory count. Each root costs a bounded number of
+    FS calls — one ``listStatus`` for its directory set plus one
+    recursive ``listFiles`` stream for the file stats — instead of a
+    listing per bucket, which at K=4096 would be thousands of serial
+    driver RPCs (seconds to minutes on an object store)."""
     P = jvm.org.apache.hadoop.fs.Path
-    root = P(root_path)
-    if not fs.exists(root):
-        return {}, set()
-    dirs: set[str] = set()
-    for st in fs.listStatus(root):
-        if st.isDirectory():
-            dirs.add(st.getPath().getName())
-    stats: dict[str, list[int]] = {}
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        fp = st.getPath()
-        if not fp.getName().endswith(".parquet"):
-            continue
-        cur = stats.setdefault(fp.getParent().getName(), [0, 0])
-        cur[0] += 1
-        cur[1] += int(st.getLen())
-    return {k: (v[0], v[1]) for k, v in stats.items()}, dirs
+
+    def walk(base: str, name_re):
+        root = P(base)
+        names, dirs = [], {}
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            names.append(name)
+            m = name_re.match(name)
+            if m and st.isDirectory():
+                dirs[name] = [int(m.group(1)), 0, 0]
+        if dirs:
+            prefix = fs.makeQualified(root).toString()
+            it = fs.listFiles(root, True)
+            while it.hasNext():
+                st = it.next()
+                head, parent, leaf = st.getPath().toString().rsplit("/", 2)
+                if head == prefix and parent in dirs and leaf.endswith(
+                    ".parquet"
+                ):
+                    dirs[parent][1] += 1
+                    dirs[parent][2] += int(st.getLen())
+        return sorted(names), {
+            b: (f"{base}/{name}", n, size)
+            for name, (b, n, size) in dirs.items()
+        }
+
+    if not fs.exists(P(output_path)):
+        raise FileNotFoundError(f"no such output: {output_path}")
+    staging = f"{output_path}.staging"
+    leftovers, backups = (
+        walk(staging, _BACKUP_DIR_RE) if fs.exists(P(staging)) else ([], {})
+    )
+    _, live = walk(output_path, _BUCKET_DIR_RE)
+    return backups | live, leftovers
 
 
-def _bucket_ids(fs, root) -> list[int]:
-    """Bucket ids committed under an output root (exact-name match only)."""
-    if not fs.exists(root):
-        raise FileNotFoundError(f"no such output: {root}")
-    ids = []
-    for f in fs.listStatus(root):
-        m = _BUCKET_DIR_RE.match(f.getPath().getName())
-        if m and f.isDirectory():
-            ids.append(int(m.group(1)))
-    return sorted(ids)
+def _live_buckets(inv: dict, output_path: str) -> dict:
+    """The inventory entries whose data sits in the live directory."""
+    return {
+        b: v for b, v in inv.items() if v[0] == f"{output_path}/bucket={b}"
+    }
 
 
 # Written once by run_extraction; underscore prefix keeps it invisible to
@@ -500,11 +518,13 @@ def _write_bucket_count_marker(
     different K (resuming with a mismatched ``n_buckets`` would place the
     remaining buckets' docs under a different hash than the committed
     ones — silent corruption, so fail loudly instead). For a pre-marker
-    (legacy) output the committed directories are cross-checked before
-    the caller's K becomes authoritative: any directory outside
+    (legacy) output the committed buckets are cross-checked before the
+    caller's K becomes authoritative: any bucket outside
     ``range(n_buckets)`` proves a mismatch. (A legacy PARTIAL output
     whose committed ids all fit inside a smaller wrong K is undetectable
-    — ship the marker with the original run to close that.)
+    — ship the marker with the original run to close that.) The two
+    common cases — no output root yet, or a marker with the same K —
+    list nothing.
 
     ``adopt_k=True`` opts into overwriting the marker of a DATA-FREE
     output (marker present, zero bucket dirs, zero ``.staging``
@@ -515,79 +535,65 @@ def _write_bucket_count_marker(
     first bucket at the old K; silently overwriting its marker would
     interleave mixed-K buckets. The operator asserts "no other driver is
     running" by passing the flag (CLI ``--adopt-k``)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs, jvm = _fs(spark, output_path)
     p = jvm.org.apache.hadoop.fs.Path(f"{output_path}/{_BUCKET_COUNT_MARKER}")
-    fs = p.getFileSystem(conf)
     prev = _read_bucket_count_marker(fs, jvm, output_path)
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
-    if prev is not None:
-        if prev != int(n_buckets):
-            ids = _bucket_ids(fs, root) if fs.exists(root) else []
-            staging_root = jvm.org.apache.hadoop.fs.Path(
-                f"{output_path}.staging"
-            )
-            staged = (
-                sorted(
-                    f.getPath().getName()
-                    for f in fs.listStatus(staging_root)
-                    if f.getPath().getName().startswith("bucket=")
-                )
-                if fs.exists(staging_root)
-                else []
-            )
-            if not ids and not staged and adopt_k:
-                # data-free stub: a run launched with this K died before
-                # its first bucket commit, so nothing constrains the hash
-                # yet — the operator opted in (adopt_k) to correcting it.
-                # An interrupted-swap backup or staged copy under
-                # .staging IS data hashed at the old K, so its presence
-                # blocks adoption above.
-                _put_marker(fs, p, n_buckets)
-                return
-            hint = (
-                "; data-free output — pass adopt_k=True (--adopt-k) to "
-                "correct a mistyped K IF no other driver is running it"
-                if not ids and not staged
-                else ""
-            )
-            raise ValueError(
-                f"{output_path} was written with n_buckets={prev} "
-                f"({len(ids)} bucket(s) committed"
-                + (f", {len(staged)} staging leftover(s)" if staged else "")
-                + f"); refusing to continue it with n_buckets={n_buckets}"
-                + hint
-            )
+    if prev == int(n_buckets):
         return  # unchanged: don't touch the marker's mtime
-    if fs.exists(root):
-        ids = _bucket_ids(fs, root)
-        if ids and ids[-1] + 1 > int(n_buckets):
+    if prev is None and not fs.exists(
+        jvm.org.apache.hadoop.fs.Path(output_path)
+    ):
+        _put_marker(fs, p, n_buckets)
+        return
+    inv, leftovers = _bucket_inventory(fs, jvm, output_path)
+    if prev is None:
+        if inv and max(inv) >= int(n_buckets):
             raise ValueError(
-                f"{output_path} holds bucket={ids[-1]} — written with "
-                f"n_buckets>{ids[-1]}; refusing to continue it with "
+                f"{output_path} holds bucket={max(inv)} — written with "
+                f"n_buckets>{max(inv)}; refusing to continue it with "
                 f"n_buckets={n_buckets}"
             )
-    _put_marker(fs, p, n_buckets)
+        _put_marker(fs, p, n_buckets)
+        return
+    ids = _live_buckets(inv, output_path)
+    # an interrupted-swap backup or staged copy under .staging IS data
+    # hashed at the old K, so its presence blocks adoption too
+    staged = [n for n in leftovers if n.startswith("bucket=")]
+    if not ids and not staged and adopt_k:
+        _put_marker(fs, p, n_buckets)
+        return
+    hint = (
+        "; data-free output — pass adopt_k=True (--adopt-k) to "
+        "correct a mistyped K IF no other driver is running it"
+        if not ids and not staged
+        else ""
+    )
+    raise ValueError(
+        f"{output_path} was written with n_buckets={prev} "
+        f"({len(ids)} bucket(s) committed"
+        + (f", {len(staged)} staging leftover(s)" if staged else "")
+        + f"); refusing to continue it with n_buckets={n_buckets}"
+        + hint
+    )
 
 
-def _writer_bucket_count(fs, jvm, root, output_path: str) -> int:
+def _writer_bucket_count(fs, jvm, output_path: str, inv: dict) -> int:
     """The writer's K, for recomputing pmod(xxhash64(doc_id), K)
     placement. Prefer the marker ``run_extraction`` wrote (survives
     missing/partial bucket directories); fall back to inferring from the
-    committed directories, refusing to guess on a non-contiguous set (a
-    sharded run still in flight, a bucket lost to a crash) rather than
-    silently targeting the wrong buckets."""
+    inventory, refusing to guess on a non-contiguous set (a sharded run
+    still in flight, a bucket lost to a crash) rather than silently
+    targeting the wrong buckets."""
     k = _read_bucket_count_marker(fs, jvm, output_path)
     if k is not None:
         return k
-    ids = _bucket_ids(fs, root)
-    if not ids:
+    if not inv:
         raise FileNotFoundError(f"no bucket directories under {output_path}")
-    k = ids[-1] + 1
-    if ids != list(range(k)):
+    k = max(inv) + 1
+    if len(inv) != k:
         raise ValueError(
             f"bucket directories under {output_path} are not contiguous "
-            f"(found {len(ids)} of 0..{k - 1}); pass n_buckets= explicitly "
+            f"(found {len(inv)} of 0..{k - 1}); pass n_buckets= explicitly "
             "for a partial or sharded output"
         )
     return k
@@ -635,98 +641,69 @@ def _swap_bucket_dir(fs, jvm, output_path: str, bucket: int, staging) -> None:
         fs.delete(backup, True)
 
 
+def _rewrite_buckets(
+    spark, fs, jvm, output_path: str, name: str, buckets: list[int], rows
+) -> int:
+    """Replace each listed bucket's directory with its rows of ``rows()``
+    — the one staged rewrite behind compact, delete and upsert.
+
+    1. ``_recover_bucket`` each listed bucket, so an interrupted swap's
+       backup is live again before anything reads it.
+    2. Build ``rows()`` (a DataFrame with a ``bucket`` column; built only
+       now because a parquet read lists its files when the DataFrame is
+       made) and stage it in ONE write hive-partitioned by ``bucket``
+       under ``.staging/<name>``: the Spark-job count is constant in the
+       number of buckets (K=4096 rewrites in one data job, not ~4096
+       sequential launches).
+    3. Commit each staged directory with the checked ``_swap_bucket_dir``
+       — a metadata-only rename. A bucket that staged no rows swaps in
+       an empty directory (every row removed is legal state), unless it
+       never existed (nothing to remove, nothing to add).
+    4. Delete the stage root, however the rewrite ends.
+
+    Returns the number of buckets swapped. Unlisted buckets are never
+    touched: their files stay byte-identical."""
+    P = jvm.org.apache.hadoop.fs.Path
+    stage_root = f"{output_path}.staging/{name}"
+    swapped = 0
+    try:
+        for b in buckets:
+            _recover_bucket(fs, jvm, output_path, b)
+        rows().write.mode("overwrite").partitionBy("bucket").parquet(
+            stage_root
+        )
+        for b in buckets:
+            staged = P(f"{stage_root}/bucket={b}")
+            if not fs.exists(staged):
+                if not fs.exists(P(f"{output_path}/bucket={b}")):
+                    continue
+                fs.mkdirs(staged)
+            _swap_bucket_dir(fs, jvm, output_path, b, staged)
+            swapped += 1
+    finally:
+        fs.delete(P(stage_root), True)
+    return swapped
+
+
 def output_status(spark: SparkSession, output_path: str) -> dict:
     """Operational summary of a committed output from filesystem metadata
     alone — no Spark jobs, no data reads. Flags the conditions the
     maintenance ops care about: buckets missing vs the writer's K, and
-    interrupted-swap backups awaiting recovery."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
-    fs = root.getFileSystem(conf)
-    ids = _bucket_ids(fs, root)
+    interrupted-swap backups awaiting recovery (a retired bucket counts
+    as missing and shows up among the staging leftovers)."""
+    fs, jvm = _fs(spark, output_path)
+    inv, leftovers = _bucket_inventory(fs, jvm, output_path)
+    live = _live_buckets(inv, output_path)
     k = _read_bucket_count_marker(fs, jvm, output_path)
-    n_files = 0
-    n_bytes = 0
-    for b in ids:
-        p = jvm.org.apache.hadoop.fs.Path(f"{output_path}/bucket={b}")
-        n, size = _parquet_dir_stats(fs, p)
-        n_files += n
-        n_bytes += size
-    staging_root = jvm.org.apache.hadoop.fs.Path(f"{output_path}.staging")
-    pending = []
-    if fs.exists(staging_root):
-        pending = sorted(
-            f.getPath().getName()
-            for f in fs.listStatus(staging_root)
-        )
     return {
         "n_buckets_marker": k,
-        "buckets_present": len(ids),
+        "buckets_present": len(live),
         "buckets_missing": (
-            sorted(set(range(k)) - set(ids)) if k is not None else None
+            sorted(set(range(k)) - set(live)) if k is not None else None
         ),
-        "parquet_files": n_files,
-        "parquet_bytes": n_bytes,
-        "staging_leftovers": pending,
-    }
-
-
-def compact_bucket(
-    spark: SparkSession,
-    output_path: str,
-    bucket: int,
-    target_bytes: int = 256 << 20,
-) -> dict:
-    """Rewrite one committed bucket directory into ~``target_bytes``
-    parquet files (the standard small-files compaction a bucketed,
-    many-executor writer needs at warehouse scale: K buckets × P
-    partitions per run leaves K·P files; downstream scans want
-    128-512 MB objects). The rewrite is idempotent and bucket-local —
-    it can run concurrently with other buckets' compactions and never
-    touches the checkpoint table (compaction is not a lineage event).
-
-    Swap discipline (shared with ``delete_docs``/``upsert_docs``): the
-    rewritten copy is staged under the sibling ``.staging`` root, the
-    live directory is retired to a backup there, the staged copy is
-    renamed in, and only then is the backup dropped — every rename
-    checked, and a crash between retire and commit is healed by the
-    ``_recover_bucket`` restore on the next run."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    bucket_dir = f"{output_path}/bucket={bucket}"
-    path = jvm.org.apache.hadoop.fs.Path(bucket_dir)
-    fs = path.getFileSystem(conf)
-    _recover_bucket(fs, jvm, output_path, bucket)
-    if not fs.exists(path):
-        raise FileNotFoundError(bucket_dir)
-
-    # size from the parquet files themselves — getContentSummary would
-    # also count checksum/marker siblings and overstate the target split
-    n_before, total = _parquet_dir_stats(fs, path)
-    if n_before == 0:
-        # a fully-deleted bucket is a LEGAL empty directory (the batched
-        # delete/upsert swap in bare dirs); nothing to compact, and a
-        # schema-less read would raise UNABLE_TO_INFER_SCHEMA
-        return {
-            "bucket": bucket, "bytes": 0,
-            "files_before": 0, "files_after": 0,
-        }
-    n_files = max(1, -(-total // target_bytes))
-    df = spark.read.parquet(bucket_dir)
-    staging = jvm.org.apache.hadoop.fs.Path(
-        f"{output_path}.staging/bucket={bucket}.compacting"
-    )
-    df.repartition(n_files).write.mode("overwrite").parquet(str(staging))
-    _swap_bucket_dir(fs, jvm, output_path, bucket, staging)
-    # recount post-swap: repartition(n) emits FEWER files than n when the
-    # bucket has fewer rows, so the computed target is not the truth
-    n_after, _ = _parquet_dir_stats(fs, path)
-    return {
-        "bucket": bucket,
-        "bytes": total,
-        "files_before": n_before,
-        "files_after": n_after,
+        "parquet_files": sum(n for _, n, _ in live.values()),
+        "parquet_bytes": sum(size for _, _, size in live.values()),
+        "staging_leftovers": leftovers,
     }
 
 
@@ -737,65 +714,50 @@ def compact_output(
     buckets: list[int] | None = None,
     dry_run: bool = False,
 ) -> list[dict] | dict:
-    """Compact every (or the given) bucket directory under
-    ``output_path``. Buckets are independent — an orchestrator can shard
-    this loop exactly like the extraction buckets themselves (and a
-    sharded driver MUST pass its own subset: compacting a bucket another
-    driver is still writing would swap in a stale snapshot).
+    """Rewrite every (or the given) bucket directory under
+    ``output_path`` into ~``target_bytes`` parquet files — the standard
+    small-files compaction a bucketed, many-executor writer needs at
+    warehouse scale (K buckets × P partitions per run leaves K·P files;
+    downstream scans want 128-512 MB objects). Not a lineage event: the
+    checkpoint table is untouched. Buckets are independent — an
+    orchestrator can shard this exactly like the extraction buckets (and
+    a sharded driver MUST pass its own subset: compacting a bucket
+    another driver is still writing would swap in a stale snapshot).
 
-    ``dry_run=True`` is the read-only pre-flight (delete/upsert twin,
-    and the one an operator most wants before pointing a rewrite at a
-    100 TB corpus on a guessed target size): filesystem metadata only —
-    no Spark jobs, no recovery, no writes, untouched mtimes. Reports per
-    bucket the parquet files/bytes today and the computed
-    ``files_target`` the rewrite would aim for; a bucket currently
-    retired by an interrupted swap is counted from its ``.staging``
-    backup (matching what the healed real run would compact) and left
-    retired. ``files_target`` is an upper bound on the real run's
-    ``files_after``: ``repartition(n)`` emits fewer files when the
-    bucket holds fewer rows than partitions, which only the rewrite
-    itself can know."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
-    fs = root.getFileSystem(conf)
-    if buckets is None:
-        # include buckets currently retired by an interrupted swap (only
-        # their .staging backup exists) — compact_bucket's recovery
-        # restores them, so the natural retry must enumerate them
-        buckets = set(_bucket_ids(fs, root))
-        staging_root = jvm.org.apache.hadoop.fs.Path(f"{output_path}.staging")
-        if fs.exists(staging_root):
-            for f in fs.listStatus(staging_root):
-                m = re.match(r"^bucket=(\d+)\.old$", f.getPath().getName())
-                if m:
-                    buckets.add(int(m.group(1)))
-        buckets = sorted(buckets)
+    The buckets come from the bucket inventory, so one retired by an
+    interrupted swap is included, counted from its ``.staging`` backup
+    (the real run restores it); a named bucket found nowhere raises
+    ``FileNotFoundError``. Each gets ``files_target =
+    ceil(bytes / target_bytes)``, 0 for a legal fully-deleted empty
+    bucket, which the real run skips.
+
+    ``dry_run=True`` reports that selection and touches nothing:
+    filesystem metadata only — no Spark jobs, no recovery, no writes,
+    untouched mtimes. ``files_target`` is an upper bound on the real
+    run's ``files_after``: ``repartition(n)`` emits fewer files when the
+    bucket holds fewer rows than partitions, and (bucket, slot) pairs
+    that hash to one task are concatenated by the writer.
+
+    The real run rewrites the selection through ``_rewrite_buckets``:
+    per-row ``__slot = pmod(xxhash64(doc_id), files_target(bucket))``,
+    repartitioned on (bucket, __slot). ``__slot`` is a deterministic
+    function of doc_id, so a retried task reproduces the same placement
+    and a doc's rows stay in one output file. ``files_after`` is what
+    landed in the live directory after the swap."""
+    fs, jvm = _fs(spark, output_path)
+    inv, _ = _bucket_inventory(fs, jvm, output_path)
+    per = []
+    for b in sorted(inv) if buckets is None else buckets:
+        if b not in inv:
+            raise FileNotFoundError(f"{output_path}/bucket={b}")
+        _, n, total = inv[b]
+        per.append({
+            "bucket": b,
+            "bytes": total,
+            "files_before": n,
+            "files_target": max(1, -(-total // target_bytes)) if n else 0,
+        })
     if dry_run:
-        # one listing walk per root instead of a listStatus per bucket
-        live_st, live_dirs = _walk_bucket_file_stats(fs, jvm, output_path)
-        bk_st, bk_dirs = _walk_bucket_file_stats(
-            fs, jvm, f"{output_path}.staging"
-        )
-        per = []
-        for b in buckets:
-            ln, bn = f"bucket={b}", f"bucket={b}.old"
-            if ln in live_dirs:
-                n, total = live_st.get(ln, (0, 0))
-            elif bn in bk_dirs:
-                n, total = bk_st.get(bn, (0, 0))
-            else:  # mirror compact_bucket on an explicit miss
-                raise FileNotFoundError(f"{output_path}/bucket={b}")
-            per.append({
-                "bucket": b,
-                "bytes": total,
-                "files_before": n,
-                # 0 for a legal fully-deleted empty bucket — the real
-                # run skips it rather than rewriting
-                "files_target": (
-                    max(1, -(-total // target_bytes)) if n else 0
-                ),
-            })
         return {
             "dry_run": True,
             "buckets": per,
@@ -803,75 +765,39 @@ def compact_output(
             "files_before": sum(s["files_before"] for s in per),
             "files_target": sum(s["files_target"] for s in per),
         }
-    # Batched real run (round 8, mirroring the round-7 delete/upsert
-    # batching): the data path is ONE staged write for ALL buckets —
-    # per-row `__slot = pmod(xxhash64(doc_id), files_target(bucket))`
-    # from the same per-bucket targets the dry-run reports, repartition
-    # on (bucket, __slot), write hive-partitioned by bucket to staging —
-    # then the existing checked metadata-only swaps. Job count is
-    # constant in the number of buckets (K=4096 compacts in 1 data job,
-    # not ~4096 sequential launches). `__slot` is a deterministic
-    # function of doc_id (guide §2.5: retried tasks reproduce the same
-    # placement; a doc's rows stay in one output file). files_target
-    # stays the upper bound on files_after: (bucket, slot) pairs that
-    # hash to the same task are concatenated by the writer.
-    P = jvm.org.apache.hadoop.fs.Path
-    for b in buckets:
-        _recover_bucket(fs, jvm, output_path, b)
-    stats: list[dict] = []
-    targets: dict[int, int] = {}
-    for b in buckets:
-        path = P(f"{output_path}/bucket={b}")
-        if not fs.exists(path):
-            raise FileNotFoundError(f"{output_path}/bucket={b}")
-        n_before, total = _parquet_dir_stats(fs, path)
-        if n_before == 0:
-            # legal fully-deleted empty bucket: nothing to compact
-            stats.append({
-                "bucket": b, "bytes": 0,
-                "files_before": 0, "files_after": 0,
-            })
-            continue
-        targets[b] = max(1, -(-total // target_bytes))
-        stats.append({
-            "bucket": b, "bytes": total, "files_before": n_before,
-        })
+    targets = [
+        (s["bucket"], s["files_target"]) for s in per if s["files_target"]
+    ]
     if targets:
-        tmap = spark.createDataFrame(
-            sorted(targets.items()), "bucket int, __ft int"
-        )
-        stage_root = f"{output_path}.staging/compact_stage"
-        total_slots = sum(targets.values())
+        todo = [b for b, _ in targets]
+        tmap = spark.createDataFrame(targets, "bucket int, __ft int")
         n_parts = max(
-            spark.sparkContext.defaultParallelism, total_slots
+            spark.sparkContext.defaultParallelism, sum(n for _, n in targets)
         )
-        (
-            spark.read.option("basePath", output_path)
-            .parquet(*[
-                f"{output_path}/bucket={b}" for b in sorted(targets)
-            ])
-            .join(F.broadcast(tmap), "bucket")
-            .withColumn(
-                "__slot",
-                F.pmod(F.xxhash64("doc_id"), F.col("__ft")).cast("int"),
-            )
-            .repartition(n_parts, F.col("bucket"), F.col("__slot"))
-            .drop("__ft", "__slot")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(stage_root)
+        _rewrite_buckets(
+            spark, fs, jvm, output_path, "compact_stage", todo,
+            lambda: (
+                spark.read.option("basePath", output_path)
+                .parquet(*[f"{output_path}/bucket={b}" for b in todo])
+                .join(F.broadcast(tmap), "bucket")
+                .withColumn(
+                    "__slot",
+                    F.pmod(F.xxhash64("doc_id"), F.col("__ft")).cast("int"),
+                )
+                .repartition(n_parts, F.col("bucket"), F.col("__slot"))
+                .drop("__ft", "__slot")
+            ),
         )
-        for b in sorted(targets):
-            _swap_bucket_dir(
-                fs, jvm, output_path, b, P(f"{stage_root}/bucket={b}")
-            )
-        fs.delete(P(stage_root), True)
-    for s in stats:
-        if "files_after" not in s:
-            s["files_after"] = _parquet_dir_stats(
-                fs, P(f"{output_path}/bucket={s['bucket']}")
-            )[0]
-    return stats
+        inv, _ = _bucket_inventory(fs, jvm, output_path)
+    return [
+        {
+            "bucket": s["bucket"],
+            "bytes": s["bytes"],
+            "files_before": s["files_before"],
+            "files_after": inv[s["bucket"]][1],
+        }
+        for s in per
+    ]
 
 
 def delete_docs(
@@ -890,175 +816,90 @@ def delete_docs(
     the driver; only the affected-bucket id list does, bounded by K).
 
     Bucket-pruned: the bucket of every target id is recomputed with the
-    SAME hash the writer used (pmod(xxhash64(doc_id), K)). K is inferred
-    from the committed directories when the output is complete and must
-    be passed explicitly for a partial/sharded one (see
-    ``_writer_bucket_count``). Only affected bucket directories are read
-    and rewritten — at K=4096 deleting a handful of docs touches a
-    handful of directories, not the corpus — and the rewrite is BATCHED:
-    one hit-count pass plus one staged write hive-partitioned by
-    ``bucket`` cover every affected directory, so the Spark-job count is
-    constant in the number of buckets touched (a 10^7-id policy sweep at
-    K=4096 runs 2 jobs, not ~4096). Each bucket still commits through
-    the checked retire/commit swap of ``compact_bucket`` — now a pure
-    metadata rename per bucket; untouched buckets (including
-    hash-affected ones holding none of the ids) keep their files
-    byte-identical.
-
-    ``dry_run=True`` reports what the real run would do — affected
-    buckets and rows to remove per bucket — read-only (two actions: the
-    bucket-list aggregation and the semi-join count; no recovery, no
-    writes, untouched mtimes): the sanity check an operator wants before
-    pointing a 10^7-id policy sweep at a live corpus. A bucket currently
-    retired by an interrupted swap is counted from its ``.staging``
-    backup, matching what the healed real run would see. The real run
-    swaps ONLY buckets that actually lose rows (a staged copy with zero
-    removals is discarded), so ``buckets_rewritten`` equals the dry
-    run's ``buckets_affected`` and every other bucket — including a
-    hash-affected one holding no matching rows — stays byte-identical.
+    SAME hash the writer used (pmod(xxhash64(doc_id), K)). K comes from
+    the output's marker, or is inferred from a complete set of bucket
+    directories and must be passed explicitly for a partial/sharded one
+    (see ``_writer_bucket_count``). One hit-count pass over the affected
+    buckets' data — live, or the ``.staging`` backup of a bucket an
+    interrupted swap retired — selects the buckets that really lose rows.
+    ``dry_run=True`` reports that selection read-only (the id-bucket
+    aggregation and the hit count; no recovery, no writes, untouched
+    mtimes): the sanity check before pointing a 10^7-id policy sweep at
+    a live corpus. The real run rewrites exactly that selection through
+    ``_rewrite_buckets`` — one staged write of the keep-rows, whatever
+    the number of buckets (a sweep at K=4096 runs a constant handful of
+    jobs, not ~4096) — so ``buckets_rewritten`` equals the dry run's
+    ``buckets_affected`` and every other bucket, including a
+    hash-affected one holding none of the ids, stays byte-identical.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):  # even with explicit n_buckets: a typo'd path
-        raise FileNotFoundError(f"no such output: {output_path}")
+    fs, jvm = _fs(spark, output_path)
+    # raises on a typo'd path, even with an explicit n_buckets
+    inv, _ = _bucket_inventory(fs, jvm, output_path)
     if n_buckets is None:
-        n_buckets = _writer_bucket_count(fs, jvm, root, output_path)
+        n_buckets = _writer_bucket_count(fs, jvm, output_path, inv)
     if isinstance(doc_ids, DataFrame):
         ids_src = doc_ids.select(F.col("doc_id").cast("string"))
     else:
         ids_src = spark.createDataFrame(
             [(d,) for d in doc_ids], "doc_id string"
         )
-    ids = ids_src.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
-    )
+    bucket_of = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     # cached: the id set feeds the affected-bucket aggregation, the
     # hit-count semi-join, and the staged anti-join — a DataFrame id
     # source would otherwise recompute for each
-    ids = ids.persist()
+    ids = ids_src.withColumn("__bucket", bucket_of).persist()
     try:
         affected = sorted(
             r["__bucket"]
             for r in ids.select("__bucket").distinct().collect()
         )
-        if dry_run:
-            # one listing walk per root instead of exists+listStatus
-            # per bucket; same selection: live dir wins over a retired
-            # .staging backup, and legal fully-deleted empty dirs hold
-            # nothing and must not sink schema inference
-            live_st, live_dirs = _walk_bucket_file_stats(
-                fs, jvm, output_path
-            )
-            bk_st, bk_dirs = _walk_bucket_file_stats(
-                fs, jvm, f"{output_path}.staging"
-            )
-            paths = []
-            for b in affected:
-                ln, bn = f"bucket={b}", f"bucket={b}.old"
-                if ln in live_dirs:
-                    if live_st.get(ln, (0, 0))[0]:
-                        paths.append(f"{output_path}/bucket={b}")
-                elif bn in bk_dirs and bk_st.get(bn, (0, 0))[0]:
-                    paths.append(f"{output_path}.staging/{bn}")
-            by_bucket: dict[int, int] = {}
-            if paths:
-                hits = (
-                    spark.read.parquet(*paths)
-                    .join(ids.select("doc_id"), "doc_id", "left_semi")
-                    .groupBy(
-                        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .count()
-                    .collect()
-                )
-                by_bucket = {int(r["b"]): int(r["count"]) for r in hits}
-            return {
-                "dry_run": True,
-                "buckets_total": n_buckets,
-                "buckets_affected": [
-                    b for b in affected if by_bucket.get(b)
-                ],
-                "rows_to_remove": sum(by_bucket.values()),
-                "rows_by_bucket": [
-                    [b, by_bucket[b]] for b in sorted(by_bucket)
-                ],
-            }
-        # Batched rewrite: the per-bucket work is TWO Spark jobs total —
-        # a hit-count pass and one staged write partitioned by bucket —
-        # regardless of how many buckets the ids touch, so a 10^7-id
-        # policy sweep at K=4096 stops paying ~4096 sequential job
-        # launches of mostly fixed overhead. The checked per-bucket
-        # retire/commit swaps remain, but as pure metadata renames.
-        P = jvm.org.apache.hadoop.fs.Path
-        for b in affected:
-            _recover_bucket(fs, jvm, output_path, b)
-        # explicit-K partial: ids may hash to never-written buckets; a
-        # fully-deleted bucket is a legal EMPTY dir — it holds nothing
-        # to delete and a schema-less read of it would fail, so only
-        # dirs with parquet files join the hit-count scan
-        existing = [
-            b for b in affected
-            if fs.exists(P(f"{output_path}/bucket={b}"))
-            and _parquet_dir_stats(fs, P(f"{output_path}/bucket={b}"))[0]
-        ]
-        removed = 0
-        rewritten = 0
-        if existing:
-            paths = [f"{output_path}/bucket={b}" for b in existing]
-            # job 1: per-bucket hit counts — also the exact removed-row
-            # counts, and they bound the swap set to buckets that really
-            # lose rows (a hash-affected bucket holding none of the ids
-            # keeps its files byte-identical, matching dry_run's
-            # buckets_affected)
+        # ids may hash to never-written buckets (explicit-K partial), and
+        # a legal fully-deleted empty dir holds nothing to delete and
+        # must not sink schema inference
+        paths = [inv[b][0] for b in affected if inv.get(b, ("", 0))[1]]
+        by_bucket: dict[int, int] = {}
+        if paths:
             hits = (
-                spark.read.option("basePath", output_path).parquet(*paths)
+                spark.read.parquet(*paths)
                 .join(ids.select("doc_id"), "doc_id", "left_semi")
-                .groupBy("bucket")
+                .groupBy(bucket_of.alias("b"))
                 .count()
                 .collect()
             )
-            by_bucket = {int(r["bucket"]): int(r["count"]) for r in hits}
-            hit_buckets = sorted(by_bucket)
-            if hit_buckets:
-                # job 2: every hit bucket's keep-rows staged in ONE write
-                # (hive-partitioned like the live tree, so each staged
-                # bucket dir swaps in as-is). The anti-join side is the
-                # full id set: broadcast when it came as a driver-side
-                # list, left to AQE for a DataFrame-sized sweep.
-                join_ids = ids.select("doc_id")
-                if not isinstance(doc_ids, DataFrame):
-                    join_ids = F.broadcast(join_ids)
-                stage_root = f"{output_path}.staging/delete_keep"
-                keep = (
-                    spark.read.option("basePath", output_path).parquet(
-                        *[f"{output_path}/bucket={b}" for b in hit_buckets]
-                    )
+            by_bucket = {int(r["b"]): int(r["count"]) for r in hits}
+        hit_buckets = sorted(by_bucket)
+        if dry_run:
+            return {
+                "dry_run": True,
+                "buckets_total": n_buckets,
+                "buckets_affected": hit_buckets,
+                "rows_to_remove": sum(by_bucket.values()),
+                "rows_by_bucket": [[b, by_bucket[b]] for b in hit_buckets],
+            }
+        rewritten = 0
+        if hit_buckets:
+            # the anti-join side is the full id set: broadcast when it
+            # came as a driver-side list, left to AQE for a
+            # DataFrame-sized sweep
+            join_ids = ids.select("doc_id")
+            if not isinstance(doc_ids, DataFrame):
+                join_ids = F.broadcast(join_ids)
+            rewritten = _rewrite_buckets(
+                spark, fs, jvm, output_path, "delete_keep", hit_buckets,
+                lambda: (
+                    spark.read.option("basePath", output_path)
+                    .parquet(*[
+                        f"{output_path}/bucket={b}" for b in hit_buckets
+                    ])
                     .join(join_ids, "doc_id", "left_anti")
-                )
-                keep.write.mode("overwrite").partitionBy("bucket").parquet(
-                    stage_root
-                )
-                for b in hit_buckets:
-                    staged = P(f"{stage_root}/bucket={b}")
-                    if not fs.exists(staged):
-                        # every row of the bucket was removed: an empty
-                        # directory is the correct post-delete state
-                        fs.mkdirs(staged)
-                    _swap_bucket_dir(fs, jvm, output_path, b, staged)
-                    removed += by_bucket[b]
-                    rewritten += 1
-                fs.delete(P(stage_root), True)
+                ),
+            )
     finally:
         ids.unpersist()
     return {
         "buckets_rewritten": rewritten,
         "buckets_total": n_buckets,
-        "rows_removed": removed,
+        "rows_removed": sum(by_bucket.values()),
     }
 
 
@@ -1077,20 +918,19 @@ def upsert_docs(
     ``delete_docs`` (remove) and ``compact_output`` (rewrite-in-place) to
     complete the corpus-maintenance surface.
 
-    Extraction runs ONCE: the replacement rows are written to a staging
-    root partitioned by the writer's own bucket hash, and ONE further
-    merged write stages every affected bucket's (old rows minus upserted
-    doc_ids) ∪ (its staged new rows) — the Spark-job count is constant
-    in the number of buckets touched, with each bucket still committing
-    through the checked retire/commit swap of ``compact_bucket`` as a
-    metadata-only rename. The replace set is derived from ``input_df``, NOT
-    from the extraction output — a changed doc whose new content yields
-    zero rows (no tables detected) still has its stale rows removed.
-    Buckets holding none of the upserted docs keep their files
-    byte-identical; a doc new to the corpus lands in its hash bucket even
-    if that directory did not exist yet. ``extract_kw`` forwards the
-    extraction options (``row_model``, ``excepted_*``, ``gap_min_spaces``)
-    so the replacement rows follow the same config as the original run.
+    The affected buckets are the hash buckets of the input doc_ids. The
+    real run rewrites them through ``_rewrite_buckets`` in ONE staged
+    write of (old rows minus the upserted doc_ids) ∪ (the freshly
+    extracted rows): extraction runs once, inside that write, and the
+    Spark-job count is constant in the number of buckets touched. The
+    replace set comes from ``input_df``, NOT from the extraction output —
+    a changed doc whose new content yields zero rows (no tables
+    detected) still has its stale rows removed. Buckets holding none of
+    the upserted docs keep their files byte-identical; a doc new to the
+    corpus lands in its hash bucket even if that directory did not exist
+    yet. ``extract_kw`` forwards the extraction options (``row_model``,
+    ``excepted_*``, ``gap_min_spaces``) so the replacement rows follow
+    the same config as the original run.
 
     Like compaction, an upsert is not a lineage event: the checkpoint
     table is untouched and only ``kind in DATA_KINDS`` rows are written
@@ -1111,156 +951,81 @@ def upsert_docs(
     """
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):  # even with explicit n_buckets: a typo'd path
-        raise FileNotFoundError(f"no such output: {output_path}")
+    fs, jvm = _fs(spark, output_path)
+    # raises on a typo'd path, even with an explicit n_buckets
+    inv, _ = _bucket_inventory(fs, jvm, output_path)
     if n_buckets is None:
-        n_buckets = _writer_bucket_count(fs, jvm, root, output_path)
+        n_buckets = _writer_bucket_count(fs, jvm, output_path, inv)
     if input_df.isEmpty():  # mirror delete_docs([]) — a committed no-op
-        summary = {
-            "buckets_rewritten": 0,
-            "buckets_total": n_buckets,
-            "docs_upserted": 0,
-        }
         if dry_run:
-            summary = {
+            return {
                 "dry_run": True, "buckets_total": n_buckets,
                 "buckets_affected": [], "docs_replacing": 0,
                 "docs_new": 0, "rows_to_replace": 0,
             }
-        return summary
+        return {
+            "buckets_rewritten": 0,
+            "buckets_total": n_buckets,
+            "docs_upserted": 0,
+        }
     bucket_of = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    if dry_run:
-        P = jvm.org.apache.hadoop.fs.Path
-        ids = (
-            input_df.select("doc_id").distinct()
-            .withColumn("__bucket", bucket_of)
-            .persist()
+    ids = (
+        input_df.select("doc_id").distinct()
+        .withColumn("bucket", bucket_of)
+        .persist()
+    )
+    try:
+        n_docs = ids.count()
+        affected = sorted(
+            r["bucket"] for r in ids.select("bucket").distinct().collect()
         )
-        try:
-            n_input = ids.count()
-            affected = sorted(
-                r["__bucket"]
-                for r in ids.select("__bucket").distinct().collect()
-            )
-            paths = []
-            for b in affected:
-                live = f"{output_path}/bucket={b}"
-                backup = f"{output_path}.staging/bucket={b}.old"
-                if fs.exists(P(live)):
-                    paths.append(live)
-                elif fs.exists(P(backup)):
-                    paths.append(backup)
-            # legal fully-deleted empty dirs hold nothing and must not
-            # sink schema inference when every path is one
-            paths = [
-                p for p in paths if _parquet_dir_stats(fs, P(p))[0]
-            ]
-            docs_replacing = 0
-            rows_to_replace = 0
-            if paths:
-                # docs never cross buckets (bucket = f(doc_id)), so the
-                # per-bucket distinct-doc counts sum to the global one
-                hits = (
-                    spark.read.parquet(*paths)
+        # affected buckets holding rows, live or retired by an
+        # interrupted swap; a legal empty dir holds nothing to replace
+        existing = [b for b in affected if inv.get(b, ("", 0))[1]]
+        if dry_run:
+            rows_to_replace = docs_replacing = 0
+            if existing:
+                rows_to_replace, docs_replacing = (
+                    spark.read.parquet(*[inv[b][0] for b in existing])
                     .join(ids.select("doc_id"), "doc_id", "left_semi")
-                    .groupBy(bucket_of.alias("b"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.countDistinct("doc_id").alias("d"),
-                    )
-                    .collect()
+                    .agg(F.count(F.lit(1)), F.countDistinct("doc_id"))
+                    .first()
                 )
-                docs_replacing = sum(int(r["d"]) for r in hits)
-                rows_to_replace = sum(int(r["n"]) for r in hits)
             return {
                 "dry_run": True,
                 "buckets_total": n_buckets,
                 "buckets_affected": affected,
                 "docs_replacing": docs_replacing,
-                "docs_new": n_input - docs_replacing,
+                "docs_new": n_docs - docs_replacing,
                 "rows_to_replace": rows_to_replace,
             }
-        finally:
-            ids.unpersist()
-    new_rows = _extraction(output_mode, **extract_kw)(input_df)
-    if output_mode == "spans":
-        new_rows = data_spans(new_rows)
-    stage_root = f"{output_path}.staging/upsert_rows"
-    stage_path = jvm.org.apache.hadoop.fs.Path(stage_root)
-    (
-        new_rows.withColumn("bucket", bucket_of)
-        .write.mode("overwrite").partitionBy("bucket").parquet(stage_root)
-    )
-    # explicit schema: a staged write where every doc produced zero rows
-    # has no parquet files to infer from, and the replace set below must
-    # still be honored
-    bucketed_schema = StructType(
-        new_rows.schema.fields + [StructField("bucket", IntegerType())]
-    )
-    staged = spark.read.schema(bucketed_schema).parquet(stage_root)
-    fresh_buckets = {
-        r["bucket"] for r in staged.select("bucket").distinct().collect()
-    }
-    ids = (
-        input_df.select("doc_id").distinct()
-        .withColumn("bucket", bucket_of)
-        .cache()
-    )
-    affected = sorted(r["bucket"] for r in ids.select("bucket").distinct().collect())
-    n_docs = ids.count()
-    rewritten = 0
-    # Batched rewrite (delete_docs twin): ONE staged write merges every
-    # affected bucket's (old rows minus upserted ids) ∪ (its fresh rows),
-    # hive-partitioned by bucket so each staged dir swaps in as-is — the
-    # Spark-job count stays constant in the number of buckets touched,
-    # and the checked per-bucket swaps are pure metadata renames.
-    P = jvm.org.apache.hadoop.fs.Path
-    for b in affected:
-        _recover_bucket(fs, jvm, output_path, b)
-    existing = [
-        b for b in affected if fs.exists(P(f"{output_path}/bucket={b}"))
-    ]
-    # a bucket with nothing to remove (never written) and nothing to add
-    # (its docs extracted zero rows) needs no swap at all
-    existing_set = set(existing)
-    swap_buckets = [
-        b for b in affected if b in existing_set or b in fresh_buckets
-    ]
-    merge_root = f"{output_path}.staging/upsert_merged"
-    if swap_buckets:
-        if existing:
-            # explicit schema: an existing bucket dir can be EMPTY (fully
-            # deleted earlier) and must not sink schema inference
-            kept = (
-                spark.read.schema(bucketed_schema)
-                .option("basePath", output_path).parquet(
-                    *[f"{output_path}/bucket={b}" for b in existing]
-                )
+        new_rows = _extraction(output_mode, **extract_kw)(input_df)
+        if output_mode == "spans":
+            new_rows = data_spans(new_rows)
+        schema = StructType(
+            new_rows.schema.fields + [StructField("bucket", IntegerType())]
+        )
+        new_rows = new_rows.withColumn("bucket", bucket_of)
+
+        def rows():
+            if not existing:  # every doc new to its bucket
+                return new_rows
+            return (
+                # explicit schema: no footer read to infer it
+                spark.read.schema(schema)
+                .option("basePath", output_path)
+                .parquet(*[f"{output_path}/bucket={b}" for b in existing])
                 .join(
                     F.broadcast(ids.select("doc_id")), "doc_id", "left_anti"
                 )
+                .unionByName(new_rows)
             )
-            merged = kept.unionByName(staged)
-        else:  # every doc new to the corpus, no hash bucket written yet
-            merged = staged
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(
-            merge_root
+
+        rewritten = _rewrite_buckets(
+            spark, fs, jvm, output_path, "upsert_merged", affected, rows
         )
-        for b in swap_buckets:
-            staging = P(f"{merge_root}/bucket={b}")
-            if not fs.exists(staging):
-                # all of the bucket's rows were replaced by docs that now
-                # extract to nothing: empty is the correct new state
-                fs.mkdirs(staging)
-            _swap_bucket_dir(fs, jvm, output_path, b, staging)
-            rewritten += 1
-        fs.delete(P(merge_root), True)
-    ids.unpersist()
-    fs.delete(stage_path, True)
+    finally:
+        ids.unpersist()
     return {
         "buckets_rewritten": rewritten,
         "buckets_total": n_buckets,

@@ -376,6 +376,16 @@ def test_nested_mode_checkpoint_resume(spark, tmp_path):
     }
     # docs with no detected tables emit no nested row on either path
     assert got == clean and len(got) > 0
+    # the checkpoint counts every doc and span PROCESSED, not only the
+    # docs that produced a nested row
+    cp_rows = (
+        job._read_checkpoint(spark, cp).where(F.col("run_id") == "nres")
+        .agg(F.sum("n_docs").alias("docs"), F.sum("n_spans_in").alias("spans"))
+        .first()
+    )
+    assert len(got) < 120
+    assert cp_rows["docs"] == 120
+    assert cp_rows["spans"] == inp.select(F.sum(F.size("spans"))).first()[0]
 
 
 def test_compaction_preserves_rows_and_shrinks_files(spark, tmp_path):
@@ -429,9 +439,11 @@ def test_compact_reports_actual_files_when_fewer_than_target(spark, tmp_path):
     from key_resource_table_extractor_spark import job
 
     out = str(tmp_path / "out")
-    spark.range(3).coalesce(1).write.parquet(f"{out}/bucket=0")
+    spark.range(3).withColumn("doc_id", F.concat(F.lit("d"), "id")).coalesce(
+        1
+    ).write.parquet(f"{out}/bucket=0")
     # ~hundreds of bytes / 64 per file → target well above the 3 rows
-    stats = job.compact_bucket(spark, out, 0, target_bytes=64)
+    [stats] = job.compact_output(spark, out, target_bytes=64, buckets=[0])
     n_live = sum(
         1 for f in os.listdir(f"{out}/bucket=0") if f.endswith(".parquet")
     )
@@ -1113,10 +1125,11 @@ def test_maintenance_k_resolution(spark, tmp_path):
         job.delete_docs(spark, str(tmp_path / "nope"), ["x"], n_buckets=4)
 
 
-def test_compact_bucket_recovers_interrupted_swap(spark, tmp_path):
+def test_compact_recovers_interrupted_swap(spark, tmp_path):
     """A crash between retiring the live dir and committing the staged
     one leaves the data in the .staging backup; the next run restores it
-    and completes."""
+    and completes — both the natural retry over every bucket and a run
+    naming only the retired bucket."""
     import os
 
     from key_resource_table_extractor_spark import job
@@ -1139,6 +1152,16 @@ def test_compact_bucket_recovers_interrupted_swap(spark, tmp_path):
     # bucket even though only its .staging backup exists
     stats = job.compact_output(spark, out)
     assert [s["bucket"] for s in stats] == [0, 1]
+    after = {
+        tuple(r) for r in job.read_output(spark, out, buckets=[0]).collect()
+    }
+    assert after == before
+    assert not os.path.exists(out + ".staging/bucket=0.old")
+    # the same window again, healed by a run naming only that bucket
+    os.rename(os.path.join(out, "bucket=0"), out + ".staging/bucket=0.old")
+    stats = job.compact_output(spark, out, buckets=[0])
+    assert [s["bucket"] for s in stats] == [0]
+    assert stats[0]["files_after"] == 1
     after = {
         tuple(r) for r in job.read_output(spark, out, buckets=[0]).collect()
     }
@@ -1269,3 +1292,147 @@ def test_batched_compact_job_count_constant_in_buckets(spark, tmp_path):
             ) == mtimes[(b, f)], (b, f)
     # no staging leftovers after the batched swap loop
     assert job.output_status(spark, out)["staging_leftovers"] == []
+
+
+def _spans_df(spark, doc_ids, variant):
+    from key_resource_table_extractor_spark import synth
+    from key_resource_table_extractor_spark.schemas import DOCUMENT_SPANS_SCHEMA
+
+    return spark.createDataFrame(
+        [(d, [
+            {"kind": k, "text": t, "media_ref": m, "offset": o}
+            for (k, t, m, o) in synth.generate_doc(d, variant)
+        ]) for d in doc_ids],
+        DOCUMENT_SPANS_SCHEMA,
+    )
+
+
+def _bucket_of(spark, doc_id, k):
+    return spark.createDataFrame([(doc_id,)], "doc_id string").select(
+        F.pmod(F.xxhash64("doc_id"), F.lit(k)).cast("int")
+    ).first()[0]
+
+
+def test_delete_and_upsert_on_retired_bucket(spark, tmp_path):
+    """A bucket retired to .staging/bucket=N.old by an interrupted swap
+    is still the bucket's data: the delete and upsert dry runs count it
+    from the backup and touch nothing, and the real runs restore it,
+    rewrite it and leave no .staging entries behind."""
+    import shutil
+
+    from key_resource_table_extractor_spark import job, oracle, synth
+
+    k = 3
+    out = str(tmp_path / "out")
+    job.run_extraction(
+        spark, job.synthesize_spans(spark, 60, seed=42), out,
+        str(tmp_path / "cp"), run_id="ret", n_buckets=k,
+        partitions_per_bucket=2,
+    )
+    rows = job.read_output(spark, out)
+    docs = sorted(
+        r["doc_id"] for r in rows.select("doc_id").distinct().collect()
+    )
+    gone = docs[0]
+    b = _bucket_of(spark, gone, k)
+    changed = next(d for d in docs[1:] if _bucket_of(spark, d, k) == b)
+    n_gone = rows.where(F.col("doc_id") == gone).count()
+    n_changed = rows.where(F.col("doc_id") == changed).count()
+
+    def retire():
+        os.makedirs(f"{out}.staging", exist_ok=True)
+        shutil.move(f"{out}/bucket={b}", f"{out}.staging/bucket={b}.old")
+
+    def snapshot():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(str(tmp_path))
+            if d.startswith((out, f"{out}.staging"))
+            for f in fs
+        }
+
+    retire()
+    before = snapshot()
+    dry = job.delete_docs(spark, out, [gone], dry_run=True)
+    assert dry["buckets_affected"] == [b]
+    assert dry["rows_to_remove"] == n_gone > 0
+    assert snapshot() == before  # read-only: the bucket stays retired
+    real = job.delete_docs(spark, out, [gone])
+    assert real == {
+        "buckets_rewritten": 1, "buckets_total": k, "rows_removed": n_gone,
+    }
+    assert job.read_output(spark, out).where(
+        F.col("doc_id") == gone
+    ).count() == 0
+    assert os.listdir(f"{out}.staging") == []
+
+    retire()
+    before = snapshot()
+    upsert_in = _spans_df(spark, [changed], 9)
+    dry = job.upsert_docs(spark, upsert_in, out, dry_run=True)
+    assert dry["buckets_affected"] == [b]
+    assert dry["docs_replacing"] == 1 and dry["docs_new"] == 0
+    assert dry["rows_to_replace"] == n_changed > 0
+    assert snapshot() == before
+    real = job.upsert_docs(spark, upsert_in, out)
+    assert real == {
+        "buckets_rewritten": 1, "buckets_total": k, "docs_upserted": 1,
+    }
+    got = [
+        tuple(r)[1:] for r in job.read_output(spark, out)
+        .where(F.col("doc_id") == changed).orderBy("seq")
+        .drop("bucket").collect()
+    ]
+    assert got == oracle.extract_document(synth.generate_doc(changed, 9))
+    assert os.listdir(f"{out}.staging") == []
+    assert job.output_status(spark, out)["buckets_missing"] == []
+
+
+def test_failed_upsert_cleans_up_and_reruns(spark, tmp_path, monkeypatch):
+    """A swap that raises mid-upsert propagates the error, leaves no
+    upsert stage root under .staging, and a plain re-run of the upsert
+    then gives the same output as an upsert that never failed."""
+    from key_resource_table_extractor_spark import job
+
+    k = 3
+    src = job.synthesize_spans(spark, 40, seed=42)
+    outs = {}
+    for name in ("failed", "clean"):
+        outs[name] = str(tmp_path / name)
+        job.run_extraction(
+            spark, src, outs[name], str(tmp_path / f"cp_{name}"),
+            run_id=name, n_buckets=k, partitions_per_bucket=2,
+        )
+    # changed docs in at least two buckets, so one swap lands before the
+    # injected failure
+    ids = [f"doc_42_{i:07d}" for i in range(12)]
+    changed = {}
+    for d in ids:
+        changed.setdefault(_bucket_of(spark, d, k), d)
+    assert len(changed) >= 2
+    upsert_in = _spans_df(spark, sorted(changed.values()), 9)
+
+    real_swap = job._swap_bucket_dir
+    calls = []
+
+    def failing_swap(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise IOError("injected swap failure")
+        return real_swap(*args)
+
+    monkeypatch.setattr(job, "_swap_bucket_dir", failing_swap)
+    with pytest.raises(IOError, match="injected swap failure"):
+        job.upsert_docs(spark, upsert_in, outs["failed"])
+    monkeypatch.setattr(job, "_swap_bucket_dir", real_swap)
+    assert not [
+        d for d in os.listdir(outs["failed"] + ".staging")
+        if d.startswith("upsert_")
+    ]
+    job.upsert_docs(spark, upsert_in, outs["failed"])
+    job.upsert_docs(spark, upsert_in, outs["clean"])
+    got, want = (
+        sorted(tuple(r) for r in job.read_output(spark, outs[n]).collect())
+        for n in ("failed", "clean")
+    )
+    assert got == want
