@@ -1043,11 +1043,28 @@ def make_map_in_arrow_fn(output_mode: str = "spans", **options):
     """The ``DataFrame.mapInArrow`` fn every extraction runs: each
     ``(doc_id, spans)`` batch is decoded once, extracted once and encoded
     by the ``output_mode`` adapter. ``options`` are those of
-    ``make_extract_fn``."""
+    ``make_extract_fn``.
+
+    A batch that also carries an int ``bucket`` column (the job's bucket
+    waves) is extracted one bucket at a time, and ``bucket`` is copied
+    onto every output row — data, error and stats rows alike — so each
+    per-batch stats row counts the docs of exactly one bucket."""
     extract = make_extract_fn(output_mode, **options)
 
     def fn(batches):
         for rb in batches:
-            yield extract(*_decode_spans(rb))
+            if "bucket" not in rb.schema.names:
+                yield extract(*_decode_spans(rb))
+                continue
+            if not rb.num_rows:
+                continue
+            bucket = rb.column("bucket").to_numpy(zero_copy_only=False)
+            order = np.argsort(bucket, kind="stable")
+            rb, bucket = rb.take(pa.array(order)), bucket[order]
+            cuts = np.r_[0, np.flatnonzero(np.diff(bucket)) + 1, len(bucket)]
+            for s, e in zip(cuts[:-1], cuts[1:]):
+                out = extract(*_decode_spans(rb.slice(s, e - s)))
+                yield out.append_column("bucket", pa.array(
+                    np.full(out.num_rows, bucket[s], dtype=np.int32)))
 
     return fn

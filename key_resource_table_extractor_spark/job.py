@@ -7,15 +7,17 @@ Replaces the reference's FastAPI + multiprocessing.Queue + Postgres job store
 - parallelism = partitions of the doc table (salted by ``doc_id``);
 - resumability = a checkpoint table of completed buckets; a re-run skips
   completed buckets entirely (reference analogue: skip-if-output-exists,
-  scripts/batch_pdf_table_extractor.py:32-34 → SURVEY §2 O6 left anti join);
-- per-bucket lineage/metrics = ``observe()`` on each bucket's input and
-  output during its one write pass, plus the table/error counts of the
-  one ``kind='stats'`` row every flat-mode Arrow batch emits.
+  scripts/batch_pdf_table_extractor.py:32-34 → SURVEY §2 O6);
+- per-bucket lineage/metrics = per-bucket conditional aggregates in one
+  ``observe()`` on each wave's input and output during its one write
+  pass, plus the table/error counts of the ``kind='stats'`` row every
+  flat-mode Arrow batch emits per bucket.
 
 At cluster scale the same code runs unchanged via ``spark-submit --py-files``:
-buckets are deterministic hash ranges of ``doc_id``, each bucket an
-independent, idempotent (overwrite) write — a killed run resumes at bucket
-granularity without reprocessing completed doc ranges.
+buckets are deterministic hash ranges of ``doc_id``, run in waves of
+contiguous buckets, each wave an idempotent staged write — a killed run
+resumes at wave granularity (one bucket per wave at production bucket
+sizes) without reprocessing completed doc ranges.
 """
 
 from __future__ import annotations
@@ -161,7 +163,10 @@ def _extraction(output_mode: str, **options):
     ``output_mode`` before any Spark work."""
     fn = make_map_in_arrow_fn(output_mode, **options)
     ddl = EXTRACTED_SPANS_DDL if output_mode == "spans" else NESTED_RESULT_DDL
-    return lambda df: df.mapInArrow(fn, ddl)
+    # an int bucket column passes through onto every output row
+    return lambda df: df.mapInArrow(
+        fn, ddl + (", bucket int" if "bucket" in df.columns else "")
+    )
 
 
 def extract(
@@ -219,17 +224,21 @@ def data_spans(out: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _read_checkpoint(spark: SparkSession, checkpoint_path: str):
-    try:
-        # recursive: checkpoint rows live in per-write subdirectories so M
-        # concurrent shard drivers never share a FileOutputCommitter
-        # staging dir (concurrent appends to ONE parquet dir can clobber
-        # each other's _temporary staging)
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(checkpoint_path)
-        )
-    except Exception:
+    """The checkpoint rows, or None when no checkpoint was written yet.
+    Any other read error raises: an unreadable checkpoint taken as empty
+    would silently re-run every bucket."""
+    fs, jvm = _fs(spark, checkpoint_path)
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(checkpoint_path)):
         return None
+    # recursive: checkpoint rows live in per-write subdirectories so M
+    # concurrent shard drivers never share a FileOutputCommitter staging
+    # dir (concurrent appends to ONE parquet dir can clobber each other's
+    # _temporary staging)
+    return (
+        spark.read.schema(CHECKPOINT_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(checkpoint_path)
+    )
 
 
 def completed_buckets(spark: SparkSession, checkpoint_path: str, run_id: str) -> set:
@@ -245,10 +254,50 @@ def completed_buckets(spark: SparkSession, checkpoint_path: str, run_id: str) ->
     return {r["bucket"] for r in rows}
 
 
-def resume_filter(input_df: DataFrame, done_docs: DataFrame) -> DataFrame:
-    """Doc-level resume: left anti join against already-processed doc_ids
-    (SURVEY §2 O6 — the reference's skip-if-output-exists)."""
-    return input_df.join(done_docs.select("doc_id").distinct(), "doc_id", "left_anti")
+# Each wave observes its buckets' metrics as conditional aggregates, a
+# cost per row linear in the wave's width: 16 buckets add ~3% to a
+# 6k-doc wave on 4 cores, 64 buckets ~40%.
+_MAX_WAVE = 16
+
+
+def _wave_width(spark: SparkSession, input_df: DataFrame, n_buckets: int) -> int:
+    """Buckets per wave: as many as fit in one scan's worth of input
+    splits, ``spark.sql.files.maxPartitionBytes`` x ``defaultParallelism``,
+    a bucket's input being the input files' total size / K; at least
+    one, at most ``_MAX_WAVE``. An input with no files (a synthesized
+    frame) has no size and runs one bucket per wave. The sizes come from
+    one listing per input directory."""
+    files = input_df.inputFiles()
+    if not files:
+        return 1
+    fs, jvm = _fs(spark, files[0])
+    P = jvm.org.apache.hadoop.fs.Path
+    by_dir: dict[str, tuple] = {}
+    for f in files:  # URI strings: escaped, so parse them as URIs
+        p = P(jvm.java.net.URI(f))
+        d = p.getParent()
+        by_dir.setdefault(d.toString(), (d, set()))[1].add(p.getName())
+    total = sum(
+        int(st.getLen())
+        for d, names in by_dir.values()
+        for st in fs.listStatus(d)
+        if st.getPath().getName() in names
+    )
+    budget = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    ) * spark.sparkContext.defaultParallelism
+    return max(1, min(_MAX_WAVE, budget * n_buckets // max(total, 1)))
+
+
+def _by_bucket(wave: list[int], metrics: dict) -> list:
+    """``observe()`` aggregates of ``metrics`` (name -> (aggregate,
+    expression)) per bucket of the wave: ``agg(when(bucket == b, expr))``
+    aliased ``<name>_<b>``."""
+    return [
+        agg(F.when(F.col("bucket") == b, expr)).alias(f"{name}_{b}")
+        for b in wave
+        for name, (agg, expr) in metrics.items()
+    ]
 
 
 def run_extraction(
@@ -272,10 +321,17 @@ def run_extraction(
 ) -> dict:
     """Run (or resume) the extraction over ``input_df``.
 
-    Buckets = pmod(xxhash64(doc_id), n_buckets); each bucket is extracted and
-    written independently (idempotent overwrite of its directory), then a
-    checkpoint row is appended. A killed run re-invoked with the same
-    ``run_id`` skips completed buckets.
+    Buckets = pmod(xxhash64(doc_id), n_buckets). The buckets still to do
+    run in contiguous waves (sized by ``_wave_width``; one bucket per wave
+    for a file-less input or a production-size bucket). A wave is one
+    scan, one salted exchange into ``partitions_per_bucket`` partitions
+    (partitions per wave), one ``mapInArrow`` and one staged
+    ``partitionBy("bucket")`` write through ``_rewrite_buckets``, the
+    write path compact/delete/upsert share; a bucket with no output row
+    is committed with one schema-only file. One checkpoint write then
+    appends a row per bucket of the wave, ``wall_ms`` being the wave's.
+    A killed run re-invoked with the same ``run_id`` skips completed
+    buckets: resume granularity and blast radius are one wave.
 
     ``output_mode``: "spans" (default) writes the flat span table;
     "nested" / "nested-colspans" write the S7 result-JSON table (one
@@ -284,22 +340,23 @@ def run_extraction(
     flat one. Any other mode raises ``ValueError`` before the
     bucket-count marker or any bucket is written.
 
-    Per-bucket checkpoint metrics are collected with ``df.observe()``
-    DURING the single write pass — no post-write re-read of the bucket
-    directory. In every mode ``n_docs``, ``n_spans_in`` and the doc_id
-    bounds are observed on the bucket's input, so they count every doc
-    processed, including docs that yield no output row; ``n_spans_out``
-    is observed on the output. ``n_tables``/``n_errors`` come from the
-    per-batch ``kind='stats'`` rows, which only the flat mode emits, so
-    nested checkpoint rows leave them at 0.
+    Per-bucket checkpoint metrics are per-bucket conditional aggregates
+    in one input and one output ``df.observe()`` per wave, collected
+    DURING the single write pass. In every mode ``n_docs``,
+    ``n_spans_in`` and the doc_id bounds are observed on the input, so
+    they count every doc processed, including docs that yield no output
+    row; ``n_spans_out`` is observed on the output. ``n_tables``/
+    ``n_errors`` come from the ``kind='stats'`` rows, one per Arrow batch
+    and bucket, which only the flat mode emits, so nested checkpoint
+    rows leave them at 0.
 
     ``buckets`` restricts the run to a subset of bucket ids: at large K an
     orchestrator can shard buckets across concurrent driver processes
     (each an independent, idempotent write + checkpoint append) instead of
-    this driver's serial loop — see docs/SCALE.md.
+    this driver's serial waves — see docs/SCALE.md.
 
-    ``fail_after_bucket`` injects a crash after that bucket commits — used by
-    the resume test.
+    ``fail_after_bucket`` injects a crash after that bucket commits — used
+    by the resume tests; a wave ends at the first bucket >= it.
 
     ``adopt_k`` opts into correcting a mistyped ``n_buckets`` on a
     data-free output (see ``_write_bucket_count_marker``); the default
@@ -308,7 +365,7 @@ def run_extraction(
     """
     from pyspark.sql import Observation
 
-    extract_bucket = _extraction(
+    extract_wave = _extraction(
         output_mode,
         excepted_lines=excepted_lines,
         excepted_pages=excepted_pages,
@@ -322,75 +379,92 @@ def run_extraction(
     )
     _write_bucket_count_marker(spark, output_path, n_buckets, adopt_k=adopt_k)
     done = completed_buckets(spark, checkpoint_path, run_id)
-    bucketed = input_df.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
+    bucketed = input_df.select("doc_id", "spans").withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
-    todo = buckets if buckets is not None else range(n_buckets)
+    requested = buckets if buckets is not None else range(n_buckets)
+    todo = [b for b in requested if b not in done]
     # skips are counted WITHIN the requested subset only: a shard driver's
     # summary must not conflate other shards' checkpoint rows with its own
     summary = {
         "run_id": run_id,
         "buckets_run": 0,
-        "buckets_skipped": len(done & set(todo)),
+        "buckets_skipped": len(done & set(requested)),
     }
-    is_stats = F.col("kind") == STATS_KIND
-
-    def _stat(field):
-        return F.sum(
-            F.when(is_stats, F.get_json_object("text", f"$.{field}"))
-            .cast("long")
-        ).alias(field)
-
+    in_metrics = {
+        "n_docs": (F.count, F.lit(1)),
+        # a null span list is 0 spans
+        "n_spans_in": (F.sum, F.coalesce(F.array_size("spans"), F.lit(0))),
+        "doc_id_min": (F.min, F.col("doc_id")),
+        "doc_id_max": (F.max, F.col("doc_id")),
+    }
     if output_mode == "spans":
-        out_metrics = [
-            F.sum(F.col("kind").isin(*DATA_KINDS).cast("long"))
-            .alias("n_spans_out"),
-            _stat("n_tables"),
-            _stat("n_errors"),
-        ]
-    else:  # one (doc_id, result) row per doc with a table
-        out_metrics = [F.count(F.lit(1)).alias("n_spans_out")]
+        is_stats = F.col("kind") == STATS_KIND
 
-    for b in todo:
-        if b in done:
-            continue
+        def _stat(field):
+            return F.when(
+                is_stats, F.get_json_object("text", f"$.{field}")
+            ).cast("long")
+
+        out_metrics = {
+            "n_spans_out": (
+                F.sum, F.col("kind").isin(*DATA_KINDS).cast("long")
+            ),
+            "n_tables": (F.sum, _stat("n_tables")),
+            "n_errors": (F.sum, _stat("n_errors")),
+        }
+    else:  # one (doc_id, result) row per doc with a table
+        out_metrics = {"n_spans_out": (F.count, F.lit(1))}
+
+    fs, jvm = _fs(spark, output_path)
+    width = _wave_width(spark, input_df, n_buckets) if todo else 1
+    while todo:
+        wave = todo[:width]
+        if fail_after_bucket is not None:
+            stop = [i for i, b in enumerate(wave) if b >= fail_after_bucket]
+            wave = wave[: stop[0] + 1] if stop else wave
+        todo = todo[len(wave):]
         t0 = time.time()
-        tag = f"{run_id}_{b}_{uuid.uuid4().hex[:6]}"
+        tag = f"{run_id}_{wave[0]}_{uuid.uuid4().hex[:6]}"
         obs_in = Observation(f"krt_in_{tag}")
         obs_out = Observation(f"krt_out_{tag}")
-        bdf = bucketed.filter(F.col("__bucket") == b).drop("__bucket")
-        bdf = salted_repartition(bdf, partitions_per_bucket, salt).observe(
-            obs_in,
-            F.count(F.lit(1)).alias("n_docs"),
-            # a null span list is 0 spans
-            F.sum(F.coalesce(F.array_size("spans"), F.lit(0)))
-            .alias("n_spans_in"),
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
+
+        def rows():
+            wdf = bucketed.filter(F.col("bucket").isin(*wave))
+            wdf = salted_repartition(wdf, partitions_per_bucket, salt)
+            wdf = wdf.observe(obs_in, *_by_bucket(wave, in_metrics))
+            return extract_wave(wdf).observe(
+                obs_out, *_by_bucket(wave, out_metrics)
+            )
+
+        _rewrite_buckets(
+            spark, fs, jvm, output_path, f"run_{tag}", wave, rows,
+            keep_empty=True,
         )
-        out = extract_bucket(bdf).observe(obs_out, *out_metrics)
-        bucket_dir = f"{output_path}/bucket={b}"
-        out.write.mode("overwrite").parquet(bucket_dir)
         m = obs_in.get | obs_out.get
+        wall_ms = int((time.time() - t0) * 1000)
+        now = datetime.datetime.now()
         spark.createDataFrame(
-            [(
-                run_id, b, m["doc_id_min"], m["doc_id_max"],
-                int(m["n_docs"]), int(m["n_spans_in"] or 0),
-                int(m["n_spans_out"] or 0), int(m.get("n_tables") or 0),
-                int(m.get("n_errors") or 0),
-                int((time.time() - t0) * 1000), "done",
-                datetime.datetime.now(),
-            )],
+            [
+                (
+                    run_id, b, m[f"doc_id_min_{b}"], m[f"doc_id_max_{b}"],
+                    int(m[f"n_docs_{b}"]), int(m[f"n_spans_in_{b}"] or 0),
+                    int(m[f"n_spans_out_{b}"] or 0),
+                    int(m.get(f"n_tables_{b}") or 0),
+                    int(m.get(f"n_errors_{b}") or 0),
+                    wall_ms, "done", now,
+                )
+                for b in wave
+            ],
             CHECKPOINT_SCHEMA,
         ).write.mode("overwrite").parquet(
             # one subdirectory per checkpoint write: concurrent shard
             # drivers touch disjoint paths (see _read_checkpoint)
-            f"{checkpoint_path}/cpw={run_id}_{b}_{uuid.uuid4().hex[:8]}"
+            f"{checkpoint_path}/cpw={run_id}_{wave[0]}_{uuid.uuid4().hex[:8]}"
         )
-        summary["buckets_run"] += 1
-        if fail_after_bucket is not None and b >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {b}")
+        summary["buckets_run"] += len(wave)
+        if fail_after_bucket is not None and wave[-1] >= fail_after_bucket:
+            raise RuntimeError(f"injected failure after bucket {wave[-1]}")
     return summary
 
 
@@ -642,7 +716,8 @@ def _swap_bucket_dir(fs, jvm, output_path: str, bucket: int, staging) -> None:
 
 
 def _rewrite_buckets(
-    spark, fs, jvm, output_path: str, name: str, buckets: list[int], rows
+    spark, fs, jvm, output_path: str, name: str, buckets: list[int], rows,
+    keep_empty: bool = False,
 ) -> int:
     """Replace each listed bucket's directory with its rows of ``rows()``
     — the one staged rewrite behind compact, delete and upsert.
@@ -658,7 +733,10 @@ def _rewrite_buckets(
     3. Commit each staged directory with the checked ``_swap_bucket_dir``
        — a metadata-only rename. A bucket that staged no rows swaps in
        an empty directory (every row removed is legal state), unless it
-       never existed (nothing to remove, nothing to add).
+       never existed (nothing to remove, nothing to add). With
+       ``keep_empty`` (the run) it swaps in a copy of one schema-only
+       file instead, so every bucket run is committed and an output
+       without a single row still reads as an empty table.
     4. Delete the stage root, however the rewrite ends.
 
     Returns the number of buckets swapped. Unlisted buckets are never
@@ -669,15 +747,28 @@ def _rewrite_buckets(
     try:
         for b in buckets:
             _recover_bucket(fs, jvm, output_path, b)
-        rows().write.mode("overwrite").partitionBy("bucket").parquet(
+        frame = rows()
+        frame.write.mode("overwrite").partitionBy("bucket").parquet(
             stage_root
         )
+        empty = P(f"{stage_root}/_empty")
         for b in buckets:
             staged = P(f"{stage_root}/bucket={b}")
             if not fs.exists(staged):
-                if not fs.exists(P(f"{output_path}/bucket={b}")):
+                if keep_empty:
+                    if not fs.exists(empty):
+                        spark.createDataFrame(
+                            [], frame.drop("bucket").schema
+                        ).write.parquet(empty.toString())
+                    if not jvm.org.apache.hadoop.fs.FileUtil.copy(
+                        fs, empty, fs, staged, False,
+                        spark._jsc.hadoopConfiguration(),
+                    ):
+                        raise IOError(f"copying {empty} to {staged} failed")
+                elif fs.exists(P(f"{output_path}/bucket={b}")):
+                    fs.mkdirs(staged)
+                else:
                     continue
-                fs.mkdirs(staged)
             _swap_bucket_dir(fs, jvm, output_path, b, staged)
             swapped += 1
     finally:

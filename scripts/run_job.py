@@ -45,7 +45,9 @@ def main(argv=None):
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--run-id", default=None)
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--partitions", type=int, default=None,
+                   help="partitions per bucket wave (default: the "
+                        "session's default parallelism)")
     p.add_argument("--salt", type=int, default=0)
     p.add_argument("--master", default=None, help="e.g. local[8]")
     p.add_argument("--fail-after-bucket", type=int, default=None,

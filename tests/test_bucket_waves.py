@@ -1,0 +1,224 @@
+"""Bucket waves in ``run_extraction``: many buckets share one scan, one
+exchange, one staged write and one checkpoint append, and a wave's
+checkpoint rows, output and resume behaviour equal those of running its
+buckets one at a time."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from key_resource_table_extractor_spark import job, synth
+from key_resource_table_extractor_spark.extractor.pipeline import (
+    make_map_in_arrow_fn,
+)
+
+SPANS_TYPE = pa.list_(pa.struct([
+    ("kind", pa.string()), ("text", pa.string()),
+    ("media_ref", pa.string()), ("offset", pa.int32()),
+]))
+# a text span with a null offset: its doc extracts to one error row
+BAD_DOC = ("doc_null_offset", [
+    {"kind": "text", "text": "Antibody  Source  Identifier",
+     "media_ref": "", "offset": None},
+])
+
+
+def _spans_table(n_docs: int) -> pa.Table:
+    """``n_docs`` synth docs plus ``BAD_DOC``."""
+    ids = [f"doc_5_{i:07d}" for i in range(n_docs)]
+    spans = [
+        [dict(kind=k, text=t, media_ref=m, offset=o)
+         for k, t, m, o in synth.generate_doc(d, 5)]
+        for d in ids
+    ]
+    ids.append(BAD_DOC[0])
+    spans.append(BAD_DOC[1])
+    return pa.table({"doc_id": ids, "spans": pa.array(spans, SPANS_TYPE)})
+
+
+def _file_input(spark, path: str, n_docs: int = 120, files: int = 3):
+    """A parquet spans table on disk, so ``inputFiles()`` sizes the waves."""
+    t = _spans_table(n_docs)
+    os.makedirs(path)
+    for j in range(files):
+        pq.write_table(t.take(list(range(j, t.num_rows, files))),
+                       f"{path}/part-{j}.parquet")
+    return job.read_spans(spark, path)
+
+
+def _cp_rows(spark, cp: str) -> dict:
+    rows = job._read_checkpoint(spark, cp).drop("wall_ms", "ts").collect()
+    by_bucket = {r["bucket"]: r.asDict() for r in rows}
+    assert len(by_bucket) == len(rows), "one checkpoint row per bucket"
+    return by_bucket
+
+
+def _out_rows(spark, out: str) -> list:
+    return sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("bucket", "doc_id", "seq", "kind", "text", "media_ref",
+                "offset")
+        .where(F.col("kind") != job.STATS_KIND).collect()
+    )
+
+
+def _waves(cp: str) -> int:
+    """Checkpoint writes, one per wave."""
+    return sum(n.startswith("cpw=") for n in os.listdir(cp))
+
+
+def test_bucket_column_passes_through_every_output_row():
+    """In process: a batch with a ``bucket`` column is extracted bucket
+    by bucket, every output row carries its doc's bucket, and each
+    bucket's rows, stats row included, equal extracting that bucket's
+    docs on their own."""
+    t = _spans_table(40)
+    buckets = pa.array([i % 3 for i in range(t.num_rows)], pa.int32())
+    batch = t.append_column("bucket", buckets).to_batches()[0]
+    for mode in ("spans", "nested"):
+        fn = make_map_in_arrow_fn(mode)
+        got = pa.Table.from_batches(list(fn([batch]))).to_pandas()
+        for b in range(3):
+            alone = t.filter(pa.compute.equal(buckets, b)).to_batches()[0]
+            exp = pa.Table.from_batches(list(fn([alone]))).to_pandas()
+            part = got[got.bucket == b].drop(columns="bucket")
+            assert part.reset_index(drop=True).equals(exp), (mode, b)
+        assert len(got) == sum(
+            (got.bucket == b).sum() for b in range(3)), mode
+    flat = pa.Table.from_batches(list(
+        make_map_in_arrow_fn()([batch]))).to_pandas()
+    assert sorted(flat[flat.kind == "stats"].bucket) == [0, 1, 2]
+    # no bucket column: unchanged single extraction, one stats row
+    plain = pa.Table.from_batches(list(make_map_in_arrow_fn()(
+        [t.to_batches()[0]]))).to_pandas()
+    assert "bucket" not in plain.columns
+    assert (plain.kind == "stats").sum() == 1
+
+
+def test_wave_checkpoint_rows_equal_per_bucket_runs(spark, tmp_path):
+    """One call over a file input runs all K=4 buckets as one wave; four
+    ``buckets=[b]`` calls run one bucket each. Checkpoint rows (bar
+    ``wall_ms``/``ts``), table and error counts included, and output
+    rows are equal per bucket. A bucket with no output row is still a
+    committed ``bucket=N`` directory with a checkpoint row."""
+    inp = _file_input(spark, str(tmp_path / "in"))
+    one, one_cp = str(tmp_path / "one"), str(tmp_path / "one_cp")
+    s = job.run_extraction(spark, inp, one, one_cp, run_id="w", n_buckets=4)
+    assert s["buckets_run"] == 4 and _waves(one_cp) == 1
+    per, per_cp = str(tmp_path / "per"), str(tmp_path / "per_cp")
+    for b in range(4):
+        job.run_extraction(spark, inp, per, per_cp, run_id="w",
+                           n_buckets=4, buckets=[b])
+    assert _waves(per_cp) == 4
+    rows = _cp_rows(spark, one_cp)
+    assert rows == _cp_rows(spark, per_cp)
+    assert sorted(rows) == [0, 1, 2, 3]
+    assert sum(r["n_docs"] for r in rows.values()) == 121
+    assert sum(r["n_errors"] for r in rows.values()) == 1
+    assert sum(r["n_tables"] for r in rows.values()) > 0
+    assert _out_rows(spark, one) == _out_rows(spark, per)
+    err = [r for r in _out_rows(spark, one) if r[3] == job.ERROR_KIND]
+    assert [r[1] for r in err] == [BAD_DOC[0]]
+    bad_bucket = spark.createDataFrame([(BAD_DOC[0],)], "doc_id string") \
+        .select(F.pmod(F.xxhash64("doc_id"), F.lit(4))).first()[0]
+    assert err[0][0] == bad_bucket
+    assert rows[bad_bucket]["n_errors"] == 1
+
+    # every bucket of a wave without a single output row is committed,
+    # and the output still reads as an empty table
+    empty, empty_cp = str(tmp_path / "empty"), str(tmp_path / "empty_cp")
+    job.run_extraction(spark, inp.where(F.length("doc_id") < 0), empty,
+                       empty_cp, run_id="e", n_buckets=4)
+    assert sorted(n for n in os.listdir(empty) if n.startswith("bucket=")) \
+        == [f"bucket={b}" for b in range(4)]
+    assert job.read_output(spark, empty).count() == 0
+    assert job.output_status(spark, empty)["staging_leftovers"] == []
+    assert {b: r["n_docs"] for b, r in _cp_rows(spark, empty_cp).items()} \
+        == {0: 0, 1: 0, 2: 0, 3: 0}
+    assert job.completed_buckets(spark, empty_cp, "e") == {0, 1, 2, 3}
+
+
+def test_job_count_constant_in_k_within_one_wave(spark, tmp_path):
+    """Counted with a job group: a small file input that fits one wave
+    runs the same number of Spark jobs per ``run_extraction`` call at
+    K=4 and K=16. A synthesized input (no files to size the waves by)
+    still runs one bucket per wave."""
+    inp = _file_input(spark, str(tmp_path / "in"), n_docs=60)
+    sc = spark.sparkContext
+    jobs = {}
+    for k in (4, 16, 4):  # the repeat shows the count is not warm-up
+        group = f"krt-waves-{k}-{len(jobs)}"
+        cp = str(tmp_path / f"cp_{group}")
+        sc.setJobGroup(group, "wave job count under test")
+        try:
+            job.run_extraction(spark, inp, str(tmp_path / f"o_{group}"),
+                               cp, run_id="j", n_buckets=k)
+        finally:
+            sc.setJobGroup("", "")
+        assert _waves(cp) == 1
+        jobs[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(set(jobs.values())) == 1, jobs
+
+    cp = str(tmp_path / "synth_cp")
+    s = job.run_extraction(spark, job.synthesize_spans(spark, 40), str(
+        tmp_path / "synth_out"), cp, run_id="s", n_buckets=4)
+    assert s["buckets_run"] == 4 and _waves(cp) == 4
+
+
+def test_wave_rerun_without_checkpoint_is_idempotent(spark, tmp_path):
+    """A wave whose checkpoint rows are lost re-runs as an overwrite:
+    same rows, no duplicates, no staging leftovers."""
+    # a space in the input path: inputFiles() returns escaped URIs
+    inp = _file_input(spark, str(tmp_path / "in put"), n_docs=60)
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    job.run_extraction(spark, inp, out, cp, run_id="i", n_buckets=4)
+    first = _out_rows(spark, out)
+    shutil.rmtree(cp)
+    s = job.run_extraction(spark, inp, out, cp, run_id="i", n_buckets=4)
+    assert s["buckets_run"] == 4 and s["buckets_skipped"] == 0
+    again = _out_rows(spark, out)
+    assert again == first and len(set(again)) == len(again)
+    assert job.output_status(spark, out)["staging_leftovers"] == []
+
+
+def test_fail_after_bucket_ends_the_wave(spark, tmp_path):
+    """``fail_after_bucket=b`` keeps its meaning under waves: buckets up
+    to b commit, the error names b, and the resume runs the rest."""
+    inp = _file_input(spark, str(tmp_path / "in"), n_docs=60)
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    with pytest.raises(RuntimeError, match="injected failure after bucket 2"):
+        job.run_extraction(spark, inp, out, cp, run_id="f", n_buckets=8,
+                           fail_after_bucket=2)
+    assert job.completed_buckets(spark, cp, "f") == {0, 1, 2}
+    s = job.run_extraction(spark, inp, out, cp, run_id="f", n_buckets=8)
+    assert s["buckets_skipped"] == 3 and s["buckets_run"] == 5
+    assert _waves(cp) == 2
+
+
+def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
+    """An unreadable checkpoint raises instead of reading as "no bucket
+    done", which would silently re-run every bucket."""
+    inp = job.synthesize_spans(spark, 30)
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    job.run_extraction(spark, inp, out, cp, run_id="c", n_buckets=2)
+    files = [os.path.join(d, f) for d, _, fs in os.walk(cp) for f in fs
+             if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    mtimes = {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _, fs in os.walk(out) for f in fs
+    }
+    with pytest.raises(Exception):
+        job.run_extraction(spark, inp, out, cp, run_id="c", n_buckets=2)
+    assert {p: os.path.getmtime(p) for p in mtimes} == mtimes
+    # a checkpoint path that does not exist yet is simply empty
+    assert job._read_checkpoint(spark, str(tmp_path / "none")) is None

@@ -92,15 +92,6 @@ def test_bucket_subset_sharding(spark, tmp_path):
     )
 
 
-def test_doc_level_resume_filter(spark):
-    inp = job.synthesize_spans(spark, 50, partitions=2)
-    done = inp.limit(20).select("doc_id")
-    remaining = job.resume_filter(inp, done)
-    assert remaining.count() == 30
-    # anti-join is disjoint from done set
-    assert remaining.join(done, "doc_id", "inner").count() == 0
-
-
 def test_determinism_across_salts_and_partitioning(spark):
     inp = job.synthesize_spans(spark, N_DOCS, partitions=3)
     a = sorted_pdf(
