@@ -24,10 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from key_resource_table_extractor_spark import job  # noqa: E402
 from key_resource_table_extractor_spark import operators  # noqa: E402
-from key_resource_table_extractor_spark.schemas import (  # noqa: E402
-    DOCUMENT_SPANS_SCHEMA,
-    NESTED_RESULT_DDL,
-)
 
 
 def _spans_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,22 +31,7 @@ def _spans_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from key_resource_table_extractor_spark import synth
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                key = f"sfdoc_{int(did)}"
-                spans = [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for (k, t, m, o) in synth.generate_doc(key)
-                ]
-                rows.append((key, spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return docs.mapInPandas(gen, DOCUMENT_SPANS_SCHEMA)
+    return job.generate_spans(docs, key_format=synth.SF_KEY_FORMAT)
 
 
 def _doc_ids_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,7 +68,7 @@ def q_extract_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fused synth+extract like the flat path."""
     ids = _doc_ids_partitioned(spark, sf_dir)
     return ids.mapInArrow(
-        job.make_synth_extract_fn(output_mode="nested"), NESTED_RESULT_DDL
+        job.make_synth_extract_fn(output_mode="nested"), job.NESTED_RESULT_DDL
     )
 
 
@@ -103,7 +84,7 @@ def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
         job.make_synth_extract_fn(
             output_mode="nested-colspans", row_model="anchor"
         ),
-        NESTED_RESULT_DDL,
+        job.NESTED_RESULT_DDL,
     )
 
 

@@ -62,7 +62,7 @@ def main():
     sc = spark.sparkContext
 
     if "extract_decomp" in cases:
-        # 1. synthesis only (current shape: scan -> mapInPandas gen)
+        # 1. synthesis only (scan -> mapInArrow generate_spans)
         sc.setJobDescription("synth only")
         timed(
             spark,

@@ -972,6 +972,29 @@ def _decode_spans(rb: pa.RecordBatch):
     return columns, null_offset
 
 
+_SPAN_TYPE = pa.struct([
+    ("kind", pa.string()), ("text", pa.string()),
+    ("media_ref", pa.string()), ("offset", pa.int32()),
+])
+
+
+def encode_spans(columns) -> pa.RecordBatch:
+    """``_decode_spans``'s inverse: ``extract_columnar`` columns whose
+    spans are grouped by doc, in doc order, as one ``(doc_id, spans)``
+    batch in the layout of ``schemas.DOCUMENT_SPANS_SCHEMA``."""
+    doc_ids, span_doc, *fields = columns
+    bounds = np.r_[0, np.bincount(span_doc, minlength=len(doc_ids)).cumsum()]
+    spans = pa.StructArray.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(fields, _SPAN_TYPE)],
+        fields=list(_SPAN_TYPE),
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array(doc_ids, type=pa.string()),
+         pa.ListArray.from_arrays(pa.array(bounds, type=pa.int32()), spans)],
+        names=["doc_id", "spans"],
+    )
+
+
 def _flat_batch(out: dict) -> pa.RecordBatch:
     """``extract_columnar`` output as ``OUTPUT_COLUMNS`` span rows."""
     return pa.RecordBatch.from_arrays(

@@ -30,7 +30,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
-from .extractor.pipeline import make_extract_fn, make_map_in_arrow_fn
+from .extractor.pipeline import (
+    encode_spans,
+    make_extract_fn,
+    make_map_in_arrow_fn,
+)
 from .schemas import (
     CHECKPOINT_SCHEMA,
     DOCUMENT_SPANS_SCHEMA,
@@ -55,81 +59,59 @@ def read_spans(spark: SparkSession, path: str) -> DataFrame:
 def synthesize_spans(
     spark: SparkSession, n_docs: int, seed: int = 42, partitions: int | None = None
 ) -> DataFrame:
-    """Distributed deterministic corpus: spark.range → mapInPandas generator.
+    """Distributed deterministic corpus: ``spark.range`` over
+    ``partitions`` (default: the default parallelism) → ``generate_spans``,
+    doc ids keyed by ``synth.KEY_FORMAT``.
 
     Generation is keyed by doc_id only (synth._rng), so the corpus is
     identical at any partitioning — scalable to arbitrary n_docs with no
     driver-side materialization.
     """
     partitions = partitions or spark.sparkContext.defaultParallelism
+    ids = spark.range(0, n_docs, numPartitions=partitions)
+    return generate_spans(ids, seed)
+
+
+def generate_spans(
+    ids: DataFrame, seed: int = 42, key_format: str = synth.KEY_FORMAT
+) -> DataFrame:
+    """``(doc_id, spans)`` table of the synth docs keyed by the integer
+    ids of ``ids``' one column: one ``mapInArrow`` running
+    ``synth.generate_columns`` → ``pipeline.encode_spans`` per batch."""
 
     def gen(batches):
-        import pandas as pd
+        for rb in batches:
+            yield encode_spans(synth.generate_columns(
+                rb.column(0).to_pylist(), seed, key_format
+            ))
 
-        for pdf in batches:
-            ids = [f"doc_{seed}_{int(i):07d}" for i in pdf["id"]]
-            rows = []
-            for doc_id in ids:
-                spans = [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for (k, t, m, o) in synth.generate_doc(doc_id, seed)
-                ]
-                rows.append((doc_id, spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return (
-        spark.range(0, n_docs, numPartitions=partitions)
-        .mapInPandas(gen, DOCUMENT_SPANS_SCHEMA)
-    )
+    return ids.mapInArrow(gen, DOCUMENT_SPANS_SCHEMA)
 
 
 def make_synth_extract_fn(
     seed: int = 42,
-    key_format: str = "sfdoc_{}",
+    key_format: str = synth.SF_KEY_FORMAT,
     output_mode: str = "spans",
     **options,
 ):
-    """Fused synth+extract ``mapInArrow`` fn over a bare ``doc_id`` frame.
+    """Fused synth+extract ``mapInArrow`` fn over a bare ``doc_id`` frame:
+    per batch, ``synth.generate_columns`` then the ``make_extract_fn``
+    step every other extraction runs (``options`` are its options).
 
-    The un-fused shape (generate spans → Arrow → exchange → Arrow →
-    extract) pays for the span payload three times: pandas→Arrow struct
-    serialization out of the generator, a full shuffle of the generated
-    text, and Arrow→numpy back into the extractor. Fusing keeps the spans
-    as plain Python tuples inside ONE task (guide §8: shuffle the 8-byte
-    doc ids, never the payload) — the only rows that ever cross Arrow are
-    the extraction OUTPUT rows. Only the input adapter is its own: the
-    generated spans go through the same ``make_extract_fn`` step as every
-    other extraction (``options`` are its options). Byte-identical
-    results: generation is keyed by doc_id only and extraction is a pure
-    per-doc function (pinned by tests/test_modes_and_nested.py
-    fused-equality tests).
+    The unfused shape (``generate_spans`` → exchange → extract) encodes
+    the span payload to Arrow, shuffles it and decodes it again. Fused,
+    the generated columns go straight into the extraction inside ONE task
+    (guide §8: shuffle the 8-byte doc ids, never the payload); only the
+    extraction output crosses Arrow. Results are identical: generation is
+    keyed by doc_id only and extraction is a pure per-doc function
+    (pinned by tests/test_modes_and_nested.py fused-equality tests).
     """
-    import numpy as np
-
     extract_fn = make_extract_fn(output_mode, **options)
 
     def fn(batches):
-        gen = synth.generate_doc
         for rb in batches:
-            ids = rb.column("doc_id").to_pylist()
-            keys = [key_format.format(i) for i in ids]
-            lens = np.empty(len(keys), dtype=np.int64)
-            flat: list[tuple] = []
-            for j, k in enumerate(keys):
-                sp = gen(k, seed)
-                lens[j] = len(sp)
-                flat.extend(sp)
-            if flat:
-                kinds, texts, media, offs = zip(*flat)
-            else:
-                kinds = texts = media = offs = ()
-            yield extract_fn((
-                np.array(keys, dtype=object),
-                np.repeat(np.arange(len(keys)), lens),
-                np.array(kinds, dtype=object),
-                np.array(texts, dtype=object),
-                np.array(media, dtype=object),
-                np.array(offs, dtype=np.int64),
+            yield extract_fn(synth.generate_columns(
+                rb.column("doc_id").to_pylist(), seed, key_format
             ))
 
     return fn
@@ -350,8 +332,9 @@ def run_extraction(
     and bucket, which only the flat mode emits, so nested checkpoint
     rows leave them at 0.
 
-    ``buckets`` restricts the run to a subset of bucket ids: at large K an
-    orchestrator can shard buckets across concurrent driver processes
+    ``buckets`` restricts the run to a subset of distinct bucket ids in
+    ``range(n_buckets)``, else ``ValueError`` before any write: at large K
+    an orchestrator can shard buckets across concurrent driver processes
     (each an independent, idempotent write + checkpoint append) instead of
     this driver's serial waves — see docs/SCALE.md.
 
@@ -373,6 +356,13 @@ def run_extraction(
         gap_min_spaces=gap_min_spaces,
         midcol_rowspans=midcol_rowspans,
     )
+    if buckets is not None and (
+        len(set(buckets)) != len(buckets)
+        or not set(buckets) <= set(range(n_buckets))
+    ):
+        raise ValueError(
+            f"buckets={buckets} must be distinct ids in range({n_buckets})"
+        )
     run_id = run_id or uuid.uuid4().hex[:12]
     partitions_per_bucket = (
         partitions_per_bucket or spark.sparkContext.defaultParallelism
@@ -740,7 +730,11 @@ def _rewrite_buckets(
     4. Delete the stage root, however the rewrite ends.
 
     Returns the number of buckets swapped. Unlisted buckets are never
-    touched: their files stay byte-identical."""
+    touched: their files stay byte-identical. A repeated bucket id raises
+    ``ValueError`` before anything is written (its second swap would
+    commit an empty directory over the first)."""
+    if len(set(buckets)) != len(buckets):
+        raise ValueError(f"repeated bucket id in {buckets}")
     P = jvm.org.apache.hadoop.fs.Path
     stage_root = f"{output_path}.staging/{name}"
     swapped = 0

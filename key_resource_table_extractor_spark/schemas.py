@@ -22,17 +22,6 @@ DOCUMENT_SPANS_SCHEMA = T.StructType(
 )
 
 # output: one row per extracted span, ordered by (doc_id, seq)
-EXTRACTED_SPANS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), False),
-    ]
-)
-
 EXTRACTED_SPANS_DDL = (
     "doc_id string, seq int, kind string, text string, media_ref string, offset int"
 )

@@ -13,7 +13,10 @@ dropped), blank lines, single-row fragments, and mega-doc skew.
 from __future__ import annotations
 
 import zlib
+from itertools import chain
 from random import Random
+
+import numpy as np
 
 from . import spec
 
@@ -37,6 +40,11 @@ PROSE = (
 COL_WIDTHS = (24, 20, 22)  # REAGENT | SOURCE | IDENTIFIER
 MEGA_DOC_EVERY = 97  # 1 in 97 docs is a mega doc (skew driver)
 MEGA_FACTOR = 60
+
+# doc keys, ``key_format.format(i, seed=seed)``: KEY_FORMAT for
+# job.synthesize_spans, SF_KEY_FORMAT for the sf documents table's ids
+KEY_FORMAT = "doc_{seed}_{:07d}"
+SF_KEY_FORMAT = "sfdoc_{}"
 
 
 def _rng(doc_id: str, seed: int = 42) -> Random:
@@ -158,14 +166,17 @@ def generate_doc(doc_id: str, seed: int = 42) -> list[tuple]:
     return generate_doc_with_gold(doc_id, seed)[0]
 
 
-def generate_corpus(n_docs: int, seed: int = 42) -> list[tuple]:
-    """[(doc_id, [span struct dicts])] rows ready for spark.createDataFrame."""
-    rows = []
-    for i in range(n_docs):
-        doc_id = f"doc_{seed}_{i:07d}"
-        spans = [
-            {"kind": k, "text": t, "media_ref": m, "offset": o}
-            for (k, t, m, o) in generate_doc(doc_id, seed)
-        ]
-        rows.append((doc_id, spans))
-    return rows
+def generate_columns(ids, seed: int = 42, key_format: str = KEY_FORMAT):
+    """The docs keyed ``key_format.format(i, seed=seed)`` for ``i`` in
+    ``ids`` as the columnar tuple ``pipeline.extract_columnar`` takes,
+    ``(doc_ids, span_doc, kinds, texts, media_refs, offsets)``: each doc's
+    spans contiguous and in doc order, ``span_doc`` their doc index."""
+    keys = [key_format.format(i, seed=seed) for i in ids]
+    docs = [generate_doc(k, seed) for k in keys]
+    kinds, texts, media, offs = tuple(zip(*chain(*docs))) or ((),) * 4
+    return (
+        np.array(keys, dtype=object),
+        np.repeat(np.arange(len(keys)), [len(d) for d in docs]),
+        *(np.array(c, dtype=object) for c in (kinds, texts, media)),
+        np.array(offs, dtype=np.int64),
+    )

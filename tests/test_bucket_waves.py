@@ -222,3 +222,24 @@ def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
     assert {p: os.path.getmtime(p) for p in mtimes} == mtimes
     # a checkpoint path that does not exist yet is simply empty
     assert job._read_checkpoint(spark, str(tmp_path / "none")) is None
+
+
+def test_repeated_or_out_of_range_bucket_ids_are_rejected(spark, tmp_path):
+    """A repeated bucket id would stage its rows once and then swap an
+    empty directory over them; an id outside ``range(n_buckets)`` would
+    commit a bucket that K does not have. The run refuses both before it
+    writes the marker; compact, through the staged rewrite it shares with
+    delete and upsert, refuses a repeated id and leaves the bucket as is."""
+    inp = _file_input(spark, str(tmp_path / "in"), n_docs=60)
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    for bad in ([1, 1], [9], [-1]):
+        with pytest.raises(ValueError, match="distinct ids in range"):
+            job.run_extraction(spark, inp, out, cp, run_id="g", n_buckets=4,
+                               buckets=bad)
+    assert not os.path.exists(out) and not os.path.exists(cp)
+    job.run_extraction(spark, inp, out, cp, run_id="g", n_buckets=4)
+    rows = _out_rows(spark, out)
+    assert any(b == 0 for b, *_ in rows)
+    with pytest.raises(ValueError, match="repeated bucket id"):
+        job.compact_output(spark, out, buckets=[0, 0])
+    assert _out_rows(spark, out) == rows

@@ -16,12 +16,18 @@ from tests.conftest import extract_batch
 N_DOCS = 300
 
 
+def corpus(n_docs):
+    """``(doc_id, spans)`` of the first ``n_docs`` rows of
+    ``job.synthesize_spans``, keyed by the one doc-key rule."""
+    for i in range(n_docs):
+        doc_id = synth.KEY_FORMAT.format(i, seed=42)
+        yield doc_id, synth.generate_doc(doc_id)
+
+
 def oracle_frame(n_docs):
     rows = []
-    for doc_id, spans in synth.generate_corpus(n_docs):
-        out = oracle.extract_document(
-            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-        )
+    for doc_id, spans in corpus(n_docs):
+        out = oracle.extract_document(spans)
         for seq, kind, text, media_ref, offset in out:
             rows.append((doc_id, seq, kind, text, media_ref, offset))
     return pd.DataFrame(
@@ -62,11 +68,8 @@ def test_excepted_lines_equality_through_spark(spark):
         .reset_index(drop=True)
     )
     rows = []
-    for doc_id, spans in synth.generate_corpus(n):
-        out = oracle.extract_document(
-            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans],
-            **kw,
-        )
+    for doc_id, spans in corpus(n):
+        out = oracle.extract_document(spans, **kw)
         for seq, kind, text, media_ref, offset in out:
             rows.append((doc_id, seq, kind, text, media_ref, offset))
     exp = (
