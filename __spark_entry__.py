@@ -50,12 +50,9 @@ def _doc_ids_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full extraction cascade (SURVEY §7.2 v1–v2 semantics).
-    Fused synth+extract in one mapInArrow stage (make_synth_extract_fn)."""
+    Fused synth+extract in one mapInArrow stage (job.synth_extract)."""
     ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInArrow(
-        job.make_synth_extract_fn(), job.EXTRACTED_SPANS_DDL
-    )
-    return job.data_spans(out)
+    return job.data_spans(job.synth_extract(ids))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -66,10 +63,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_extract_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested result-JSON variant of the flagship (reference S7 shape).
     Fused synth+extract like the flat path."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInArrow(
-        job.make_synth_extract_fn(output_mode="nested"), job.NESTED_RESULT_DDL
-    )
+    return job.synth_extract(_doc_ids_partitioned(spark, sf_dir), "nested")
 
 
 def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,24 +73,18 @@ def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     physically-evident mid-row spans), rowspans from the anchor row
     model's fold evidence (an anchor-less source line with >=2 non-empty
     cells is a covered detected row, not a wrap fragment)."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInArrow(
-        job.make_synth_extract_fn(
-            output_mode="nested-colspans", row_model="anchor"
-        ),
-        job.NESTED_RESULT_DDL,
+    return job.synth_extract(
+        _doc_ids_partitioned(spark, sf_dir), "nested-colspans",
+        row_model="anchor",
     )
 
 
 def q_extract_spans_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship under the detected-row merge model (J4 analog,
     row_model="anchor") instead of the continuation-vote model."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInArrow(
-        job.make_synth_extract_fn(row_model="anchor"),
-        job.EXTRACTED_SPANS_DDL,
-    )
-    return job.data_spans(out)
+    return job.data_spans(job.synth_extract(
+        _doc_ids_partitioned(spark, sf_dir), row_model="anchor"
+    ))
 
 
 # the driver's correctness gate records exactly the FIRST 50 queries()

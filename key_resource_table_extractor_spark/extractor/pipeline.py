@@ -41,7 +41,6 @@ def _seg_re(gap_min_spaces: int):
         return _SEG_RE
     return re.compile(spec.segment_regex(gap_min_spaces))
 _RRID_PAT = spec.RRID_REGEX
-_KIND_ERROR = "error"
 
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
 NESTED_COLUMNS = ["doc_id", "result"]
@@ -668,7 +667,7 @@ def extract_columnar(
         except Exception:  # per-doc isolation (reference stores err_msg)
             n_errors += 1
             _append_meta_row(
-                out, str(doc_ids[d]), _KIND_ERROR,
+                out, str(doc_ids[d]), spec.KIND_ERROR,
                 traceback.format_exc()[-500:],
             )
 
@@ -692,7 +691,8 @@ def extract_columnar(
             "partition_id": int(partition_id),
         }
         _append_meta_row(
-            out, "__stats__", "stats", json.dumps(stats, sort_keys=True)
+            out, "__stats__", spec.KIND_STATS,
+            json.dumps(stats, sort_keys=True),
         )
 
     # seq: 0-based per doc in emission order (docs are emitted contiguously),
@@ -719,7 +719,9 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
     [{"rows": [[cell, ...], ...]}]}]}}`` (reference
     HybridTableTextContentExtractor.java:87-107, row_merger.py:180-204;
     FIXTURES.md §4). One extracted region = one page with one table.
-    Docs without a table (and error docs) get no row.
+    Docs without a table get no row. A doc whose extraction failed gets
+    ``{"paper_id": ..., "result": {"pages": []}, "error": ...}``, the
+    error text being that of its flat ``kind='error'`` row.
 
     ``with_colspans=True`` (``out`` must then carry the extents of
     ``extract_columnar(..., with_extents=True)``) emits cells as
@@ -777,7 +779,10 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
     fullspan: dict[tuple, bool] = {}
     extents: dict[tuple, tuple] = {}
     rowspans: dict[tuple, dict[int, int]] = {}  # row key -> {col: span}
+    errors: dict[str, str] = {}
     for i in range(len(out["doc_id"])):
+        if out["kind"][i] == spec.KIND_ERROR:
+            errors[out["doc_id"][i]] = out["text"][i]
         if out["kind"][i] != spec.KIND_TEXT:
             continue
         d = docs.setdefault(out["doc_id"][i], {})
@@ -795,6 +800,13 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
                     out["rowspan"][i]
                 )
     ids, results = [], []
+    for doc_id, error in errors.items():
+        docs.pop(doc_id, None)  # tables emitted before it failed: no pages
+        ids.append(doc_id)
+        results.append(json.dumps(
+            {"paper_id": doc_id, "result": {"pages": []}, "error": error},
+            sort_keys=True,
+        ))
     for doc_id in sorted(docs):
         pages = []
         for t in sorted(docs[doc_id]):

@@ -1,36 +1,1 @@
-"""Reusable column-expression library (all JVM-side built-ins, no UDFs).
-
-These are the scalar/array functions of SURVEY.md §2.7 and the vector math
-used by the similarity operators, importable independently of the operator
-modules.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
-
-from ..operators.similarity import cosine_expr  # noqa: F401
-
-
-def whitespace_tokens(col="text") -> Column:
-    """C3 whitespace tokenizer (count via size)."""
-    return F.split(F.trim(F.col(col) if isinstance(col, str) else col), r"\s+")
-
-
-def normalized_fingerprint(col="text") -> Column:
-    """Document fingerprint: md5 over lowercased alphanumerics."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.regexp_replace(F.lower(c), "[^a-z0-9]", ""))
-
-
-def overlap_ratio(lo1, hi1, lo2, hi2) -> Column:
-    """C2 interval overlap ratio (overlap / smaller span)."""
-    ov = F.least(hi1, hi2) - F.greatest(lo1, lo2)
-    denom = F.least(hi1 - lo1, hi2 - lo2)
-    return F.when(denom > 0, F.greatest(ov, F.lit(0)) / denom).otherwise(F.lit(0.0))
-
-
-def rrid_predicate(col="text") -> Column:
-    """F4: line mentions an RRID (case-insensitive word boundary)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike(r"(?i)\brrid")
+"""Result renderings as column expressions (``render.py``; no UDFs)."""

@@ -10,8 +10,8 @@ Replaces the reference's FastAPI + multiprocessing.Queue + Postgres job store
   scripts/batch_pdf_table_extractor.py:32-34 → SURVEY §2 O6);
 - per-bucket lineage/metrics = per-bucket conditional aggregates in one
   ``observe()`` on each wave's input and output during its one write
-  pass, plus the table/error counts of the ``kind='stats'`` row every
-  flat-mode Arrow batch emits per bucket.
+  pass: table/error counts from the ``kind='stats'`` row every flat-mode
+  Arrow batch emits per bucket, or from the nested result rows.
 
 At cluster scale the same code runs unchanged via ``spark-submit --py-files``:
 buckets are deterministic hash ranges of ``doc_id``, run in waves of
@@ -30,6 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
+from .spec import DATA_KINDS, KIND_STATS as STATS_KIND
 from .extractor.pipeline import (
     encode_spans,
     make_extract_fn,
@@ -41,10 +42,6 @@ from .schemas import (
     EXTRACTED_SPANS_DDL,
     NESTED_RESULT_DDL,
 )
-
-STATS_KIND = "stats"
-ERROR_KIND = "error"
-DATA_KINDS = ("text", "media")
 
 
 # --------------------------------------------------------------------------
@@ -88,15 +85,17 @@ def generate_spans(
     return ids.mapInArrow(gen, DOCUMENT_SPANS_SCHEMA)
 
 
-def make_synth_extract_fn(
+def synth_extract(
+    ids: DataFrame,
+    output_mode: str = "spans",
     seed: int = 42,
     key_format: str = synth.SF_KEY_FORMAT,
-    output_mode: str = "spans",
     **options,
-):
-    """Fused synth+extract ``mapInArrow`` fn over a bare ``doc_id`` frame:
-    per batch, ``synth.generate_columns`` then the ``make_extract_fn``
-    step every other extraction runs (``options`` are its options).
+) -> DataFrame:
+    """Fused synth+extract over a bare ``doc_id`` frame: one
+    ``mapInArrow`` with ``output_mode``'s schema that, per batch, runs
+    ``synth.generate_columns`` then the ``make_extract_fn`` step every
+    other extraction runs (``options`` are its options).
 
     The unfused shape (``generate_spans`` → exchange → extract) encodes
     the span payload to Arrow, shuffles it and decodes it again. Fused,
@@ -114,7 +113,7 @@ def make_synth_extract_fn(
                 rb.column("doc_id").to_pylist(), seed, key_format
             ))
 
-    return fn
+    return ids.mapInArrow(fn, output_ddl(output_mode))
 
 
 # --------------------------------------------------------------------------
@@ -139,16 +138,20 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
 # extract
 # --------------------------------------------------------------------------
 
+def output_ddl(output_mode: str) -> str:
+    """The schema of ``output_mode``'s rows (a mode ``make_extract_fn``
+    accepts): flat span rows for "spans", else ``(doc_id, result)``."""
+    return EXTRACTED_SPANS_DDL if output_mode == "spans" else NESTED_RESULT_DDL
+
+
 def _extraction(output_mode: str, **options):
     """``df -> df.mapInArrow(...)`` running the one extraction entry
     (``pipeline.make_map_in_arrow_fn``); building it validates
     ``output_mode`` before any Spark work."""
     fn = make_map_in_arrow_fn(output_mode, **options)
-    ddl = EXTRACTED_SPANS_DDL if output_mode == "spans" else NESTED_RESULT_DDL
     # an int bucket column passes through onto every output row
-    return lambda df: df.mapInArrow(
-        fn, ddl + (", bucket int" if "bucket" in df.columns else "")
-    )
+    return lambda df: df.mapInArrow(fn, output_ddl(output_mode) + (
+        ", bucket int" if "bucket" in df.columns else ""))
 
 
 def extract(
@@ -327,10 +330,12 @@ def run_extraction(
     DURING the single write pass. In every mode ``n_docs``,
     ``n_spans_in`` and the doc_id bounds are observed on the input, so
     they count every doc processed, including docs that yield no output
-    row; ``n_spans_out`` is observed on the output. ``n_tables``/
-    ``n_errors`` come from the ``kind='stats'`` rows, one per Arrow batch
-    and bucket, which only the flat mode emits, so nested checkpoint
-    rows leave them at 0.
+    row; the rest is observed on the output. Flat: ``n_spans_out``
+    counts the data rows, and ``n_tables``/``n_errors`` come from the
+    ``kind='stats'`` rows, one per Arrow batch and bucket. Nested:
+    ``n_spans_out`` counts the docs with a table, ``n_tables`` their
+    pages (one table per page) and ``n_errors`` the error records, so
+    both modes count the same tables and errors.
 
     ``buckets`` restricts the run to a subset of distinct bucket ids in
     ``range(n_buckets)``, else ``ValueError`` before any write: at large K
@@ -403,8 +408,14 @@ def run_extraction(
             "n_tables": (F.sum, _stat("n_tables")),
             "n_errors": (F.sum, _stat("n_errors")),
         }
-    else:  # one (doc_id, result) row per doc with a table
-        out_metrics = {"n_spans_out": (F.count, F.lit(1))}
+    else:  # one (doc_id, result) row per doc with a table or an error
+        res = F.from_json("result", "error string, result struct<pages: "
+                          "array<struct<page: int>>>")
+        out_metrics = {
+            "n_spans_out": (F.sum, res.error.isNull().cast("long")),
+            "n_tables": (F.sum, F.size(res.result.pages)),  # 1 per page
+            "n_errors": (F.sum, res.error.isNotNull().cast("long")),
+        }
 
     fs, jvm = _fs(spark, output_path)
     width = _wave_width(spark, input_df, n_buckets) if todo else 1
@@ -440,8 +451,8 @@ def run_extraction(
                     run_id, b, m[f"doc_id_min_{b}"], m[f"doc_id_max_{b}"],
                     int(m[f"n_docs_{b}"]), int(m[f"n_spans_in_{b}"] or 0),
                     int(m[f"n_spans_out_{b}"] or 0),
-                    int(m.get(f"n_tables_{b}") or 0),
-                    int(m.get(f"n_errors_{b}") or 0),
+                    int(m[f"n_tables_{b}"] or 0),
+                    int(m[f"n_errors_{b}"] or 0),
                     wall_ms, "done", now,
                 )
                 for b in wave
@@ -828,7 +839,10 @@ def compact_output(
     repartitioned on (bucket, __slot). ``__slot`` is a deterministic
     function of doc_id, so a retried task reproduces the same placement
     and a doc's rows stay in one output file. ``files_after`` is what
-    landed in the live directory after the swap."""
+    landed in the live directory after the swap. A repeated bucket id
+    raises ``ValueError`` in both runs."""
+    if buckets is not None and len(set(buckets)) != len(buckets):
+        raise ValueError(f"repeated bucket id in {buckets}")
     fs, jvm = _fs(spark, output_path)
     inv, _ = _bucket_inventory(fs, jvm, output_path)
     per = []

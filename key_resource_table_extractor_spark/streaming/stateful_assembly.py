@@ -5,9 +5,11 @@ Scenario the batch job can't cover: spans arrive as individual records
 (e.g. a crawler emitting pages as it parses them). This operator
 accumulates spans per ``doc_id`` in group state via
 ``applyInPandasWithState`` and, when a document's end-marker span arrives
-(``kind='end'``), runs the full extraction cascade on the assembled
-document and emits its ordered output spans. Incomplete documents survive
-restarts in the streaming state checkpoint.
+(``kind='end'``), runs the batch job's Arrow extraction function
+(``pipeline.make_map_in_arrow_fn``) on the assembled document and emits
+its ordered output spans, or one ``kind='error'`` row for a document that
+cannot be extracted. Incomplete documents survive restarts in the
+streaming state checkpoint.
 
 This is the engine's ``applyInPandasWithState`` surface — the reference's
 job queue (task_manager.py:70-98) reimagined as an event stream with
@@ -17,15 +19,15 @@ explicit document-complete markers.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
-from .. import spec
-from ..extractor.pipeline import OUTPUT_COLUMNS, extract_columnar
+from .. import job, spec
+from ..extractor.pipeline import encode_spans, make_map_in_arrow_fn
 
 END_KIND = "end"
 
@@ -42,31 +44,19 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("seq", IntegerType()),
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("offset", IntegerType()),
-    ]
-)
+_extract = make_map_in_arrow_fn()
 
 
 def _assemble(key, pdfs, state: GroupState):
     doc_id = key[0]
-    if state.exists:
-        kinds, texts, refs, offsets = (
-            list(state.get[0]), list(state.get[1]),
-            list(state.get[2]), list(state.get[3]),
-        )
-    else:
-        kinds, texts, refs, offsets = [], [], [], []
+    kinds, texts, refs, offsets = (
+        [list(c) for c in state.get] if state.exists else ([], [], [], [])
+    )
     done = False
     for pdf in pdfs:
         # vectorized accumulate: mask out end-markers, extend column-wise
-        # (no per-row Python loop — the repo-wide invariant)
+        # (no per-row Python loop — the repo-wide invariant); a null
+        # offset stays None, so the extraction makes it the doc's error row
         is_end = pdf["kind"].to_numpy() == END_KIND
         if is_end.any():
             done = True
@@ -74,21 +64,22 @@ def _assemble(key, pdfs, state: GroupState):
         kinds.extend(keep["kind"].tolist())
         texts.extend(keep["text"].tolist())
         refs.extend(keep["media_ref"].tolist())
-        offsets.extend(keep["offset"].astype("int64").tolist())
+        offsets.extend(keep["offset"].astype("Int64").to_numpy(
+            dtype=object, na_value=None).tolist())
     if not done:
         state.update((kinds, texts, refs, offsets))
         return iter(())
     state.remove()
-    out = extract_columnar(
-        np.array([doc_id], dtype=object),
-        np.zeros(len(kinds), dtype=np.int64),
-        np.array(kinds, dtype=object),
-        np.array(texts, dtype=object),
-        np.array(refs, dtype=object),
-        np.array(offsets, dtype=np.int64),
-    )
-    out = pd.DataFrame({c: out[c] for c in OUTPUT_COLUMNS})
-    return iter([out[out["kind"].isin([spec.KIND_TEXT, spec.KIND_MEDIA])]])
+    batch = encode_spans((
+        [doc_id], np.zeros(len(kinds), dtype=np.int64),
+        kinds, texts, refs, offsets,
+    ))
+    # the batch job's Arrow function; its per-batch stats row is dropped
+    return iter([
+        rb.filter(pc.not_equal(rb.column("kind"), spec.KIND_STATS))
+        .to_pandas()
+        for rb in _extract([batch])
+    ])
 
 
 def run_stateful_assembly(
@@ -104,7 +95,7 @@ def run_stateful_assembly(
     )
     assembled = src.groupBy("doc_id").applyInPandasWithState(
         _assemble,
-        outputStructType=OUTPUT_SCHEMA,
+        outputStructType=job.output_ddl("spans"),
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

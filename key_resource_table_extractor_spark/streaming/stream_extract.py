@@ -3,8 +3,8 @@
 The reference's "server" is a work queue, not an event-time stream
 (SURVEY.md §2.9), so batch is the primary mode; this wrapper exists for
 continuous-ingest deployments: new (doc_id, spans) parquet files landing in
-a directory are picked up incrementally, run through the identical
-``mapInArrow`` extraction as the batch job (the only Spark shape extraction
+a directory are picked up incrementally, run through ``job.extract``, the
+batch job's ``mapInArrow`` extraction (the only Spark shape extraction
 runs under), and appended to the sink with exactly-once file
 semantics from the streaming checkpoint. Extraction is stateless per doc —
 no watermarks needed; the streaming checkpoint subsumes the batch job's
@@ -14,8 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..extractor.pipeline import make_map_in_arrow_fn
-from ..schemas import DOCUMENT_SPANS_SCHEMA, EXTRACTED_SPANS_DDL
+from .. import job
+from ..schemas import DOCUMENT_SPANS_SCHEMA
 
 
 def run_stream_extraction(
@@ -34,7 +34,7 @@ def run_stream_extraction(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = reader.load(input_dir)
-    out = src.mapInArrow(make_map_in_arrow_fn(), EXTRACTED_SPANS_DDL)
+    out = job.extract(src)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_dir)

@@ -28,15 +28,14 @@ def extract_batch(pdf, output_mode: str = "spans", **options):
     import pyarrow as pa
 
     from key_resource_table_extractor_spark.extractor.pipeline import (
+        _SPAN_TYPE,
         make_map_in_arrow_fn,
     )
 
-    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                      ("media_ref", pa.string()), ("offset", pa.int32())])
     batch = pa.RecordBatch.from_pydict(
         {"doc_id": list(pdf["doc_id"]), "spans": list(pdf["spans"])},
         schema=pa.schema([("doc_id", pa.string()),
-                          ("spans", pa.list_(span))]),
+                          ("spans", pa.list_(_SPAN_TYPE))]),
     )
     out = make_map_in_arrow_fn(output_mode, **options)([batch])
     return pa.Table.from_batches(list(out)).to_pandas()

@@ -11,7 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from key_resource_table_extractor_spark import job, oracle, synth
+from key_resource_table_extractor_spark import job, oracle, spec, synth
 from key_resource_table_extractor_spark.extractor.pipeline import _SPAN_TYPE
 from tests.conftest import extract_batch
 
@@ -98,7 +98,7 @@ def test_adversarial_documents_through_run_extraction(spark, tmp_path):
     for d in docs:
         assert got[d] == exp[d], d
     assert spark.read.parquet(out).where(
-        F.col("kind") == job.ERROR_KIND).count() == 0
+        F.col("kind") == spec.KIND_ERROR).count() == 0
     _check_counts(spark, cp, docs)
 
     # nested: the rows equal the in-process extraction of the same docs

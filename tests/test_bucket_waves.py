@@ -13,15 +13,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from key_resource_table_extractor_spark import job, synth
+from key_resource_table_extractor_spark import job, spec, synth
 from key_resource_table_extractor_spark.extractor.pipeline import (
+    _SPAN_TYPE,
     make_map_in_arrow_fn,
 )
 
-SPANS_TYPE = pa.list_(pa.struct([
-    ("kind", pa.string()), ("text", pa.string()),
-    ("media_ref", pa.string()), ("offset", pa.int32()),
-]))
 # a text span with a null offset: its doc extracts to one error row
 BAD_DOC = ("doc_null_offset", [
     {"kind": "text", "text": "Antibody  Source  Identifier",
@@ -39,7 +36,8 @@ def _spans_table(n_docs: int) -> pa.Table:
     ]
     ids.append(BAD_DOC[0])
     spans.append(BAD_DOC[1])
-    return pa.table({"doc_id": ids, "spans": pa.array(spans, SPANS_TYPE)})
+    return pa.table({"doc_id": ids,
+                     "spans": pa.array(spans, pa.list_(_SPAN_TYPE))})
 
 
 def _file_input(spark, path: str, n_docs: int = 120, files: int = 3):
@@ -123,7 +121,7 @@ def test_wave_checkpoint_rows_equal_per_bucket_runs(spark, tmp_path):
     assert sum(r["n_errors"] for r in rows.values()) == 1
     assert sum(r["n_tables"] for r in rows.values()) > 0
     assert _out_rows(spark, one) == _out_rows(spark, per)
-    err = [r for r in _out_rows(spark, one) if r[3] == job.ERROR_KIND]
+    err = [r for r in _out_rows(spark, one) if r[3] == spec.KIND_ERROR]
     assert [r[1] for r in err] == [BAD_DOC[0]]
     bad_bucket = spark.createDataFrame([(BAD_DOC[0],)], "doc_id string") \
         .select(F.pmod(F.xxhash64("doc_id"), F.lit(4))).first()[0]
@@ -142,6 +140,31 @@ def test_wave_checkpoint_rows_equal_per_bucket_runs(spark, tmp_path):
     assert {b: r["n_docs"] for b, r in _cp_rows(spark, empty_cp).items()} \
         == {0: 0, 1: 0, 2: 0, 3: 0}
     assert job.completed_buckets(spark, empty_cp, "e") == {0, 1, 2, 3}
+
+
+def test_nested_checkpoint_counts_equal_flat(spark, tmp_path):
+    """Nested checkpoint rows count, per bucket, the tables (one per
+    page) and errors (error records) a flat run counts on the same
+    input; ``n_spans_out`` counts the docs with a table."""
+    inp = _file_input(spark, str(tmp_path / "in"))
+    rows = {}
+    for mode in ("spans", "nested"):
+        job.run_extraction(spark, inp, str(tmp_path / mode),
+                           str(tmp_path / f"{mode}_cp"), run_id="n",
+                           n_buckets=4, output_mode=mode)
+        rows[mode] = _cp_rows(spark, str(tmp_path / f"{mode}_cp"))
+    counts = {
+        mode: {b: (r["n_docs"], r["n_tables"], r["n_errors"])
+               for b, r in by_bucket.items()}
+        for mode, by_bucket in rows.items()
+    }
+    assert counts["nested"] == counts["spans"]
+    assert sum(n[1] for n in counts["spans"].values()) > 0
+    assert sum(n[2] for n in counts["spans"].values()) == 1
+    with_table = job.read_output(spark, str(tmp_path / "nested")).where(
+        F.get_json_object("result", "$.error").isNull()).count()
+    assert sum(r["n_spans_out"] for r in rows["nested"].values()) \
+        == with_table > 0
 
 
 def test_job_count_constant_in_k_within_one_wave(spark, tmp_path):
@@ -240,6 +263,7 @@ def test_repeated_or_out_of_range_bucket_ids_are_rejected(spark, tmp_path):
     job.run_extraction(spark, inp, out, cp, run_id="g", n_buckets=4)
     rows = _out_rows(spark, out)
     assert any(b == 0 for b, *_ in rows)
-    with pytest.raises(ValueError, match="repeated bucket id"):
-        job.compact_output(spark, out, buckets=[0, 0])
+    for dry_run in (True, False):
+        with pytest.raises(ValueError, match="repeated bucket id"):
+            job.compact_output(spark, out, buckets=[0, 0], dry_run=dry_run)
     assert _out_rows(spark, out) == rows

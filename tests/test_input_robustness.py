@@ -57,9 +57,9 @@ def test_null_spans_and_fields_do_not_poison_batch():
 
 def test_null_offset_is_a_per_doc_error():
     """A text or media span with a null offset cannot be ordered: its doc
-    yields exactly one error row (flat) or no row (nested), the other
-    docs — including those after it in the batch — come out as if it were
-    absent, and nothing warns."""
+    yields exactly one error row (flat) or one error record with no pages
+    (nested), the other docs — including those after it in the batch —
+    come out as if it were absent, and nothing warns."""
     for bad_kind in ("text", "media"):
         bad = [dict(s) for s in GOOD] + [
             {"kind": bad_kind, "text": "x", "media_ref": "m", "offset": 9}
@@ -81,9 +81,46 @@ def test_null_offset_is_a_per_doc_error():
         exp = exp[exp.kind.isin(["text", "media"])].reset_index(drop=True)
         assert data.equals(exp)
         for mode, got in nested.items():
+            err = got[got.doc_id == "bad"]
+            assert [json.loads(r) for r in err["result"]] == [{
+                "paper_id": "bad", "result": {"pages": []},
+                "error": rows.iloc[0]["text"],
+            }], mode
+            got = got[got.doc_id != "bad"].reset_index(drop=True)
             assert got.equals(extract_batch(ref, mode)), mode
         stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
         assert stats["n_errors"] == 1
+
+
+def test_null_offset_doc_does_not_sink_the_assembly_stream(spark, tmp_path):
+    """Stateful assembly, one micro-batch: a good doc and a doc with a
+    null text offset, both ended. The stream finishes, the good doc's
+    rows equal the oracle's, the bad doc yields one error row and no
+    stats row is emitted."""
+    from key_resource_table_extractor_spark import oracle
+    from key_resource_table_extractor_spark.streaming.stateful_assembly import (
+        SPAN_EVENTS_DDL,
+        run_stateful_assembly,
+    )
+
+    events = [
+        (d, s["kind"], s["text"], s["media_ref"],
+         None if d == "bad" and s["offset"] == 1 else s["offset"])
+        for d in ("good", "bad") for s in GOOD
+    ] + [(d, "end", "", "", 99) for d in ("good", "bad")]
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(events, SPAN_EVENTS_DDL).write.parquet(inp)
+    q = run_stateful_assembly(spark, inp, out, str(tmp_path / "cp"))
+    q.awaitTermination(180)
+    assert q.exception() is None
+    rows = spark.read.parquet(out).orderBy("doc_id", "seq").collect()
+    good = [(r["seq"], r["kind"], r["text"], r["media_ref"], r["offset"])
+            for r in rows if r["doc_id"] == "good"]
+    exp = oracle.extract_document(
+        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in GOOD])
+    assert good == [tuple(r) for r in exp] and good
+    assert [(r["doc_id"], r["kind"]) for r in rows if r["doc_id"] != "good"] \
+        == [("bad", "error")]
 
 
 def test_null_kind_span_is_dropped():
@@ -133,20 +170,18 @@ def test_sliced_list_array_in_arrow_path():
 
     from key_resource_table_extractor_spark import oracle
     from key_resource_table_extractor_spark.extractor.pipeline import (
+        _SPAN_TYPE,
         make_map_in_arrow_fn,
     )
 
-    span_t = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()),
-         ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
     decoy = [
         {"kind": "text", "text": "decoy line", "media_ref": "", "offset": 0}
     ]
     full = pa.table(
         {
             "doc_id": pa.array(["skip0", "skip1", "keep"]),
-            "spans": pa.array([decoy, decoy + decoy, GOOD], pa.list_(span_t)),
+            "spans": pa.array([decoy, decoy + decoy, GOOD],
+                              pa.list_(_SPAN_TYPE)),
         }
     )
     sliced = full.slice(2)  # ListArray with offset 2 — child keeps decoys
