@@ -45,6 +45,7 @@ _RRID_PAT = spec.RRID_REGEX
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
 NESTED_COLUMNS = ["doc_id", "result"]
 OUTPUT_MODES = ("spans", "nested", "nested-colspans")
+ROW_MODELS = ("votes", "anchor", "none")
 
 
 # --------------------------------------------------------------------------
@@ -298,15 +299,15 @@ def _extract_doc_regions(
     media_off: np.ndarray,
     media_ref: np.ndarray,
     out: dict,
-    merge_rows: bool = True,
     excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
+    row_model: str = "votes",
     with_extents: bool = False,
     midcol_rowspans: bool = False,
-) -> int:
-    """Emit one doc's regions into the output accumulator. Returns #tables.
+) -> None:
+    """Emit one doc's regions into the output accumulator, numbering its
+    tables from 0 in the ``table`` column.
 
-    ``merge_rows=False`` is the reference's ``use_row_info`` switch analog
+    ``row_model="none"`` is the reference's ``use_row_info`` switch analog
     (pipeline A vs B, reference README:121-122, PDFTableExtractor2.java:
     200-208): physical rows are emitted as-is, no continuation merging.
 
@@ -318,7 +319,7 @@ def _extract_doc_regions(
     media_used = np.zeros(len(media_off), dtype=bool)
     kept = np.flatnonzero(region_id >= 0)
     if len(kept) == 0:
-        return 0
+        return
     # contiguous runs of equal region ids
     rk = region_id[kept]
     run_break = np.empty(len(kept), dtype=bool)
@@ -384,9 +385,8 @@ def _extract_doc_regions(
             rows_l = gl[nonempty]
         row_lines = lines_idx[nonempty]
         hdr = is_header[row_lines]
-        mode = row_model or ("votes" if merge_rows else "none")
         cont_full = None
-        if mode == "anchor":
+        if row_model == "anchor":
             # J4 analog (reference PDFTableExtractor2.java:334-380): rows
             # lacking their col-0 anchor fold into the detected row above
             merge = (rows[:, 0] == "") & ~hdr
@@ -402,7 +402,7 @@ def _extract_doc_regions(
                 # carry rowspan = 1 + run of such covered rows below.
                 cont_full = merge & ((rows != "").sum(axis=1) >= 2)
                 merge = merge & ~cont_full
-        elif mode == "votes":
+        elif row_model == "votes":
             merge = _merge_flags(rows, hdr)
         else:
             merge = np.zeros(len(rows), dtype=bool)
@@ -540,16 +540,17 @@ def _extract_doc_regions(
                     out["clast"].append(-1)
                     out["rowspan"].append(1)
         n_tables += 1
-    return n_tables
 
 
 # --------------------------------------------------------------------------
 # batch entry points
 # --------------------------------------------------------------------------
 
-def _append_meta_row(out: dict, doc_id: str, kind: str, text: str) -> None:
-    """Append a row outside every table (an error or the stats row),
-    filling each lineage column the accumulator carries."""
+def _append_meta_row(
+    out: dict, doc_id: str | None, kind: str, text: str
+) -> None:
+    """Append a row outside every table (a doc's error row), filling each
+    lineage column the accumulator carries."""
     row = {"doc_id": doc_id, "kind": kind, "text": text, "media_ref": "",
            "offset": -1, "table": -1, "row": -1, "col": -1,
            "fullspan": False, "cfirst": -1, "clast": -1, "rowspan": 1}
@@ -564,10 +565,9 @@ def extract_columnar(
     texts: np.ndarray,
     media_refs: np.ndarray,
     offsets: np.ndarray,
-    merge_rows: bool = True,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
+    row_model: str = "votes",
     gap_min_spaces: int = spec.GAP_MIN_SPACES,
     with_extents: bool = False,
     midcol_rowspans: bool = False,
@@ -587,9 +587,11 @@ def extract_columnar(
 
     ``null_offset`` marks spans whose offset was null in the input (their
     ``offsets`` entry is a placeholder): a doc with such a text or media
-    span cannot be ordered, so it yields one ``kind='error'`` row.
+    span cannot be ordered, so it yields one ``kind='error'`` row. So does
+    a doc whose ``doc_id`` is null, its error row's ``doc_id`` null too.
+    A doc that fails keeps no row but its error row.
     """
-    bad_doc = np.zeros(len(doc_ids), dtype=bool)
+    bad_doc = np.fromiter((d is None for d in doc_ids), bool, len(doc_ids))
     if null_offset is not None:
         placed = (kinds == spec.KIND_TEXT) | (kinds == spec.KIND_MEDIA)
         bad_doc[span_doc[null_offset & placed]] = True
@@ -630,8 +632,6 @@ def extract_columnar(
         out["cfirst"] = []
         out["clast"] = []
         out["rowspan"] = []
-    n_tables = 0
-    n_errors = 0
     # per-doc slices (lines and media are doc-sorted)
     line_doc_bounds = np.searchsorted(li_doc, np.arange(len(doc_ids) + 1))
     media_doc_bounds = np.searchsorted(md_doc, np.arange(len(doc_ids) + 1))
@@ -642,11 +642,15 @@ def extract_columnar(
         s0, s1 = seg_bounds[d], seg_bounds[d + 1]
         if l0 == l1 and not bad_doc[d]:
             continue
+        doc_id = None if doc_ids[d] is None else str(doc_ids[d])
+        n0 = len(out["doc_id"])
         try:
+            if doc_id is None:
+                raise ValueError("the doc_id is null")
             if bad_doc[d]:
                 raise ValueError("a text or media span has a null offset")
-            n_tables += _extract_doc_regions(
-                str(doc_ids[d]),
+            _extract_doc_regions(
+                doc_id,
                 li_off[l0:l1],
                 region_id[l0:l1],
                 is_header[l0:l1],
@@ -658,42 +662,17 @@ def extract_columnar(
                 md_off[m0:m1],
                 md_ref[m0:m1],
                 out,
-                merge_rows=merge_rows,
                 excepted_pages=excepted_pages,
                 row_model=row_model,
                 with_extents=with_extents,
                 midcol_rowspans=midcol_rowspans,
             )
         except Exception:  # per-doc isolation (reference stores err_msg)
-            n_errors += 1
+            for vals in out.values():
+                del vals[n0:]
             _append_meta_row(
-                out, str(doc_ids[d]), spec.KIND_ERROR,
-                traceback.format_exc()[-500:],
+                out, doc_id, spec.KIND_ERROR, traceback.format_exc()[-500:]
             )
-
-    # per-batch lineage/metrics row (aggregated into the checkpoint table by
-    # job.run_extraction — replaces the reference's Postgres job metrics)
-    if len(doc_ids):
-        try:  # physical-partition lineage when running inside a Spark task
-            from pyspark import TaskContext
-
-            tc = TaskContext.get()
-            partition_id = tc.partitionId() if tc is not None else -1
-        except Exception:
-            partition_id = -1
-        stats = {
-            "n_docs": int(len(doc_ids)),
-            "n_spans_in": int(len(span_doc)),
-            "n_tables": int(n_tables),
-            "n_errors": int(n_errors),
-            "doc_id_min": str(min(doc_ids)),
-            "doc_id_max": str(max(doc_ids)),
-            "partition_id": int(partition_id),
-        }
-        _append_meta_row(
-            out, "__stats__", spec.KIND_STATS,
-            json.dumps(stats, sort_keys=True),
-        )
 
     # seq: 0-based per doc in emission order (docs are emitted contiguously),
     # computed from run lengths — no pandas groupby on the hot path
@@ -712,16 +691,20 @@ def extract_columnar(
     return out
 
 
-def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
+def nested_from_columnar(
+    out: dict, with_colspans: bool
+) -> tuple[pa.RecordBatch, np.ndarray]:
     """Fold ``extract_columnar`` output into one ``(doc_id, result)`` row
-    per doc: the reference's result-JSON wrapper
+    per doc, returned with each row's page count: the reference's
+    result-JSON wrapper
     ``{"paper_id": ..., "result": {"pages": [{"page": N, "tables":
     [{"rows": [[cell, ...], ...]}]}]}}`` (reference
     HybridTableTextContentExtractor.java:87-107, row_merger.py:180-204;
     FIXTURES.md §4). One extracted region = one page with one table.
     Docs without a table get no row. A doc whose extraction failed gets
     ``{"paper_id": ..., "result": {"pages": []}, "error": ...}``, the
-    error text being that of its flat ``kind='error'`` row.
+    error text being that of its flat ``kind='error'`` row; it is the only
+    row with no page.
 
     ``with_colspans=True`` (``out`` must then carry the extents of
     ``extract_columnar(..., with_extents=True)``) emits cells as
@@ -779,10 +762,15 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
     fullspan: dict[tuple, bool] = {}
     extents: dict[tuple, tuple] = {}
     rowspans: dict[tuple, dict[int, int]] = {}  # row key -> {col: span}
-    errors: dict[str, str] = {}
+    ids, results = [], []
     for i in range(len(out["doc_id"])):
-        if out["kind"][i] == spec.KIND_ERROR:
-            errors[out["doc_id"][i]] = out["text"][i]
+        if out["kind"][i] == spec.KIND_ERROR:  # a failed doc has no table
+            ids.append(out["doc_id"][i])
+            results.append(json.dumps(
+                {"paper_id": out["doc_id"][i], "result": {"pages": []},
+                 "error": out["text"][i]},
+                sort_keys=True,
+            ))
         if out["kind"][i] != spec.KIND_TEXT:
             continue
         d = docs.setdefault(out["doc_id"][i], {})
@@ -799,14 +787,7 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
                 rowspans.setdefault(key, {})[out["col"][i]] = (
                     out["rowspan"][i]
                 )
-    ids, results = [], []
-    for doc_id, error in errors.items():
-        docs.pop(doc_id, None)  # tables emitted before it failed: no pages
-        ids.append(doc_id)
-        results.append(json.dumps(
-            {"paper_id": doc_id, "result": {"pages": []}, "error": error},
-            sort_keys=True,
-        ))
+    n_pages = [0] * len(ids)
     for doc_id in sorted(docs):
         pages = []
         for t in sorted(docs[doc_id]):
@@ -832,10 +813,11 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
         result = {"paper_id": doc_id, "result": {"pages": pages}}
         ids.append(doc_id)
         results.append(json.dumps(result, sort_keys=True))
+        n_pages.append(len(pages))
     return pa.RecordBatch.from_arrays(
         [pa.array(ids, type=pa.string()), pa.array(results, type=pa.string())],
         names=NESTED_COLUMNS,
-    )
+    ), np.asarray(n_pages, dtype=np.int32)
 
 
 def _apply_rowspan_occupancy(grid: list[list[dict]]) -> list[list[dict]]:
@@ -1024,10 +1006,9 @@ def _flat_batch(out: dict) -> pa.RecordBatch:
 
 def make_extract_fn(
     output_mode: str = "spans",
-    merge_rows: bool = True,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
+    row_model: str = "votes",
     gap_min_spaces: int | None = None,
     midcol_rowspans: bool = False,
 ):
@@ -1035,26 +1016,30 @@ def make_extract_fn(
     runs ``extract_columnar`` once over decoded span columns and encodes
     the result as one Arrow batch — flat ``OUTPUT_COLUMNS`` span rows for
     ``output_mode="spans"``, ``(doc_id, result)`` rows (via
-    ``nested_from_columnar``) for "nested" and "nested-colspans". An
-    unknown mode raises ``ValueError`` here, before any data is touched.
+    ``nested_from_columnar``) for "nested" and "nested-colspans". It
+    returns ``(batch, tables, errors)``, the last two per batch row: the
+    number of tables the row begins (flat: 1 on a table's first row;
+    nested: the record's pages) and whether it is a doc's error row or
+    record. An unknown mode or row model raises ``ValueError`` here,
+    before any data is touched.
 
-    ``merge_rows`` is the reference's use_row_info switch analog;
-    ``row_model`` ("votes" | "anchor" | "none") picks the merge mechanism
-    explicitly — "anchor" is the detected-row J4 analog
-    (PDFTableExtractor2.java:334-380); ``excepted_lines``/
+    ``row_model`` ("votes" | "anchor" | "none") picks the row-merge
+    mechanism — "anchor" is the detected-row J4 analog
+    (PDFTableExtractor2.java:334-380), "none" the reference's
+    use_row_info switch analog (physical rows as-is); ``excepted_lines``/
     ``excepted_pages`` drop text lines / detected regions by per-doc
     index, negative = from the end (PDFTableExtractor2.java:93-128);
     ``gap_min_spaces=None`` means ``spec.GAP_MIN_SPACES``;
     ``midcol_rowspans`` opts into non-col-0 rowspan recovery (see
     ``nested_from_columnar`` for the sparse-column trade-off)."""
-    if output_mode not in OUTPUT_MODES:
-        raise ValueError(
-            f"unknown output_mode {output_mode!r}; expected one of "
-            f"{OUTPUT_MODES}"
-        )
+    for name, value, known in (("output_mode", output_mode, OUTPUT_MODES),
+                               ("row_model", row_model, ROW_MODELS)):
+        if value not in known:
+            raise ValueError(
+                f"unknown {name} {value!r}; expected one of {known}"
+            )
     colspans = output_mode == "nested-colspans"
     kw = dict(
-        merge_rows=merge_rows,
         excepted_lines=excepted_lines,
         excepted_pages=excepted_pages,
         row_model=row_model,
@@ -1065,11 +1050,19 @@ def make_extract_fn(
         midcol_rowspans=midcol_rowspans,
     )
 
-    def fn(columns, null_offset=None) -> pa.RecordBatch:
+    def fn(columns, null_offset=None):
         out = extract_columnar(*columns, null_offset=null_offset, **kw)
-        if output_mode == "spans":
-            return _flat_batch(out)
-        return nested_from_columnar(out, colspans)
+        if output_mode != "spans":
+            batch, pages = nested_from_columnar(out, colspans)
+            return batch, pages, pages == 0
+        # only an error row sits outside every table; a table's first row
+        # starts a doc (seq 0) or follows a row of another table
+        table = np.asarray(out["table"], dtype=np.int64)
+        errors = table < 0
+        begins = ~errors & (
+            (out["seq"] == 0) | (np.diff(table, prepend=-2) != 0)
+        )
+        return _flat_batch(out), begins.astype(np.int32), errors
 
     return fn
 
@@ -1081,15 +1074,16 @@ def make_map_in_arrow_fn(output_mode: str = "spans", **options):
     ``make_extract_fn``.
 
     A batch that also carries an int ``bucket`` column (the job's bucket
-    waves) is extracted one bucket at a time, and ``bucket`` is copied
-    onto every output row — data, error and stats rows alike — so each
-    per-batch stats row counts the docs of exactly one bucket."""
+    waves) is extracted one bucket at a time. Its output rows carry
+    ``bucket`` plus the two internal count columns the job observes per
+    bucket and drops before its write: ``__tables`` (int, the tables the
+    row begins) and ``__error`` (bool, an error row or record)."""
     extract = make_extract_fn(output_mode, **options)
 
     def fn(batches):
         for rb in batches:
             if "bucket" not in rb.schema.names:
-                yield extract(*_decode_spans(rb))
+                yield extract(*_decode_spans(rb))[0]
                 continue
             if not rb.num_rows:
                 continue
@@ -1098,8 +1092,12 @@ def make_map_in_arrow_fn(output_mode: str = "spans", **options):
             rb, bucket = rb.take(pa.array(order)), bucket[order]
             cuts = np.r_[0, np.flatnonzero(np.diff(bucket)) + 1, len(bucket)]
             for s, e in zip(cuts[:-1], cuts[1:]):
-                out = extract(*_decode_spans(rb.slice(s, e - s)))
-                yield out.append_column("bucket", pa.array(
-                    np.full(out.num_rows, bucket[s], dtype=np.int32)))
+                out, tables, errors = extract(
+                    *_decode_spans(rb.slice(s, e - s)))
+                b = np.full(out.num_rows, bucket[s], dtype=np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    out.columns + [pa.array(c) for c in (b, tables, errors)],
+                    names=[*out.schema.names, "bucket", "__tables", "__error"],
+                )
 
     return fn

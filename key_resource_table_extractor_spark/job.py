@@ -10,8 +10,9 @@ Replaces the reference's FastAPI + multiprocessing.Queue + Postgres job store
   scripts/batch_pdf_table_extractor.py:32-34 → SURVEY §2 O6);
 - per-bucket lineage/metrics = per-bucket conditional aggregates in one
   ``observe()`` on each wave's input and output during its one write
-  pass: table/error counts from the ``kind='stats'`` row every flat-mode
-  Arrow batch emits per bucket, or from the nested result rows.
+  pass: table/error counts from the two internal per-row columns the
+  Arrow function adds to a bucketed batch (``__tables``, ``__error``),
+  dropped before the write — the output holds data and error rows only.
 
 At cluster scale the same code runs unchanged via ``spark-submit --py-files``:
 buckets are deterministic hash ranges of ``doc_id``, run in waves of
@@ -29,8 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import synth
-from .spec import DATA_KINDS, KIND_STATS as STATS_KIND
+from . import spec, synth
 from .extractor.pipeline import (
     encode_spans,
     make_extract_fn,
@@ -42,6 +42,9 @@ from .schemas import (
     EXTRACTED_SPANS_DDL,
     NESTED_RESULT_DDL,
 )
+
+# perfbench's traced probe reads both names; no row has kind STATS_KIND
+DATA_KINDS, STATS_KIND = spec.DATA_KINDS, "stats"
 
 
 # --------------------------------------------------------------------------
@@ -111,7 +114,7 @@ def synth_extract(
         for rb in batches:
             yield extract_fn(synth.generate_columns(
                 rb.column("doc_id").to_pylist(), seed, key_format
-            ))
+            ))[0]
 
     return ids.mapInArrow(fn, output_ddl(output_mode))
 
@@ -149,24 +152,25 @@ def _extraction(output_mode: str, **options):
     (``pipeline.make_map_in_arrow_fn``); building it validates
     ``output_mode`` before any Spark work."""
     fn = make_map_in_arrow_fn(output_mode, **options)
-    # an int bucket column passes through onto every output row
+    # an int bucket column passes through onto every output row, next to
+    # the per-row counts run_extraction observes and drops
     return lambda df: df.mapInArrow(fn, output_ddl(output_mode) + (
-        ", bucket int" if "bucket" in df.columns else ""))
+        ", bucket int, __tables int, __error boolean"
+        if "bucket" in df.columns else ""))
 
 
 def extract(
     df: DataFrame,
-    merge_rows: bool = True,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
+    row_model: str = "votes",
     gap_min_spaces: int | None = None,
 ) -> DataFrame:
-    """spans table → extracted span rows (+ per-batch stats rows). The
-    options are those of ``pipeline.make_extract_fn``."""
+    """spans table → extracted span rows: the data rows plus one
+    ``kind='error'`` row per doc that failed (``data_spans`` keeps the
+    data rows). The options are those of ``pipeline.make_extract_fn``."""
     return _extraction(
         "spans",
-        merge_rows=merge_rows,
         excepted_lines=excepted_lines,
         excepted_pages=excepted_pages,
         row_model=row_model,
@@ -176,9 +180,8 @@ def extract(
 
 def extract_nested(
     df: DataFrame,
-    merge_rows: bool = True,
     with_colspans: bool = False,
-    row_model: str | None = None,
+    row_model: str = "votes",
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
     gap_min_spaces: int | None = None,
@@ -190,7 +193,6 @@ def extract_nested(
     ``pipeline.nested_from_columnar``)."""
     return _extraction(
         "nested-colspans" if with_colspans else "nested",
-        merge_rows=merge_rows,
         row_model=row_model,
         excepted_lines=excepted_lines,
         excepted_pages=excepted_pages,
@@ -298,7 +300,7 @@ def run_extraction(
     buckets: list[int] | None = None,
     excepted_lines: list[int] | None = None,
     excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
+    row_model: str = "votes",
     gap_min_spaces: int | None = None,
     output_mode: str = "spans",
     adopt_k: bool = False,
@@ -330,11 +332,12 @@ def run_extraction(
     DURING the single write pass. In every mode ``n_docs``,
     ``n_spans_in`` and the doc_id bounds are observed on the input, so
     they count every doc processed, including docs that yield no output
-    row; the rest is observed on the output. Flat: ``n_spans_out``
-    counts the data rows, and ``n_tables``/``n_errors`` come from the
-    ``kind='stats'`` rows, one per Arrow batch and bucket. Nested:
-    ``n_spans_out`` counts the docs with a table, ``n_tables`` their
-    pages (one table per page) and ``n_errors`` the error records, so
+    row; the rest is observed on the output, from the per-row
+    ``__tables``/``__error`` columns of ``pipeline.make_map_in_arrow_fn``,
+    dropped before the write: ``n_spans_out`` counts the rows that are
+    not errors (flat: data rows; nested: docs with a table),
+    ``n_tables`` sums ``__tables`` (flat: tables; nested: pages, one
+    table each) and ``n_errors`` counts the error rows or records, so
     both modes count the same tables and errors.
 
     ``buckets`` restricts the run to a subset of distinct bucket ids in
@@ -393,29 +396,11 @@ def run_extraction(
         "doc_id_min": (F.min, F.col("doc_id")),
         "doc_id_max": (F.max, F.col("doc_id")),
     }
-    if output_mode == "spans":
-        is_stats = F.col("kind") == STATS_KIND
-
-        def _stat(field):
-            return F.when(
-                is_stats, F.get_json_object("text", f"$.{field}")
-            ).cast("long")
-
-        out_metrics = {
-            "n_spans_out": (
-                F.sum, F.col("kind").isin(*DATA_KINDS).cast("long")
-            ),
-            "n_tables": (F.sum, _stat("n_tables")),
-            "n_errors": (F.sum, _stat("n_errors")),
-        }
-    else:  # one (doc_id, result) row per doc with a table or an error
-        res = F.from_json("result", "error string, result struct<pages: "
-                          "array<struct<page: int>>>")
-        out_metrics = {
-            "n_spans_out": (F.sum, res.error.isNull().cast("long")),
-            "n_tables": (F.sum, F.size(res.result.pages)),  # 1 per page
-            "n_errors": (F.sum, res.error.isNotNull().cast("long")),
-        }
+    out_metrics = {
+        "n_spans_out": (F.sum, (~F.col("__error")).cast("long")),
+        "n_tables": (F.sum, F.col("__tables")),
+        "n_errors": (F.sum, F.col("__error").cast("long")),
+    }
 
     fs, jvm = _fs(spark, output_path)
     width = _wave_width(spark, input_df, n_buckets) if todo else 1
@@ -436,7 +421,7 @@ def run_extraction(
             wdf = wdf.observe(obs_in, *_by_bucket(wave, in_metrics))
             return extract_wave(wdf).observe(
                 obs_out, *_by_bucket(wave, out_metrics)
-            )
+            ).drop("__tables", "__error")
 
         _rewrite_buckets(
             spark, fs, jvm, output_path, f"run_{tag}", wave, rows,
@@ -735,9 +720,10 @@ def _rewrite_buckets(
        — a metadata-only rename. A bucket that staged no rows swaps in
        an empty directory (every row removed is legal state), unless it
        never existed (nothing to remove, nothing to add). With
-       ``keep_empty`` (the run) it swaps in a copy of one schema-only
-       file instead, so every bucket run is committed and an output
-       without a single row still reads as an empty table.
+       ``keep_empty`` (the run and compact) it swaps in a copy of one
+       schema-only file instead, so every bucket run is committed, a
+       compacted bucket keeps a file, and an output without a single
+       row still reads as an empty table.
     4. Delete the stage root, however the rewrite ends.
 
     Returns the number of buckets swapped. Unlisted buckets are never
@@ -839,8 +825,9 @@ def compact_output(
     repartitioned on (bucket, __slot). ``__slot`` is a deterministic
     function of doc_id, so a retried task reproduces the same placement
     and a doc's rows stay in one output file. ``files_after`` is what
-    landed in the live directory after the swap. A repeated bucket id
-    raises ``ValueError`` in both runs."""
+    landed in the live directory after the swap; a bucket whose files
+    hold no row (a run's schema-only file) keeps one schema-only file.
+    A repeated bucket id raises ``ValueError`` in both runs."""
     if buckets is not None and len(set(buckets)) != len(buckets):
         raise ValueError(f"repeated bucket id in {buckets}")
     fs, jvm = _fs(spark, output_path)
@@ -886,6 +873,7 @@ def compact_output(
                 .repartition(n_parts, F.col("bucket"), F.col("__slot"))
                 .drop("__ft", "__slot")
             ),
+            keep_empty=True,
         )
         inv, _ = _bucket_inventory(fs, jvm, output_path)
     return [
@@ -1032,9 +1020,9 @@ def upsert_docs(
     the same config as the original run.
 
     Like compaction, an upsert is not a lineage event: the checkpoint
-    table is untouched and only ``kind in DATA_KINDS`` rows are written
-    for the replaced docs (per-batch ``stats`` rows describe original
-    run batches, which a partial rewrite cannot meaningfully amend).
+    table is untouched. The replacement rows are those a run writes:
+    flat, a doc's data rows or its one ``kind='error'`` row; nested, its
+    record.
 
     ``dry_run=True`` is the read-only pre-flight (``delete_docs``
     twin): no extraction, no writes — reports the affected buckets, how
@@ -1099,8 +1087,6 @@ def upsert_docs(
                 "rows_to_replace": rows_to_replace,
             }
         new_rows = _extraction(output_mode, **extract_kw)(input_df)
-        if output_mode == "spans":
-            new_rows = data_spans(new_rows)
         schema = StructType(
             new_rows.schema.fields + [StructField("bucket", IntegerType())]
         )

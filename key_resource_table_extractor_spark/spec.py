@@ -102,4 +102,3 @@ KIND_TEXT = "text"
 KIND_MEDIA = "media"
 DATA_KINDS = (KIND_TEXT, KIND_MEDIA)  # the data contract (FIXTURES.md §2)
 KIND_ERROR = "error"  # one row per doc whose extraction failed
-KIND_STATS = "stats"  # one lineage/metrics row per flat Arrow batch

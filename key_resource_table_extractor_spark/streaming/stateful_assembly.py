@@ -19,14 +19,13 @@ explicit document-complete markers.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
-from .. import job, spec
+from .. import job
 from ..extractor.pipeline import encode_spans, make_map_in_arrow_fn
 
 END_KIND = "end"
@@ -74,12 +73,7 @@ def _assemble(key, pdfs, state: GroupState):
         [doc_id], np.zeros(len(kinds), dtype=np.int64),
         kinds, texts, refs, offsets,
     ))
-    # the batch job's Arrow function; its per-batch stats row is dropped
-    return iter([
-        rb.filter(pc.not_equal(rb.column("kind"), spec.KIND_STATS))
-        .to_pandas()
-        for rb in _extract([batch])
-    ])
+    return iter([rb.to_pandas() for rb in _extract([batch])])
 
 
 def run_stateful_assembly(

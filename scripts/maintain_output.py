@@ -81,7 +81,7 @@ def main(argv=None):
                    help="parquet path of the changed docs' (doc_id, spans)")
     u.add_argument("--output-mode", default="spans",
                    choices=["spans", "nested", "nested-colspans"])
-    u.add_argument("--row-model", default=None,
+    u.add_argument("--row-model", default="votes",
                    choices=["votes", "anchor", "none"])
     u.add_argument("--midcol-rowspans", action="store_true",
                    help="match a corpus written with run_job.py "

@@ -67,7 +67,7 @@ def main(argv=None):
     p.add_argument("--excepted-pages", default=None,
                    help="comma-separated detected-region indices to skip "
                         "(negative = from end)")
-    p.add_argument("--row-model", default=None,
+    p.add_argument("--row-model", default="votes",
                    choices=["votes", "anchor", "none"],
                    help="merge mechanism (default: votes)")
     p.add_argument("--gap-min-spaces", type=int, default=None,

@@ -24,7 +24,9 @@ def spark():
 def extract_batch(pdf, output_mode: str = "spans", **options):
     """Run the production extraction entry (``make_map_in_arrow_fn``) in
     process over a ``(doc_id, spans)`` pandas frame whose spans are lists
-    of span dicts; returns the output rows as a pandas frame."""
+    of span dicts; returns the output rows as a pandas frame. A frame
+    with an int ``bucket`` column is extracted as a bucketed batch, so
+    its rows carry ``bucket``, ``__tables`` and ``__error``."""
     import pyarrow as pa
 
     from key_resource_table_extractor_spark.extractor.pipeline import (
@@ -32,10 +34,12 @@ def extract_batch(pdf, output_mode: str = "spans", **options):
         make_map_in_arrow_fn,
     )
 
+    fields = [("doc_id", pa.string()), ("spans", pa.list_(_SPAN_TYPE))]
+    if "bucket" in pdf:
+        fields.append(("bucket", pa.int32()))
     batch = pa.RecordBatch.from_pydict(
-        {"doc_id": list(pdf["doc_id"]), "spans": list(pdf["spans"])},
-        schema=pa.schema([("doc_id", pa.string()),
-                          ("spans", pa.list_(_SPAN_TYPE))]),
+        {name: list(pdf[name]) for name, _ in fields},
+        schema=pa.schema(fields),
     )
     out = make_map_in_arrow_fn(output_mode, **options)([batch])
     return pa.Table.from_batches(list(out)).to_pandas()

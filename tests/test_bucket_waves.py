@@ -5,6 +5,7 @@ buckets one at a time."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -61,8 +62,7 @@ def _out_rows(spark, out: str) -> list:
     return sorted(
         tuple(r) for r in spark.read.parquet(out)
         .select("bucket", "doc_id", "seq", "kind", "text", "media_ref",
-                "offset")
-        .where(F.col("kind") != job.STATS_KIND).collect()
+                "offset").collect()
     )
 
 
@@ -74,29 +74,45 @@ def _waves(cp: str) -> int:
 def test_bucket_column_passes_through_every_output_row():
     """In process: a batch with a ``bucket`` column is extracted bucket
     by bucket, every output row carries its doc's bucket, and each
-    bucket's rows, stats row included, equal extracting that bucket's
-    docs on their own."""
+    bucket's rows equal extracting that bucket's docs on their own. The
+    internal ``__tables``/``__error`` columns count, per bucket, the
+    same tables and errors in both modes: the flat error rows, and the
+    pages of the nested records."""
     t = _spans_table(40)
     buckets = pa.array([i % 3 for i in range(t.num_rows)], pa.int32())
     batch = t.append_column("bucket", buckets).to_batches()[0]
+    counts = {}
     for mode in ("spans", "nested"):
         fn = make_map_in_arrow_fn(mode)
         got = pa.Table.from_batches(list(fn([batch]))).to_pandas()
         for b in range(3):
             alone = t.filter(pa.compute.equal(buckets, b)).to_batches()[0]
             exp = pa.Table.from_batches(list(fn([alone]))).to_pandas()
-            part = got[got.bucket == b].drop(columns="bucket")
+            part = got[got.bucket == b].drop(
+                columns=["bucket", "__tables", "__error"])
             assert part.reset_index(drop=True).equals(exp), (mode, b)
         assert len(got) == sum(
             (got.bucket == b).sum() for b in range(3)), mode
-    flat = pa.Table.from_batches(list(
-        make_map_in_arrow_fn()([batch]))).to_pandas()
-    assert sorted(flat[flat.kind == "stats"].bucket) == [0, 1, 2]
-    # no bucket column: unchanged single extraction, one stats row
+        counts[mode] = got.groupby("bucket")[["__tables", "__error"]].sum()
+        assert not got["__tables"][got["__error"]].any(), mode
+        if mode == "spans":
+            assert set(got["__tables"]) == {0, 1}
+            assert list(got["__error"]) == list(got.kind == spec.KIND_ERROR)
+            assert set(got.kind) == {"text", "media", "error"}
+        else:
+            pages = [len(json.loads(r)["result"]["pages"])
+                     for r in got.result]
+            assert list(got["__tables"]) == pages
+            assert list(got["__error"]) == [
+                "error" in json.loads(r) for r in got.result]
+    assert counts["spans"].equals(counts["nested"])
+    assert counts["spans"]["__error"].sum() == 1
+    assert counts["spans"]["__tables"].sum() > 0
+    # no bucket column: the data columns only, no count columns
     plain = pa.Table.from_batches(list(make_map_in_arrow_fn()(
         [t.to_batches()[0]]))).to_pandas()
-    assert "bucket" not in plain.columns
-    assert (plain.kind == "stats").sum() == 1
+    assert list(plain.columns) == [
+        "doc_id", "seq", "kind", "text", "media_ref", "offset"]
 
 
 def test_wave_checkpoint_rows_equal_per_bucket_runs(spark, tmp_path):
@@ -267,3 +283,33 @@ def test_repeated_or_out_of_range_bucket_ids_are_rejected(spark, tmp_path):
         with pytest.raises(ValueError, match="repeated bucket id"):
             job.compact_output(spark, out, buckets=[0, 0], dry_run=dry_run)
     assert _out_rows(spark, out) == rows
+
+
+def test_null_doc_id_is_one_error_row_through_run_extraction(spark, tmp_path):
+    """A doc whose ``doc_id`` is null, in a pyarrow-written parquet
+    input at K=4: it yields one error row with a null ``doc_id``, every
+    other doc equals ``oracle.extract_document``, the checkpoint counts
+    the one error, and the raw output holds data and error rows only."""
+    from key_resource_table_extractor_spark import oracle
+
+    t = _spans_table(30)
+    ids = t.column("doc_id").to_pylist()
+    ids[ids.index(BAD_DOC[0])] = None  # its null offset stays, too
+    os.makedirs(tmp_path / "in")
+    pq.write_table(t.set_column(0, "doc_id", pa.array(ids, pa.string())),
+                   str(tmp_path / "in" / "part-0.parquet"))
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    job.run_extraction(spark, job.read_spans(spark, str(tmp_path / "in")),
+                       out, cp, run_id="z", n_buckets=4)
+    rows = spark.read.parquet(out).orderBy("seq").collect()
+    err = [r for r in rows if r["kind"] == spec.KIND_ERROR]
+    assert [(r["doc_id"], r["seq"]) for r in err] == [(None, 0)]
+    assert "the doc_id is null" in err[0]["text"]
+    assert {r["kind"] for r in rows} == {"text", "media", "error"}
+    for d in ids[:-1]:
+        got = [(r["seq"], r["kind"], r["text"], r["media_ref"], r["offset"])
+               for r in rows if r["doc_id"] == d]
+        assert got == oracle.extract_document(synth.generate_doc(d, 5)), d
+    cp_rows = _cp_rows(spark, cp).values()
+    assert sum(r["n_errors"] for r in cp_rows) == 1
+    assert sum(r["n_docs"] for r in cp_rows) == 31

@@ -82,7 +82,7 @@ def test_midrow_colspan_round_trip():
     """Gold row [("",1), (content, colspan=2)] survives render → extract →
     with_colspans output with the SAME cell shape."""
     nested = extract_batch(
-        _pdf_of(MIDSPAN_TBL), "nested-colspans", merge_rows=False
+        _pdf_of(MIDSPAN_TBL), "nested-colspans", row_model="none"
     )
     rows = _nested_rows(nested)
     # drop the prepended title row, compare the data rows cell-for-cell
@@ -103,7 +103,7 @@ def test_rowspan_round_trip():
     covered position, and the extracted content grid matches it exactly."""
     gold_grid = gold_table_grid(ROWSPAN_TBL)
     assert gold_grid[2] == ["Primer rev AAGCTT", "IDT", ""]  # filler carried
-    nested = extract_batch(_pdf_of(ROWSPAN_TBL), "nested", merge_rows=False)
+    nested = extract_batch(_pdf_of(ROWSPAN_TBL), "nested", row_model="none")
     rows = _nested_rows(nested)
     assert rows[1:] == gold_grid  # title row aside, exact grid round-trip
     # the dict-shape grid keeps extents aligned via a filler dict cell
@@ -157,7 +157,7 @@ def test_unevidenced_span_stays_colspan_one():
         ],
     }
     rows = _nested_rows(
-        extract_batch(_pdf_of(tbl), "nested-colspans", merge_rows=False)
+        extract_batch(_pdf_of(tbl), "nested-colspans", row_model="none")
     )
     bar = next(r for r in rows if r[0]["content"].startswith("Bar"))
     assert [(c["content"], c["colspan"]) for c in bar] == [

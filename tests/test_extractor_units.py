@@ -261,6 +261,9 @@ def test_error_isolation_bad_doc_does_not_fail_batch():
     )
     out = extract_batch(pdf)
     assert (out[out.doc_id == "ok"]["kind"] == "text").any()
-    # stats row present and consistent
-    stats = out[out["kind"] == "stats"]
-    assert len(stats) == 1
+    assert set(out.kind) == {"text"}  # no stats row, no error
+    # the bucketed batch's count columns: one table, no error
+    counted = extract_batch(pdf.assign(bucket=0))
+    assert counted.drop(columns=["bucket", "__tables", "__error"]).equals(out)
+    assert counted["__tables"].sum() == 1
+    assert not counted["__error"].any()

@@ -177,7 +177,7 @@ def test_pipeline_scores_high_on_gold_corpus():
 )
 def test_colspan_round_trip_on_gold_corpus():
     """Full-width spanning rows survive the render → extract round trip in
-    the with_colspans nested mode (merge_rows=False isolates physical rows,
+    the with_colspans nested mode (row_model="none" isolates physical rows,
     the reference's pipeline-A / use_row_info=False semantics)."""
     gold = load_gold_tables(GOLD_DIR)
     target = None
@@ -199,7 +199,7 @@ def test_colspan_round_trip_on_gold_corpus():
         ])],
         columns=["doc_id", "spans"],
     )
-    nested = extract_batch(pdf, "nested-colspans", merge_rows=False)
+    nested = extract_batch(pdf, "nested-colspans", row_model="none")
     res = json.loads(nested["result"].iloc[0])
     pred_rows = [
         r

@@ -26,7 +26,18 @@ def _table_rows(result: str) -> list[list[str]]:
     return [r for p in pages for t in p["tables"] for r in t["rows"]]
 
 
-def test_null_spans_and_fields_do_not_poison_batch():
+def test_null_spans_and_fields_do_not_poison_batch(spark, tmp_path):
+    """A null span list, null span fields and an empty span list extract
+    to nothing without an error; the good doc is unaffected, and a run's
+    checkpoint counts all four docs, one table and no error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        _SPAN_TYPE,
+    )
+
     pdf = pd.DataFrame(
         {
             "doc_id": ["good", "null_spans", "null_fields", "empty"],
@@ -45,14 +56,25 @@ def test_null_spans_and_fields_do_not_poison_batch():
     good = out[(out.doc_id == "good") & (out.kind == "text")]
     assert len(good) > 0
     assert (out["kind"] != "error").all()  # nothing crashed per-doc either
-    # stats row counts all four docs
-    stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
-    assert stats["n_docs"] == 4
-    assert stats["n_errors"] == 0
     nested = extract_batch(pdf, "nested")
     assert list(nested["doc_id"]) == ["good"]
     cells = [c for r in _table_rows(nested.iloc[0]["result"]) for c in r]
     assert cells == list(good["text"])
+    for mode in ("spans", "nested"):
+        counted = extract_batch(pdf.assign(bucket=0), mode)
+        assert counted["__tables"].sum() == 1, mode
+        assert not counted["__error"].any(), mode
+    inp = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table({
+        "doc_id": list(pdf["doc_id"]),
+        "spans": pa.array(list(pdf["spans"]), pa.list_(_SPAN_TYPE)),
+    }), inp)
+    cp = str(tmp_path / "cp")
+    job.run_extraction(spark, job.read_spans(spark, inp),
+                       str(tmp_path / "out"), cp, n_buckets=1)
+    [row] = job._read_checkpoint(spark, cp).collect()
+    assert (row["n_docs"], row["n_tables"], row["n_errors"]) == (4, 1, 0)
+    assert row["n_spans_out"] == len(good)
 
 
 def test_null_offset_is_a_per_doc_error():
@@ -88,8 +110,34 @@ def test_null_offset_is_a_per_doc_error():
             }], mode
             got = got[got.doc_id != "bad"].reset_index(drop=True)
             assert got.equals(extract_batch(ref, mode)), mode
-        stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
-        assert stats["n_errors"] == 1
+        for mode in ("spans", "nested", "nested-colspans"):
+            counted = extract_batch(pdf.assign(bucket=0), mode)
+            assert counted["__error"].sum() == 1, mode
+            assert counted["__tables"].sum() == 2, mode
+
+
+def test_null_doc_id_is_a_per_doc_error():
+    """A doc whose ``doc_id`` is null yields one error row (flat) or one
+    error record without pages (nested), its ``doc_id`` null too, and
+    the other docs come out as if it were absent."""
+    pdf = pd.DataFrame({"doc_id": ["a", None, "b"],
+                        "spans": [GOOD, GOOD, GOOD]})
+    ref = pd.DataFrame({"doc_id": ["a", "b"], "spans": [GOOD, GOOD]})
+    out = extract_batch(pdf)
+    rows = out[out.doc_id.isna()]
+    assert list(rows["kind"]) == ["error"] and list(rows["seq"]) == [0]
+    assert "the doc_id is null" in rows.iloc[0]["text"]
+    exp = extract_batch(ref)
+    assert out[out.doc_id.notna()].reset_index(drop=True).equals(exp)
+    for mode in ("nested", "nested-colspans"):
+        got = extract_batch(pdf, mode)
+        err = got[got.doc_id.isna()]
+        assert [json.loads(r) for r in err["result"]] == [{
+            "paper_id": None, "result": {"pages": []},
+            "error": rows.iloc[0]["text"],
+        }], mode
+        got = got[got.doc_id.notna()].reset_index(drop=True)
+        assert got.equals(extract_batch(ref, mode)), mode
 
 
 def test_null_offset_doc_does_not_sink_the_assembly_stream(spark, tmp_path):
@@ -160,6 +208,18 @@ def test_unknown_output_mode_is_rejected_before_any_write(spark, tmp_path):
             n_buckets=2, output_mode="nested_colspans",
         )
     assert not out_dir.exists()
+
+
+def test_unknown_row_model_is_rejected():
+    """A mistyped or missing row model raises before any data is
+    touched instead of silently extracting without row merging."""
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        make_map_in_arrow_fn,
+    )
+
+    for bad in ("anchr", None):
+        with pytest.raises(ValueError, match="unknown row_model"):
+            make_map_in_arrow_fn(row_model=bad)
 
 
 def test_sliced_list_array_in_arrow_path():

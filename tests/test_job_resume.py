@@ -1038,6 +1038,42 @@ def test_upsert_zero_output_doc_still_removes_stale_rows(spark, tmp_path):
     assert got.where(F.col("doc_id") == changed).count() == 0
 
 
+def test_flat_upsert_writes_the_error_row_a_run_writes(spark, tmp_path):
+    """A flat upsert writes the rows a run writes: a changed doc whose new
+    spans have a null offset is replaced by its one ``kind='error'`` row
+    in the raw bucket, which ``read_output`` filters out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        _SPAN_TYPE,
+    )
+
+    out = str(tmp_path / "out")
+    job.run_extraction(
+        spark, job.synthesize_spans(spark, 40, seed=42), out,
+        str(tmp_path / "cp"), run_id="upe", n_buckets=3,
+        partitions_per_bucket=2,
+    )
+    changed = (
+        job.read_output(spark, out).select("doc_id").distinct().head()["doc_id"]
+    )
+    bad = [{"kind": "text", "text": "Antibody  Source  Identifier",
+            "media_ref": "", "offset": None}]
+    # pyarrow-written: Spark's row schema refuses a null offset
+    inp = str(tmp_path / "changed.parquet")
+    pq.write_table(pa.table({
+        "doc_id": [changed], "spans": pa.array([bad], pa.list_(_SPAN_TYPE)),
+    }), inp)
+    job.upsert_docs(spark, job.read_spans(spark, inp), out)
+    raw = spark.read.parquet(out).where(F.col("doc_id") == changed).collect()
+    assert [(r["seq"], r["kind"]) for r in raw] == [(0, "error")]
+    assert "null offset" in raw[0]["text"]
+    assert job.read_output(spark, out).where(
+        F.col("doc_id") == changed).count() == 0
+
+
 def test_upsert_dry_run_buckets_affected_is_upper_bound(spark, tmp_path):
     """Documented asymmetry with delete's pre-flight: upsert dry_run's
     ``buckets_affected`` is an UPPER bound on the real ``buckets_

@@ -141,8 +141,8 @@ def test_excepted_lines_and_pages_match_oracle():
 
 
 def test_merge_flag_changes_output_and_matches_oracle():
-    merged = extract_batch(pdf_of(DOC), merge_rows=True)
-    raw = extract_batch(pdf_of(DOC), merge_rows=False)
+    merged = extract_batch(pdf_of(DOC), row_model="votes")
+    raw = extract_batch(pdf_of(DOC), row_model="none")
     m_texts = [t for _k, t, _o in flat(merged)]
     r_texts = [t for _k, t, _o in flat(raw)]
     assert "Abcam continued text" in m_texts  # merged fold
@@ -197,7 +197,7 @@ def test_fused_synth_extract_equals_unfused_paths(spark):
 
     sf = "/root/testdata/sf0.001"
 
-    def old_flat(row_model=None):
+    def old_flat(row_model="votes"):
         spans = entry._spans_from_documents(spark, sf)
         spans = job.salted_repartition(spans, 4)
         return job.data_spans(job.extract(spans, row_model=row_model))

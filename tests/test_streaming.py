@@ -19,6 +19,11 @@ def test_stream_equals_batch(spark, tmp_path):
 
     q = run_stream_extraction(spark, inp_dir, out_dir, cp_dir)
     q.awaitTermination(180)
+    # the raw sink holds data and error rows only: no metrics rows
+    raw = spark.read.parquet(out_dir)
+    assert {r["kind"] for r in raw.select("kind").distinct().collect()} \
+        <= {"text", "media", "error"}
+    assert raw.where(F.col("doc_id") == "__stats__").count() == 0
 
     got = (
         job.data_spans(spark.read.parquet(out_dir))
