@@ -137,6 +137,12 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, key)
 
 
+def _bucket_of(n_buckets: int):
+    """A doc's bucket: ``pmod(xxhash64(doc_id), n_buckets)``, the
+    placement the run writes and delete/upsert recompute."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 # --------------------------------------------------------------------------
 # extract
 # --------------------------------------------------------------------------
@@ -378,7 +384,7 @@ def run_extraction(
     _write_bucket_count_marker(spark, output_path, n_buckets, adopt_k=adopt_k)
     done = completed_buckets(spark, checkpoint_path, run_id)
     bucketed = input_df.select("doc_id", "spans").withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+        "bucket", _bucket_of(n_buckets)
     )
     requested = buckets if buckets is not None else range(n_buckets)
     todo = [b for b in requested if b not in done]
@@ -930,7 +936,7 @@ def delete_docs(
         ids_src = spark.createDataFrame(
             [(d,) for d in doc_ids], "doc_id string"
         )
-    bucket_of = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    bucket_of = _bucket_of(n_buckets)
     # cached: the id set feeds the affected-bucket aggregation, the
     # hit-count semi-join, and the staged anti-join — a DataFrame id
     # source would otherwise recompute for each
@@ -1008,16 +1014,20 @@ def upsert_docs(
     The affected buckets are the hash buckets of the input doc_ids. The
     real run rewrites them through ``_rewrite_buckets`` in ONE staged
     write of (old rows minus the upserted doc_ids) ∪ (the freshly
-    extracted rows): extraction runs once, inside that write, and the
-    Spark-job count is constant in the number of buckets touched. The
-    replace set comes from ``input_df``, NOT from the extraction output —
-    a changed doc whose new content yields zero rows (no tables
-    detected) still has its stale rows removed. Buckets holding none of
-    the upserted docs keep their files byte-identical; a doc new to the
-    corpus lands in its hash bucket even if that directory did not exist
-    yet. ``extract_kw`` forwards the extraction options (``row_model``,
-    ``excepted_*``, ``gap_min_spaces``) so the replacement rows follow
-    the same config as the original run.
+    extracted rows): extraction runs once, inside that write, on the
+    input with its ``bucket`` column, through the same bucketed
+    ``mapInArrow`` branch as ``run_extraction`` (the two count columns
+    dropped), and the Spark-job count is constant in the number of
+    buckets touched. The replace set comes from ``input_df``, NOT from
+    the extraction output — a changed doc whose new content yields zero
+    rows (no tables detected) still has its stale rows removed. Buckets
+    holding none of the upserted docs keep their files byte-identical; a
+    doc new to the corpus lands in its hash bucket even if that directory
+    did not exist yet. ``extract_kw`` forwards the extraction options
+    (``row_model``, ``excepted_*``, ``gap_min_spaces``,
+    ``midcol_rowspans``) so the replacement rows follow the same config
+    as the original run; an invalid one raises ``ValueError`` before
+    anything is read.
 
     Like compaction, an upsert is not a lineage event: the checkpoint
     table is untouched. The replacement rows are those a run writes:
@@ -1036,8 +1046,7 @@ def upsert_docs(
     extraction it exists to avoid. ``rows_to_replace``/``docs_*`` are
     exact.
     """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    extract = _extraction(output_mode, **extract_kw)
     fs, jvm = _fs(spark, output_path)
     # raises on a typo'd path, even with an explicit n_buckets
     inv, _ = _bucket_inventory(fs, jvm, output_path)
@@ -1055,7 +1064,7 @@ def upsert_docs(
             "buckets_total": n_buckets,
             "docs_upserted": 0,
         }
-    bucket_of = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    bucket_of = _bucket_of(n_buckets)
     ids = (
         input_df.select("doc_id").distinct()
         .withColumn("bucket", bucket_of)
@@ -1086,18 +1095,16 @@ def upsert_docs(
                 "docs_new": n_docs - docs_replacing,
                 "rows_to_replace": rows_to_replace,
             }
-        new_rows = _extraction(output_mode, **extract_kw)(input_df)
-        schema = StructType(
-            new_rows.schema.fields + [StructField("bucket", IntegerType())]
-        )
-        new_rows = new_rows.withColumn("bucket", bucket_of)
+        new_rows = extract(
+            input_df.select("doc_id", "spans").withColumn("bucket", bucket_of)
+        ).drop("__tables", "__error")
 
         def rows():
             if not existing:  # every doc new to its bucket
                 return new_rows
             return (
                 # explicit schema: no footer read to infer it
-                spark.read.schema(schema)
+                spark.read.schema(new_rows.schema)
                 .option("basePath", output_path)
                 .parquet(*[f"{output_path}/bucket={b}" for b in existing])
                 .join(

@@ -137,9 +137,6 @@ def main(argv=None):
                 dry_run=args.dry_run,
             )
         else:
-            if args.midcol_rowspans and args.output_mode != "nested-colspans":
-                p.error("--midcol-rowspans requires "
-                        "--output-mode nested-colspans")
             summary = {"cmd": "upsert"} | job.upsert_docs(
                 spark,
                 job.read_spans(spark, args.input),
@@ -151,12 +148,7 @@ def main(argv=None):
                 gap_min_spaces=args.gap_min_spaces,
                 excepted_lines=_ints(args.excepted_lines),
                 excepted_pages=_ints(args.excepted_pages),
-                # only the colspan-aware nested path knows the flag; the
-                # flat extractor would reject the kwarg
-                **(
-                    {"midcol_rowspans": True}
-                    if args.midcol_rowspans else {}
-                ),
+                midcol_rowspans=args.midcol_rowspans,
             )
         print(json.dumps(summary))
         return 0

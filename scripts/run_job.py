@@ -98,9 +98,6 @@ def main(argv=None):
 
     spark = build_session(app_name="krt-run", master=args.master)
     try:
-        if args.midcol_rowspans and args.output_mode != "nested-colspans":
-            p.error("--midcol-rowspans requires "
-                    "--output-mode nested-colspans")
         if args.input:
             inp = job.read_spans(spark, args.input)
         elif args.n_docs:

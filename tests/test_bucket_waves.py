@@ -313,3 +313,49 @@ def test_null_doc_id_is_one_error_row_through_run_extraction(spark, tmp_path):
     cp_rows = _cp_rows(spark, cp).values()
     assert sum(r["n_errors"] for r in cp_rows) == 1
     assert sum(r["n_docs"] for r in cp_rows) == 31
+
+
+def test_duplicate_doc_counts_both_copies_through_run_extraction(
+    spark, tmp_path
+):
+    """A doc written twice, adjacent, into a pyarrow-written parquet
+    input at K=2: the checkpoint counts both copies' docs and tables, and
+    each copy's rows equal ``oracle.extract_document`` (flat) or its
+    record's cells the oracle's text spans (nested)."""
+    from key_resource_table_extractor_spark import oracle
+
+    t = _spans_table(6)
+    dup = t.column("doc_id")[1].as_py()
+    os.makedirs(tmp_path / "in")
+    pq.write_table(t.take([0, 1, 1, 2, 3, 4, 5, 6]),
+                   str(tmp_path / "in" / "part-0.parquet"))
+    inp = job.read_spans(spark, str(tmp_path / "in"))
+    # tables per doc, each doc extracted once in process
+    alone = pa.Table.from_batches(list(make_map_in_arrow_fn()([
+        t.append_column("bucket", pa.array([0] * t.num_rows, pa.int32()))
+        .to_batches()[0]]))).to_pandas()
+    tables = alone.groupby("doc_id")["__tables"].sum()
+    assert tables[dup] > 0
+    exp = oracle.extract_document(synth.generate_doc(dup, 5))
+    for mode in ("spans", "nested"):
+        out, cp = str(tmp_path / mode), str(tmp_path / f"{mode}_cp")
+        job.run_extraction(spark, inp, out, cp, run_id="d", n_buckets=2,
+                           output_mode=mode)
+        cp_rows = _cp_rows(spark, cp).values()
+        assert sum(r["n_docs"] for r in cp_rows) == 8, mode
+        assert sum(r["n_tables"] for r in cp_rows) \
+            == tables.sum() + tables[dup], mode
+        assert sum(r["n_errors"] for r in cp_rows) == 1, mode
+        got = spark.read.parquet(out).where(F.col("doc_id") == dup)
+        if mode == "spans":
+            rows = [tuple(r) for r in got.select(
+                "seq", "kind", "text", "media_ref", "offset").collect()]
+            assert sorted(rows) == sorted(exp + exp)
+        else:
+            cells = [
+                [c for p in json.loads(r["result"])["result"]["pages"]
+                 for tb in p["tables"] for row in tb["rows"] for c in row]
+                for r in got.collect()
+            ]
+            texts = [text for _, kind, text, _, _ in exp if kind == "text"]
+            assert cells == [texts, texts]

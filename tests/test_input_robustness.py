@@ -222,6 +222,62 @@ def test_unknown_row_model_is_rejected():
             make_map_in_arrow_fn(row_model=bad)
 
 
+def test_midcol_rowspans_outside_nested_colspans_is_rejected(spark, tmp_path):
+    """``midcol_rowspans`` only means something to the colspan-aware
+    nested output: with any other mode it raises before any data is
+    touched, in process, in a run and in an upsert, which write nothing."""
+    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        make_map_in_arrow_fn,
+    )
+
+    for mode in ("spans", "nested"):
+        with pytest.raises(ValueError, match="midcol_rowspans"):
+            make_map_in_arrow_fn(mode, midcol_rowspans=True)
+    make_map_in_arrow_fn("nested-colspans", midcol_rowspans=True)
+    with pytest.raises(ValueError, match="midcol_rowspans"):
+        job.run_extraction(
+            spark, job.synthesize_spans(spark, 4, partitions=1),
+            str(tmp_path / "out"), str(tmp_path / "cp"), n_buckets=2,
+            output_mode="nested", midcol_rowspans=True,
+        )
+    # an upsert refuses it before it looks for the output
+    with pytest.raises(ValueError, match="midcol_rowspans"):
+        job.upsert_docs(spark, job.synthesize_spans(spark, 4, partitions=1),
+                        str(tmp_path / "out"), midcol_rowspans=True)
+    assert not (tmp_path / "out").exists()
+
+
+def test_rows_sharing_a_doc_id_extract_per_input_row():
+    """Two rows with a null ``doc_id`` and two with the same ``doc_id``
+    in one batch come out as the four rows extracted one batch each:
+    ``seq`` from 0 per input row, four nested records. With any
+    ``bucket`` assignment the rows are the same, each carries its input
+    row's bucket, and the two copies count two tables."""
+    import numpy as np
+
+    pdf = pd.DataFrame({"doc_id": [None, None, "a", "a"], "spans": [GOOD] * 4})
+    for mode in ("spans", "nested", "nested-colspans"):
+        parts = [extract_batch(pdf.iloc[[i]], mode) for i in range(4)]
+        got = extract_batch(pdf, mode)
+        assert got.equals(pd.concat(parts, ignore_index=True)), mode
+        one = extract_batch(pdf.iloc[[2]].assign(bucket=0), mode)
+        assert one["__tables"].sum() == 1, mode
+        for buckets in ([0, 0, 0, 0], [1, 0, 1, 0], [3, 2, 1, 0]):
+            b = extract_batch(pdf.assign(bucket=buckets), mode)
+            assert b.drop(columns=["bucket", "__tables", "__error"]).equals(
+                got), (mode, buckets)
+            assert list(b["bucket"]) == list(
+                np.repeat(buckets, [len(p) for p in parts])), (mode, buckets)
+            assert b["__tables"].sum() == 2 * one["__tables"].sum()
+            assert b["__error"].sum() == 2
+    flat = extract_batch(pdf)
+    n = len(extract_batch(pdf.iloc[[2]]))
+    assert list(flat.seq[flat.doc_id == "a"]) == 2 * list(range(n))
+    assert list(flat.seq[flat.doc_id.isna()]) == [0, 0]
+    assert len(extract_batch(pdf, "nested")) == 4
+
+
 def test_sliced_list_array_in_arrow_path():
     """A RecordBatch whose spans ListArray is a nonzero-offset slice must
     not misalign span_doc with the child value arrays (the child of a
