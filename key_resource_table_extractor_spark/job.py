@@ -124,23 +124,45 @@ def synth_extract(
 # --------------------------------------------------------------------------
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> DataFrame:
-    """Deterministic salted hash repartition by doc_id.
+    """Deterministic hash repartition on ``(doc_id, salt)``.
 
-    Different ``salt`` values give different placements but must give
-    byte-identical results (the determinism test) — extraction is a pure
-    per-doc function. At cluster scale this defuses hot partitions when many
-    mega-docs hash together (SURVEY §4 skew note).
+    The balance comes from hashing the doc key once: a row goes to
+    ``pmod(murmur3(doc_id, salt), n)``, so each partition gets about 1/n
+    of the docs. A key first reduced to n small ints would be hashed
+    again modulo n, and those n values collide (about 0.6·n partitions
+    would get docs). Murmur3 is independent of the bucket's
+    ``xxhash64(doc_id)``, so a one-bucket wave spreads as evenly.
+    ``salt`` only changes the placement (it can move mega-docs that hash
+    together apart, SURVEY §4 skew note); results are byte-identical at
+    any salt (the determinism test) — extraction is a pure per-doc
+    function.
     """
-    key = F.pmod(
-        F.xxhash64(F.col("doc_id"), F.lit(salt)), F.lit(num_partitions)
-    ).cast("int")
-    return df.repartition(num_partitions, key)
+    return df.repartition(num_partitions, F.col("doc_id"), F.lit(salt))
 
 
 def _bucket_of(n_buckets: int):
     """A doc's bucket: ``pmod(xxhash64(doc_id), n_buckets)``, the
     placement the run writes and delete/upsert recompute."""
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def _partition_keys(spark: SparkSession, n: int) -> list[int]:
+    """Int keys ``k_0..k_{n-1}`` such that ``repartition(n, key)`` puts
+    the rows of key ``k_i`` on task ``i``: hash partitioning places a row
+    at ``pmod(hash(key), n)``, the same murmur3 ``F.hash`` computes, so
+    the first int of ``range(m)`` landing on each task is searched for
+    (one small job; m grows until every task has one)."""
+    k, m = F.col("id").cast("int"), 16 * n
+    while True:
+        found = dict(
+            spark.range(m)
+            .groupBy(F.pmod(F.hash(k), F.lit(n)))
+            .agg(F.min(k))
+            .collect()
+        )
+        if len(found) == n:
+            return [found[i] for i in range(n)]
+        m *= 4
 
 
 # --------------------------------------------------------------------------
@@ -822,13 +844,14 @@ def compact_output(
     ``dry_run=True`` reports that selection and touches nothing:
     filesystem metadata only — no Spark jobs, no recovery, no writes,
     untouched mtimes. ``files_target`` is an upper bound on the real
-    run's ``files_after``: ``repartition(n)`` emits fewer files when the
-    bucket holds fewer rows than partitions, and (bucket, slot) pairs
-    that hash to one task are concatenated by the writer.
+    run's ``files_after``, met exactly when every slot holds a row: a
+    bucket with fewer docs than slots leaves some slots empty.
 
     The real run rewrites the selection through ``_rewrite_buckets``:
-    per-row ``__slot = pmod(xxhash64(doc_id), files_target(bucket))``,
-    repartitioned on (bucket, __slot). ``__slot`` is a deterministic
+    per-row slot ``pmod(hash(doc_id), files_target(bucket))`` (murmur3,
+    independent of the bucket's ``xxhash64``, so a bucket sees all its
+    slots), and each (bucket, slot) pair on its own task
+    (``_partition_keys``), one file each. The slot is a deterministic
     function of doc_id, so a retried task reproduces the same placement
     and a doc's rows stay in one output file. ``files_after`` is what
     landed in the live directory after the swap; a bucket whose files
@@ -862,9 +885,12 @@ def compact_output(
     ]
     if targets:
         todo = [b for b, _ in targets]
-        tmap = spark.createDataFrame(targets, "bucket int, __ft int")
-        n_parts = max(
-            spark.sparkContext.defaultParallelism, sum(n for _, n in targets)
+        n_parts = sum(n for _, n in targets)
+        keys = iter(_partition_keys(spark, n_parts))
+        # bucket -> (its slot count, the task key of each of its slots)
+        tmap = spark.createDataFrame(
+            [(b, n, [next(keys) for _ in range(n)]) for b, n in targets],
+            "bucket int, __ft int, __keys array<int>",
         )
         _rewrite_buckets(
             spark, fs, jvm, output_path, "compact_stage", todo,
@@ -872,12 +898,11 @@ def compact_output(
                 spark.read.option("basePath", output_path)
                 .parquet(*[f"{output_path}/bucket={b}" for b in todo])
                 .join(F.broadcast(tmap), "bucket")
-                .withColumn(
-                    "__slot",
-                    F.pmod(F.xxhash64("doc_id"), F.col("__ft")).cast("int"),
-                )
-                .repartition(n_parts, F.col("bucket"), F.col("__slot"))
-                .drop("__ft", "__slot")
+                .withColumn("__task", F.element_at(
+                    "__keys", F.pmod(F.hash("doc_id"), F.col("__ft")) + 1
+                ))
+                .repartition(n_parts, "__task")
+                .drop("__ft", "__keys", "__task")
             ),
             keep_empty=True,
         )
