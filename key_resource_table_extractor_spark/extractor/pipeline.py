@@ -4,21 +4,30 @@ The whole five-stage cascade of the reference (SURVEY.md §0) runs as a pure
 function over one Arrow batch of ``(doc_id, spans)`` rows inside
 ``mapInArrow`` — every Spark extraction shape runs ``make_map_in_arrow_fn``
 (or, for the fused synthetic-input queries, its ``make_extract_fn`` step).
-Design:
+Every stage runs once over the whole batch, never per doc:
 
-- batch-global passes (line features, in-table scoring, gap fill, island
-  detection) are fully vectorized with pandas/numpy over *all* lines of *all*
-  docs in the batch at once;
-- per-region structure work (column trap-range union, segment→column
-  assignment, merge votes) is numpy over each region's small arrays —
-  the same two-pointer/searchsorted shape as the reference's Java merges
-  (PDFTableExtractor2.java:271-302,574-593) instead of O(n²) scans;
+- line passes: the segment scan is one regex split of the batch's
+  tab-joined lines; the RRID/header features are ``str.find`` of literal
+  words in the joined (case-mapped) text, each hit checked by its regex;
+  in-table scoring, gap fill and island detection are pandas/numpy over
+  all lines of all docs at once;
+- region build: every table of the batch at once. One lexsort of the
+  structural segments by (region, start) with a running max that
+  restarts per region gives the column trap ranges; two ``searchsorted``
+  over (table, bound) keys assign segments to columns — the
+  two-pointer/searchsorted shape of the reference's Java merges
+  (PDFTableExtractor2.java:271-302,574-593) instead of O(n²) scans. Cells
+  are grouped joins (Arrow ``binary_join``), merge votes are array
+  predicates over adjacent rows' cells, rows fold by group ids and media
+  route by one ``searchsorted`` over each doc's table windows;
 - documents are isolated: a failing document yields a single ``kind='error'``
   row (the reference stores per-job err_msg, task_manager.py:56-59) and
-  never fails the stage.
+  never fails the stage — the batch-wide call is retried on halves until
+  the failing doc runs alone.
 
-No per-row Python UDFs; the only O(lines) Python loop is the compiled-regex
-segment scan (C-speed finditer).
+No per-row Python UDFs. The Python-level loops left run once per line
+(the section-header shape test), per literal hit, and per distinct first
+character of a cell.
 """
 
 from __future__ import annotations
@@ -26,21 +35,32 @@ from __future__ import annotations
 import json
 import re
 import traceback
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .. import spec
 
-_SEG_RE = re.compile(spec.SEGMENT_REGEX)
+
+@lru_cache(maxsize=None)
+def _seg_split_re(gap_min_spaces: int) -> re.Pattern:
+    """Splits text into [gap, segment, gap, ..., segment, gap]: segments
+    are maximal runs of non-gap characters, so what lies between them is
+    only spaces and tabs."""
+    return re.compile("(%s)" % spec.segment_regex(gap_min_spaces))
 
 
-def _seg_re(gap_min_spaces: int):
-    if gap_min_spaces == spec.GAP_MIN_SPACES:
-        return _SEG_RE
-    return re.compile(spec.segment_regex(gap_min_spaces))
-_RRID_PAT = spec.RRID_REGEX
+_RRID_RE = re.compile(spec.RRID_REGEX)
+# RRID_REGEX is "(?i)\b" + a word: the line pass finds the word in the
+# case-folded text with str.find and checks each hit with the regex
+_RRID_WORD = spec.RRID_REGEX.removeprefix(r"(?i)\b")
+assert _RRID_WORD.isalpha() and _RRID_WORD.islower(), spec.RRID_REGEX
+# the non-ASCII letters re's IGNORECASE matches to ASCII ones
+_RE_FOLDS = str.maketrans("\u0130\u0131\u017f\u212a", "iisk")
+_KEYWORD_RES = {kw: re.compile(r"\b%s\b" % kw) for kw in spec.HEADER_KEYWORDS}
 
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
 NESTED_COLUMNS = ["doc_id", "result"]
@@ -51,66 +71,89 @@ ROW_MODELS = ("votes", "anchor", "none")
 # --------------------------------------------------------------------------
 # batch-global vectorized passes
 # --------------------------------------------------------------------------
+# Both line passes scan ONE string, the batch's lines joined by tabs, and
+# map match positions back to lines. A tab is a column gap and a non-word
+# character, so no segment, keyword or title match crosses a line, and
+# ``\b`` at a line's edge behaves as at a string's edge.
 
-def _segment_scan(texts: np.ndarray, gap_min_spaces: int = spec.GAP_MIN_SPACES):
-    """Flat segment arrays for all lines: (line_idx, start, end, text)."""
-    seg_line: list[int] = []
-    seg_start: list[int] = []
-    seg_end: list[int] = []
-    seg_text: list[str] = []
-    n_segs = np.zeros(len(texts), dtype=np.int32)
+def _run_starts(x: np.ndarray) -> np.ndarray:
+    """Where a run of equal values of ``x`` begins."""
+    starts = np.ones(len(x), dtype=bool)
+    starts[1:] = x[1:] != x[:-1]
+    return starts
+
+
+def _joined(texts) -> tuple[str, np.ndarray]:
+    """The tab-joined lines and each line's start in that string."""
+    lens = np.fromiter(map(len, texts), np.int64, len(texts))
+    return "\t".join(texts), np.cumsum(lens + 1) - (lens + 1)
+
+
+def _hits(text: str, word: str) -> list[int]:
+    """Every position of ``word`` in ``text`` (C-speed ``str.find``)."""
+    pos = []
+    i = text.find(word)
+    while i >= 0:
+        pos.append(i)
+        i = text.find(word, i + 1)
+    return pos
+
+
+def _lines_of(pos: list[int], line_at: np.ndarray) -> np.ndarray:
+    """Per line: does one of the positions ``pos`` fall in it?"""
+    hit = np.zeros(len(line_at), dtype=bool)
+    at = np.searchsorted(line_at, np.array(pos, dtype=np.int64), "right")
+    hit[at - 1] = True
+    return hit
+
+
+def _segment_scan(texts, gap_min_spaces: int = spec.GAP_MIN_SPACES):
+    """Flat segment arrays for all lines — (line_idx, start, end, text) —
+    plus each line's segment count and indent (its first segment's
+    start), from one regex split of the joined lines."""
+    joined, line_at = _joined(texts)
+    parts = _seg_split_re(gap_min_spaces).split(joined)
+    plen = np.fromiter(map(len, parts), np.int64, len(parts))
+    seg_pos = (np.cumsum(plen) - plen)[1::2]
+    seg_line = np.searchsorted(line_at, seg_pos, "right") - 1
+    seg_s = seg_pos - line_at[seg_line]
+    seg_e = seg_s + plen[1::2]
+    n_segs = np.bincount(seg_line, minlength=len(texts)).astype(np.int32)
     indent = np.zeros(len(texts), dtype=np.int32)
-    finditer = _seg_re(gap_min_spaces).finditer
-    for i, t in enumerate(texts):
-        first = True
-        cnt = 0
-        for m in finditer(t):
-            seg_line.append(i)
-            seg_start.append(m.start())
-            seg_end.append(m.end())
-            seg_text.append(m.group())
-            if first:
-                indent[i] = m.start()
-                first = False
-            cnt += 1
-        n_segs[i] = cnt
-    return (
-        np.asarray(seg_line, dtype=np.int64),
-        np.asarray(seg_start, dtype=np.int64),
-        np.asarray(seg_end, dtype=np.int64),
-        np.asarray(seg_text, dtype=object),
-        n_segs,
-        indent,
-    )
+    first = _run_starts(seg_line)
+    indent[seg_line[first]] = seg_s[first]
+    return (seg_line, seg_s, seg_e, np.array(parts[1::2], dtype=object),
+            n_segs, indent)
 
 
-def _line_features(li_doc: np.ndarray, texts: pd.Series):
-    """Vectorized RRID / header-keyword / section-header features."""
-    up = texts.str.upper()
-    has_rrid = texts.str.contains(_RRID_PAT, regex=True, na=False).to_numpy()
-    hdr = up.str.contains(spec.HEADER_TITLE, regex=False, na=False).to_numpy()
-    # cheap prefilter: one combined regex pass; the per-keyword passes run
-    # only on the (rare) candidate lines
-    any_kw = up.str.contains(
-        "|".join(spec.HEADER_KEYWORDS), regex=True, na=False
-    ).to_numpy()
-    is_header = hdr.copy()
-    cand = np.flatnonzero(any_kw & ~hdr)
-    if len(cand):
-        sub = up.iloc[cand]
-        kw_hits = np.zeros(len(cand), dtype=np.int32)
-        for kw in spec.HEADER_KEYWORDS:
-            kw_hits += sub.str.contains(
-                r"\b%s\b" % kw, regex=True, na=False
-            ).to_numpy()
-        is_header[cand] = kw_hits >= spec.HEADER_MIN_KEYWORDS
-    # section-header shape: Title-case start, <=N words, no terminal punct
-    stripped = texts.str.strip()
-    sect_ok = (
-        stripped.str.slice(0, 1).str.isupper().fillna(False)
-        & (stripped.str.count(" ") < spec.SECTION_HEADER_MAX_WORDS)
-        & ~stripped.str.endswith(spec.SECTION_HEADER_END_PUNCT).fillna(False)
-    ).to_numpy()
+def _section_shape(text: str) -> bool:
+    """Title-case start, few words, no terminal punctuation."""
+    s = text.strip()
+    return (s[:1].isupper()
+            and s.count(" ") < spec.SECTION_HEADER_MAX_WORDS
+            and not s.endswith(spec.SECTION_HEADER_END_PUNCT))
+
+
+def _line_features(texts):
+    """RRID / header-keyword / section-header features per line."""
+    joined, line_at = _joined(texts)
+    low = joined.translate(_RE_FOLDS).lower()
+    if len(low) == len(joined):
+        has_rrid = _lines_of([i for i in _hits(low, _RRID_WORD)
+                              if _RRID_RE.match(joined, i)], line_at)
+    else:  # a character lower-cases to several: no shared positions
+        has_rrid = np.array([bool(_RRID_RE.search(t)) for t in texts], bool)
+    up = joined.upper()
+    if len(up) != len(joined):  # a character upper-cases to several
+        up_at = _joined([t.upper() for t in texts])[1]
+    else:
+        up_at = line_at
+    kw_hits = sum(
+        _lines_of([i for i in _hits(up, kw) if r.match(up, i)], up_at)
+        .astype(np.int32) for kw, r in _KEYWORD_RES.items())
+    is_header = (_lines_of(_hits(up, spec.HEADER_TITLE), up_at)
+                 | (kw_hits >= spec.HEADER_MIN_KEYWORDS))
+    sect_ok = np.fromiter(map(_section_shape, texts), bool, len(texts))
     return has_rrid, is_header, sect_ok
 
 
@@ -180,76 +223,99 @@ def _in_table_pass(li_doc, n_segs, indent, has_rrid, is_header, sect_ok):
 
 
 # --------------------------------------------------------------------------
-# per-region structure build (numpy; small arrays)
+# batch-wide region build (numpy over every table of the batch at once)
 # --------------------------------------------------------------------------
 
-def _excepted_lines_keep_mask(
-    li_doc: np.ndarray, excepted_lines: list[int]
-) -> np.ndarray:
-    """Per-line keep mask dropping each doc's excepted text-line indices
-    (Python-style negative indexing, out-of-range ignored — reference
-    PDFTableExtractor2.java:93-128). Vectorized over the whole batch."""
-    n = len(li_doc)
-    if n == 0:
-        return np.ones(0, dtype=bool)
-    change = np.r_[True, li_doc[1:] != li_doc[:-1]]
-    starts = np.flatnonzero(change)
-    counts = np.diff(np.r_[starts, n])
+def _excepted_mask(group: np.ndarray, excepted: list[int]) -> np.ndarray:
+    """Keep mask over items sorted by ``group`` that drops each group's
+    items at the ``excepted`` positions (Python-style negative indexing,
+    out-of-range ignored — reference PDFTableExtractor2.java:93-128 for
+    text lines, :641-651 for detected regions)."""
+    n = len(group)
+    starts = np.flatnonzero(_run_starts(group))
+    counts = np.diff(np.r_[starts, n]).astype(np.int64)
     pos = np.arange(n) - np.repeat(starts, counts)
     lens = np.repeat(counts, counts)
-    excl = np.zeros(n, dtype=bool)
-    for ix in excepted_lines:
-        if ix >= 0:
-            excl |= pos == ix
-        else:
-            excl |= pos == lens + ix
-    return ~excl
+    keep = np.ones(n, dtype=bool)
+    for ix in excepted:
+        keep &= pos != (ix if ix >= 0 else lens + ix)
+    return keep
 
 
-def _column_union(starts: np.ndarray, ends: np.ndarray):
-    """Merge overlapping segment x-intervals → disjoint column trap ranges."""
-    order = np.argsort(starts, kind="stable")
-    s, e = starts[order], ends[order]
-    cmax = np.maximum.accumulate(e)
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The concatenated ``arange(s, s + c)`` of every (start, count)."""
+    ends = np.cumsum(counts)
+    return np.arange(ends[-1] if len(ends) else 0) + np.repeat(
+        starts - (ends - counts), counts)
+
+
+def _column_union(run: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+    """Merge each run's overlapping segment x-intervals into disjoint
+    column trap ranges: one lexsort by (run, start) and a running max of
+    the ends that restarts at every run. Returns ``(col_run, col_s,
+    col_e)`` sorted by (run, start)."""
+    if not len(run):
+        return run, starts, ends
+    order = np.lexsort((starts, run))
+    r, s, e = run[order], starts[order], ends[order]
+    lift = r * (int(e.max()) + 1)  # runs ascend, so one accumulate serves all
+    cmax = np.maximum.accumulate(e + lift) - lift
     brk = np.empty(len(s), dtype=bool)
     brk[0] = True
-    brk[1:] = s[1:] > cmax[:-1] + spec.COLUMN_MERGE_TOL
-    # group starts: first s per group (s sorted asc), ends: max e per group
-    col_s = s[brk]
-    col_e = np.maximum.reduceat(e, np.flatnonzero(brk))
-    return col_s, col_e
+    brk[1:] = (r[1:] != r[:-1]) | (s[1:] > cmax[:-1] + spec.COLUMN_MERGE_TOL)
+    at = np.flatnonzero(brk)
+    return r[at], s[at], np.maximum.reduceat(e, at)
 
 
-def _assign_columns(seg_s, seg_e, col_s, col_e, with_extents: bool = True):
-    """Max-overlap column per segment, leftmost tie, rightmost-start fallback.
+def _assign_columns(seg_tab, seg_s, seg_e, col_tab, col_s, col_e,
+                    with_extents: bool = True):
+    """Max-overlap column per segment, leftmost tie, rightmost-start
+    fallback, over the columns of the segment's table.
 
-    Returns ``(best, first, last)``: the assigned column plus the physical
-    extent — the first and last trap range each segment positively overlaps
-    (the interval-overlap data the spanning-cell recovery reads; reference
-    models spanning cells as their own boxes, table_model.py:239-264).
-    For segments overlapping no column, first == last == best (fallback).
-    ``with_extents=False`` skips the extent pass (first/last are None) —
-    the flat span output never reads them and the kernel is hot.
-    """
-    ce = col_e.astype(np.int64).copy()
-    ce[-1] = max(ce[-1], int(seg_e.max()))  # last column extends (reference
-    # expands the last column, PDFTableExtractor2.java:230-236)
-    ov = np.minimum(seg_e[:, None], ce[None, :]) - np.maximum(
-        seg_s[:, None], col_s[None, :]
-    )
-    best = ov.argmax(axis=1)
-    none = ov[np.arange(len(seg_s)), best] <= 0
+    Columns are ``_column_union`` output (sorted, disjoint per table); the
+    results are indexes into them. Returns ``(best, first, last)``: the
+    assigned column plus the physical extent — the first and last trap
+    range each segment positively overlaps (the interval-overlap data the
+    spanning-cell recovery reads; reference models spanning cells as their
+    own boxes, table_model.py:239-264). For segments overlapping no
+    column, first == last == best (fallback). ``with_extents=False``
+    returns None for first/last.
+
+    The overlapped columns of a segment are one contiguous range, found by
+    two ``searchsorted`` over (table, bound) keys, so memory stays linear
+    in segments plus overlaps."""
+    n_tab = int(col_tab[-1]) + 1
+    base = np.searchsorted(col_tab, np.arange(n_tab + 1))
+    ce = col_e.astype(np.int64)  # a copy: the last column of each table
+    seg_max = np.zeros(n_tab, dtype=np.int64)  # extends to its widest
+    np.maximum.at(seg_max, seg_tab, seg_e)  # segment (reference
+    ce[base[1:] - 1] = np.maximum(ce[base[1:] - 1], seg_max)  # expands the
+    # last column, PDFTableExtractor2.java:230-236)
+    w = int(max(ce.max(), seg_e.max())) + 1
+    col_ks, col_ke = col_tab * w + col_s, col_tab * w + ce
+    seg_ks, seg_ke = seg_tab * w + seg_s, seg_tab * w + seg_e
+    first = np.searchsorted(col_ke, seg_ks, "right")  # first end > start
+    last = np.searchsorted(col_ks, seg_ke, "left") - 1  # last start < end
+    k = last - first + 1  # columns with a positive overlap
+    best = first.copy()
+    wide = np.flatnonzero(k > 1)
+    if len(wide):
+        kw = k[wide]
+        seg = np.repeat(wide, kw)
+        col = _ranges(first[wide], kw)
+        ov = (np.minimum(seg_e[seg], ce[col])
+              - np.maximum(seg_s[seg], col_s[col]))
+        at = np.cumsum(kw) - kw
+        top = np.repeat(np.maximum.reduceat(ov, at), kw)
+        best[wide] = np.minimum.reduceat(np.where(ov == top, col, len(ce)), at)
+    none = k < 1
     if none.any():
-        fb = np.searchsorted(col_s, seg_s[none], side="right") - 1
-        best[none] = np.clip(fb, 0, len(col_s) - 1)
+        t = seg_tab[none]
+        fb = np.searchsorted(col_ks, seg_ks[none], "right") - 1
+        best[none] = np.clip(fb, base[t], base[t + 1] - 1)
     if not with_extents:
         return best, None, None
-    pos = ov > 0
-    first = pos.argmax(axis=1)
-    last = pos.shape[1] - 1 - pos[:, ::-1].argmax(axis=1)
-    first = np.where(none, best, first)
-    last = np.where(none, best, last)
-    return best, first, last
+    return best, np.where(none, best, first), np.where(none, best, last)
 
 
 _LOWER_CONT = set(spec.CONTINUATION_LEADING_CHARS)
@@ -258,34 +324,41 @@ _LOWER_CONT = set(spec.CONTINUATION_LEADING_CHARS)
 _DANGLING = spec.DANGLING_SUFFIXES
 
 
-def _merge_flags(cells: np.ndarray, is_hdr: np.ndarray) -> np.ndarray:
-    """Row-merge decision vs physical predecessor (votes, strict majority).
+def _merge_flags(row_skip, row_ncols, cell_row, cell_key, ncols_max,
+                 first_text: pa.Array, last_text: pa.Array) -> np.ndarray:
+    """Row-merge decision vs the physical predecessor row (votes, strict
+    majority), for every row of the batch.
 
-    Regions are tiny (tens of rows × a few columns) — plain Python string
-    ops beat pandas Series construction here by ~100×."""
-    nrows, ncols = cells.shape
-    flags = np.zeros(nrows, dtype=bool)
-    for k in range(1, nrows):
-        if is_hdr[k]:
-            continue
-        upper = cells[k - 1]
-        lower = cells[k]
-        if spec.MERGE_REQUIRES_EMPTY_CELL and "" not in lower:
-            continue
-        votes = 0
-        for c in range(ncols):
-            lo = lower[c]
-            if lo == "" or (
-                (lo[0].islower() or lo[0] in _LOWER_CONT)
-                or upper[c].endswith(_DANGLING)
-            ):
-                votes += 1
-        flags[k] = votes * 2 > ncols
-    return flags
+    Cells are the non-empty (row, column) cells, sorted by ``cell_key =
+    row * ncols_max + column``, with the text of their first and last
+    segment. A non-empty cell votes when its first character is lowercase
+    or a continuation char, or the cell above it ends with a dangling
+    suffix; every empty cell votes. ``row_skip`` rows (a table's first
+    row, headers) never merge, nor does a row with no empty cell."""
+    nrows = len(row_skip)
+    first = pc.utf8_slice_codeunits(first_text, 0, 1).dictionary_encode()
+    cont = np.array([c.islower() or c in _LOWER_CONT
+                     for c in first.dictionary.to_pylist()], dtype=bool)
+    vote = cont[first.indices.to_numpy()]
+    dangling = np.zeros(len(cell_key), dtype=bool)
+    for suffix in _DANGLING:
+        dangling |= pc.ends_with(last_text, pattern=suffix).to_numpy(
+            zero_copy_only=False)
+    above = cell_key - ncols_max
+    up = np.minimum(np.searchsorted(cell_key, above), len(cell_key) - 1)
+    vote |= (cell_key[up] == above) & dangling[up]
+    filled = np.bincount(cell_row, minlength=nrows)
+    votes = row_ncols - filled + np.bincount(
+        cell_row, weights=vote, minlength=nrows).astype(np.int64)
+    has_empty = filled < row_ncols
+    if not spec.MERGE_REQUIRES_EMPTY_CELL:
+        has_empty[:] = True
+    return ~row_skip & has_empty & (votes * 2 > row_ncols)
 
 
-def _extract_doc_regions(
-    line_off: np.ndarray,
+def _build_regions(
+    li_doc: np.ndarray,
+    li_off: np.ndarray,
     region_id: np.ndarray,
     is_header: np.ndarray,
     n_segs: np.ndarray,
@@ -293,95 +366,99 @@ def _extract_doc_regions(
     seg_s: np.ndarray,
     seg_e: np.ndarray,
     seg_t: np.ndarray,
-    media_off: np.ndarray,
-    media_ref: np.ndarray,
-    out: dict,
+    md_doc: np.ndarray,
+    md_off: np.ndarray,
     excepted_pages: list[int] | None = None,
     row_model: str = "votes",
     with_extents: bool = False,
     midcol_rowspans: bool = False,
-) -> None:
-    """Emit one doc's regions into the output accumulator, numbering its
-    tables from 0 in the ``table`` column.
+) -> dict | None:
+    """Every table of the batch, built at once: its folded rows (groups),
+    their cells and the boundary media routed to it. None when the batch
+    has no table.
+
+    Tables are the kept line runs of ``region_id`` that survive
+    ``excepted_pages`` (indexes over each doc's kept runs, including runs
+    later dropped), hold a structural segment and cluster to at least
+    ``MIN_COLUMNS`` columns; ``tab_local`` numbers each doc's emitted
+    tables from 0.
 
     ``row_model="none"`` is the reference's ``use_row_info`` switch analog
     (pipeline A vs B, reference README:121-122, PDFTableExtractor2.java:
     200-208): physical rows are emitted as-is, no continuation merging.
-
-    ``excepted_pages`` skips detected regions by index in the doc's
-    detection order (negative = from the end, out-of-range ignored —
-    reference PDFTableExtractor2.java:641-651).
     """
-    n_tables = 0
-    media_used = np.zeros(len(media_off), dtype=bool)
     kept = np.flatnonzero(region_id >= 0)
-    if len(kept) == 0:
-        return
-    # contiguous runs of equal region ids
-    rk = region_id[kept]
-    run_break = np.empty(len(kept), dtype=bool)
-    run_break[0] = True
-    run_break[1:] = rk[1:] != rk[:-1]
-    run_starts = kept[run_break]
-    rb_idx = np.flatnonzero(run_break)
-    run_ends = np.concatenate([kept[rb_idx[1:] - 1], kept[-1:]])
-    excl_pages: set[int] = set()
-    if excepted_pages:
-        nr = len(run_starts)
-        for ix in excepted_pages:
-            j = ix if ix >= 0 else nr + ix
-            if 0 <= j < nr:
-                excl_pages.add(j)
-    for ri, (lo_i, hi_i) in enumerate(zip(run_starts, run_ends)):
-        if ri in excl_pages:
-            continue
-        lines_idx = np.arange(lo_i, hi_i + 1)
-        smask = (seg_line >= lo_i) & (seg_line <= hi_i)
-        sl, ss, se, st = seg_line[smask], seg_s[smask], seg_e[smask], seg_t[smask]
-        if len(sl) == 0:
-            continue
-        struct = n_segs[sl] >= spec.MIN_SEGS_IN_TABLE
-        if not struct.any():
-            continue
-        col_s, col_e = _column_union(ss[struct], se[struct])
-        ncols = len(col_s)
-        if ncols < spec.MIN_COLUMNS:
-            continue
-        col_of, col_first, col_last = _assign_columns(
-            ss, se, col_s, col_e, with_extents
-        )
-        # cell grid (rows = physical lines of the region); gf/gl carry each
-        # cell's physical column extent (min first / max last trap range its
-        # segments overlap) for spanning-cell recovery in the nested output
-        # (skipped entirely on the flat path — the kernel is hot)
-        nl = len(lines_idx)
-        grid = np.full((nl, ncols), "", dtype=object)
-        local = sl - lo_i
-        for k in range(len(sl)):
-            r, c = local[k], col_of[k]
-            grid[r, c] = (
-                st[k] if grid[r, c] == "" else grid[r, c] + " " + st[k]
-            )
-        if with_extents:
-            gf = np.tile(np.arange(ncols, dtype=np.int64), (nl, 1))
-            gl = gf.copy()
-            np.minimum.at(gf, (local, col_of), col_first)
-            np.maximum.at(gl, (local, col_of), col_last)
-        nonempty = (grid != "").any(axis=1)
-        if not nonempty.any():
-            continue
-        rows = grid[nonempty]
-        if with_extents:
-            rows_f = gf[nonempty]
-            rows_l = gl[nonempty]
-        row_lines = lines_idx[nonempty]
-        hdr = is_header[row_lines]
-        cont_full = None
-        if row_model == "anchor":
+    if not len(kept):
+        return None
+    # kept runs: one per island, numbered across the batch
+    brk = _run_starts(region_id[kept])
+    run_lo, run_hi = kept[brk], kept[np.r_[brk[1:], True]]
+    run_doc = li_doc[run_lo]
+    line_run = np.full(len(li_doc), -1, dtype=np.int64)
+    line_run[kept] = np.cumsum(brk) - 1
+    keep_run = (_excepted_mask(run_doc, excepted_pages) if excepted_pages
+                else np.ones(len(run_lo), dtype=bool))
+    seg_run = line_run[seg_line]
+    live = seg_run >= 0
+    live[live] = keep_run[seg_run[live]]
+    struct = live & (n_segs[seg_line] >= spec.MIN_SEGS_IN_TABLE)
+    col_run, col_s, col_e = _column_union(
+        seg_run[struct], seg_s[struct], seg_e[struct])
+    ncols_run = np.bincount(col_run, minlength=len(run_lo))
+    emit = keep_run & (ncols_run >= max(spec.MIN_COLUMNS, 1))
+    if not emit.any():
+        return None
+    tab_of_run = np.cumsum(emit) - 1
+    tab_doc, tab_lo, tab_hi = run_doc[emit], run_lo[emit], run_hi[emit]
+    n_tab = len(tab_doc)
+    ncols = ncols_run[emit]
+    col_base = np.r_[0, np.cumsum(ncols)]
+    on = emit[col_run]
+    col_tab, col_s, col_e = tab_of_run[col_run[on]], col_s[on], col_e[on]
+
+    # segments of emitted tables → columns
+    live[live] = emit[seg_run[live]]
+    sidx = np.flatnonzero(live)
+    s_line, s_s, s_e = seg_line[sidx], seg_s[sidx], seg_e[sidx]
+    s_tab = tab_of_run[seg_run[sidx]]
+    best, c_first, c_last = _assign_columns(
+        s_tab, s_s, s_e, col_tab, col_s, col_e, with_extents)
+    s_col = best - col_base[s_tab]
+
+    # rows: the table lines that hold a segment (the others are empty rows)
+    new_row = _run_starts(s_line)
+    s_row = np.cumsum(new_row) - 1
+    row_line, row_tab = s_line[new_row], s_tab[new_row]
+    n_rows = len(row_line)
+    row_first = _run_starts(row_tab)
+    row_hdr = is_header[row_line]
+    row_ncols = ncols[row_tab]
+    s_text = pa.array(seg_t[sidx], type=pa.string())
+
+    # fold rows into groups (logical rows)
+    cont_full = None
+    if row_model == "none":
+        merge = np.zeros(n_rows, dtype=bool)
+    else:
+        # the non-empty (row, column) cells, segments in order within each
+        ncols_max = int(ncols.max())
+        key = s_row * ncols_max + s_col
+        order = np.argsort(key, kind="stable")
+        new_cell = _run_starts(key[order])
+        cell_key = key[order][new_cell]
+        cell_row = cell_key // ncols_max
+        filled = np.bincount(cell_row, minlength=n_rows)
+        if row_model == "votes":
+            merge = _merge_flags(
+                row_first | row_hdr, row_ncols, cell_row, cell_key,
+                ncols_max, s_text.take(order[new_cell]),
+                s_text.take(order[np.r_[new_cell[1:], True]]))
+        else:
             # J4 analog (reference PDFTableExtractor2.java:334-380): rows
             # lacking their col-0 anchor fold into the detected row above
-            merge = (rows[:, 0] == "") & ~hdr
-            merge[0] = False
+            has_anchor = np.zeros(n_rows, dtype=bool)
+            has_anchor[cell_row[cell_key % ncols_max == 0]] = True
+            merge = ~has_anchor & ~row_hdr & ~row_first
             if with_extents:
                 # col-0 ROWSPAN recovery (nested colspans output only): an
                 # anchor-less line with >=2 non-empty cells is a full
@@ -391,151 +468,257 @@ def _extract_doc_regions(
                 # wrap fragment (wraps continue exactly one column). Keep
                 # it as its own logical row; the anchor's col-0 cell will
                 # carry rowspan = 1 + run of such covered rows below.
-                cont_full = merge & ((rows != "").sum(axis=1) >= 2)
-                merge = merge & ~cont_full
-        elif row_model == "votes":
-            merge = _merge_flags(rows, hdr)
-        else:
-            merge = np.zeros(len(rows), dtype=bool)
-        gid = np.cumsum(~merge) - 1
-        ngroups = gid[-1] + 1
-        folded = np.full((ngroups, ncols), "", dtype=object)
-        for k in range(len(rows)):
-            g = gid[k]
-            for c in range(ncols):
-                v = rows[k, c]
-                if v != "":
-                    folded[g, c] = (
-                        v if folded[g, c] == ""
-                        else folded[g, c] + " " + v
-                    )
-        if with_extents:
-            # an empty cell's extent is its own column, which min/max leave
-            # unchanged, so every cell of the group's rows can be folded
-            folded_f = np.tile(np.arange(ncols, dtype=np.int64), (ngroups, 1))
-            folded_l = folded_f.copy()
-            r, c = np.indices(rows.shape)
-            np.minimum.at(folded_f, (gid[r], c), rows_f)
-            np.maximum.at(folded_l, (gid[r], c), rows_l)
-        first_of_group = np.empty(len(gid), dtype=bool)
-        first_of_group[0] = True
-        first_of_group[1:] = gid[1:] != gid[:-1]
-        grp_off = line_off[row_lines[first_of_group]]
-        # full-width spanning rows (colspan carrier for the nested result):
-        # every source line single-segment AND exactly one non-empty cell —
-        # the section-divider shape the reference models as a spanning cell
-        # (DETR label 5, table_model.py:239-264). Partial colspans are not
-        # recoverable from character layout (documented deviation).
-        src_multi = n_segs[row_lines] > 1
-        grp_has_multi = np.bincount(gid, weights=src_multi, minlength=ngroups) > 0
-        grp_nonempty = (folded != "").sum(axis=1)
-        grp_fullspan = (~grp_has_multi) & (grp_nonempty == 1)
-        grp_rowspan = None
-        if with_extents:
-            # rowspan carriage: a run of covered rows extends the group
-            # ABOVE it — but only a plain DATA row may carry a claim. A
-            # header group or a full-width divider preceding an
-            # anchor-less full row is not evidence of a spanning cell
-            # (the reference derives rowspans from spanning-cell boxes
-            # over DATA row boxes, table_model.py:239-264); cancelling
-            # there falls back to the flat documented-deviation shape.
-            # Per (group, col): col 0 spans the whole covered run (the
-            # covered rows are anchor-less by construction — strong fold
-            # evidence). A carrier cell in column c>0 spanning the
-            # empty-in-c PREFIX of the run is recovered only under the
-            # ``midcol_rowspans`` opt-in: its sole evidence is "covered
-            # row empty in c", which a genuinely empty cell (the common
-            # sparse-column shape) produces byte-identically, so the
-            # default keeps the flat emission that is correct there —
-            # the opt-in trades that false positive for recovering true
-            # mid-column spans (documented deviation either way; the
-            # reference's pixel boxes disambiguate, table_model.py:
-            # 239-264, and the span contract excludes them, SURVEY §1.3).
-            grp_rowspan = np.ones((ngroups, ncols), dtype=np.int64)
-            if cont_full is not None and cont_full.any():
-                covered = np.zeros(ngroups, dtype=bool)
-                covered[gid[cont_full]] = True  # groups a covered row starts
-                grp_is_hdr = hdr[first_of_group]
-                run = 0
-                for g in range(ngroups - 1, -1, -1):
-                    if covered[g]:
-                        run += 1
-                    else:
-                        if run and not grp_is_hdr[g] and not grp_fullspan[g]:
-                            grp_rowspan[g, 0] = 1 + run
-                            for c in range(1, ncols) if midcol_rowspans else ():
-                                if folded[g, c] == "":
-                                    continue
-                                pre = 0
-                                for j in range(1, run + 1):
-                                    if folded[g + j, c] != "":
-                                        break
-                                    pre += 1
-                                if pre:
-                                    grp_rowspan[g, c] = 1 + pre
-                        run = 0
-        # boundary media (emitted once, offset order)
-        lo_off = int(line_off[lo_i]) - spec.MEDIA_BOUNDARY_SLACK
-        hi_off = int(line_off[hi_i]) + spec.MEDIA_BOUNDARY_SLACK
-        mm = (~media_used) & (media_off >= lo_off) & (media_off <= hi_off)
-        media_used |= mm
-        m_off = media_off[mm]
-        m_ref = media_ref[mm]
-        # interleave: media sorts before a row at same offset (offsets unique)
-        nm = len(m_off)
-        ev_off = np.concatenate([m_off, grp_off])
-        ev_is_row = np.zeros(nm + ngroups, dtype=bool)
-        ev_is_row[nm:] = True
-        ev_payload = np.concatenate([np.arange(nm), np.arange(ngroups)])
-        order = np.lexsort((ev_is_row, ev_off))
-        for ix in order:
-            if ev_is_row[ix]:
-                g = int(ev_payload[ix])
-                off = int(grp_off[g])
-                for c in range(ncols):
-                    out["kind"].append(spec.KIND_TEXT)
-                    out["text"].append(folded[g, c])
-                    out["media_ref"].append("")
-                    out["offset"].append(off)
-                    out["table"].append(n_tables)
-                    out["row"].append(g)
-                    out["col"].append(c)
-                    out["fullspan"].append(bool(grp_fullspan[g]))
-                    if with_extents:
-                        out["cfirst"].append(int(folded_f[g, c]))
-                        out["clast"].append(int(folded_l[g, c]))
-                        out["rowspan"].append(int(grp_rowspan[g, c]))
-            else:
-                j = int(ev_payload[ix])
-                out["kind"].append(spec.KIND_MEDIA)
-                out["text"].append("")
-                out["media_ref"].append(
-                    "" if m_ref[j] is None else str(m_ref[j])
-                )
-                out["offset"].append(int(m_off[j]))
-                out["table"].append(n_tables)
-                out["row"].append(-1)
-                out["col"].append(-1)
-                out["fullspan"].append(False)
-                if with_extents:
-                    out["cfirst"].append(-1)
-                    out["clast"].append(-1)
-                    out["rowspan"].append(1)
-        n_tables += 1
+                cont_full = merge & (filled >= 2)
+                merge &= ~cont_full
+    row_gid = np.cumsum(~merge) - 1
+    grp_first = np.flatnonzero(~merge)  # each group's first row
+    n_grp = len(grp_first)
+    grp_tab = row_tab[grp_first]
+    grp_row = np.arange(n_grp) - np.searchsorted(grp_tab, grp_tab)
+    grp_ncols = ncols[grp_tab]
+    cell_base = np.r_[0, np.cumsum(grp_ncols)]
+
+    # folded cells: every (group, column) of every table, joined segments
+    s_cell = cell_base[row_gid[s_row]] + s_col
+    order = np.argsort(s_cell, kind="stable")
+    at = np.flatnonzero(_run_starts(s_cell[order]))
+    counts = np.diff(np.r_[at, len(order)])
+    filled_cell = s_cell[order][at]
+    text = np.full(cell_base[-1], "", dtype=object)
+    one = counts == 1
+    text[filled_cell[one]] = seg_t[sidx[order[at[one]]]]
+    if not one.all():
+        parts = pa.ListArray.from_arrays(
+            pa.array(np.r_[0, np.cumsum(counts[~one])], type=pa.int32()),
+            s_text.take(order[_ranges(at[~one], counts[~one])]))
+        text[filled_cell[~one]] = pc.binary_join(parts, " ").to_numpy(
+            zero_copy_only=False)
+    # full-width spanning rows (colspan carrier for the nested result):
+    # every source line single-segment AND exactly one non-empty cell —
+    # the section-divider shape the reference models as a spanning cell
+    # (DETR label 5, table_model.py:239-264). Partial colspans are not
+    # recoverable from character layout (documented deviation).
+    cell_grp = np.searchsorted(cell_base, filled_cell, "right") - 1
+    grp_multi = np.bincount(row_gid, weights=n_segs[row_line] > 1,
+                            minlength=n_grp) > 0
+    grp_fullspan = ~grp_multi & (np.bincount(cell_grp, minlength=n_grp) == 1)
+    regions = dict(
+        tab_doc=tab_doc, tab_local=np.arange(n_tab) - np.searchsorted(
+            tab_doc, tab_doc),
+        grp_tab=grp_tab, grp_row=grp_row, grp_ncols=grp_ncols,
+        grp_off=li_off[row_line[grp_first]], grp_fullspan=grp_fullspan,
+        cell_base=cell_base, text=text,
+    )
+    if with_extents:
+        # each folded cell's physical column extent (min first / max last
+        # trap range its segments overlap; an empty cell's is its own
+        # column) for spanning-cell recovery in the nested output
+        col = np.arange(cell_base[-1]) - np.repeat(cell_base[:-1], grp_ncols)
+        cfirst, clast = col.copy(), col.copy()
+        cfirst[filled_cell] = np.minimum(col[filled_cell], np.minimum.reduceat(
+            (c_first - col_base[s_tab])[order], at))
+        clast[filled_cell] = np.maximum(col[filled_cell], np.maximum.reduceat(
+            (c_last - col_base[s_tab])[order], at))
+        regions.update(cfirst=cfirst, clast=clast, rowspan=_rowspans(
+            cont_full, row_gid, row_hdr[grp_first], grp_fullspan, cell_base,
+            filled_cell, cell_grp, midcol_rowspans))
+
+    # boundary media: each goes to the first emitted table of its doc
+    # whose +-slack window holds it (windows ascend with the tables)
+    md_tab = np.full(len(md_doc), -1, dtype=np.int64)
+    if len(md_doc):
+        lo = li_off[tab_lo] - spec.MEDIA_BOUNDARY_SLACK
+        hi = li_off[tab_hi] + spec.MEDIA_BOUNDARY_SLACK
+        floor = min(int(hi.min()), int(md_off.min()))
+        w = max(int(hi.max()), int(md_off.max())) - floor + 1
+        t = np.searchsorted(tab_doc * w + (hi - floor),
+                            md_doc * w + (md_off - floor), "left")
+        ok = t < n_tab
+        ok[ok] = (tab_doc[t[ok]] == md_doc[ok]) & (lo[t[ok]] <= md_off[ok])
+        md_tab[ok] = t[ok]
+    regions["md_tab"] = md_tab
+    return regions
+
+
+def _rowspans(cont_full, row_gid, grp_hdr, grp_fullspan, cell_base,
+              filled_cell, cell_grp, midcol_rowspans) -> np.ndarray:
+    """Rowspan of every folded cell (anchor row model, nested colspans).
+
+    A run of covered groups (each started by a ``cont_full`` row) extends
+    the group ABOVE it — but only a plain DATA row may carry a claim. A
+    header group or a full-width divider preceding an anchor-less full
+    row is not evidence of a spanning cell (the reference derives
+    rowspans from spanning-cell boxes over DATA row boxes,
+    table_model.py:239-264); cancelling there falls back to the flat
+    documented-deviation shape. Col 0 spans the whole covered run (the
+    covered rows are anchor-less by construction — strong fold evidence).
+    A carrier cell in column c>0 spanning the empty-in-c PREFIX of the run
+    is recovered only under the ``midcol_rowspans`` opt-in: its sole
+    evidence is "covered row empty in c", which a genuinely empty cell
+    (the common sparse-column shape) produces byte-identically, so the
+    default keeps the flat emission that is correct there — the opt-in
+    trades that false positive for recovering true mid-column spans
+    (documented deviation either way; the reference's pixel boxes
+    disambiguate, table_model.py:239-264, and the span contract excludes
+    them, SURVEY §1.3).
+
+    A table's first group is never covered, so no run crosses tables."""
+    n_grp = len(cell_base) - 1
+    rowspan = np.ones(cell_base[-1], dtype=np.int64)
+    if cont_full is None or not cont_full.any():
+        return rowspan
+    covered = np.zeros(n_grp, dtype=bool)
+    covered[row_gid[cont_full]] = True  # groups a covered row starts
+    heads = np.flatnonzero(~covered)
+    run = np.diff(np.r_[heads, n_grp]) - 1  # covered groups below each head
+    carry = (run > 0) & ~grp_hdr[heads] & ~grp_fullspan[heads]
+    carrier, run = heads[carry], run[carry]
+    rowspan[cell_base[carrier]] = 1 + run
+    if midcol_rowspans:
+        # the next filled cell below in the same column bounds the prefix
+        col = filled_cell - cell_base[cell_grp]
+        order = np.lexsort((cell_grp, col))
+        below = np.full(len(order), n_grp)
+        same = col[order][1:] == col[order][:-1]
+        below[order[:-1][same]] = cell_grp[order][1:][same]
+        run_of = np.zeros(n_grp, dtype=np.int64)
+        run_of[carrier] = run
+        claim = (col > 0) & (run_of[cell_grp] > 0)
+        pre = np.minimum(below - cell_grp - 1, run_of[cell_grp])
+        claim &= pre > 0
+        rowspan[filled_cell[claim]] = 1 + pre[claim]
+    return rowspan
+
+
+def _build_output(regions: dict, md_off: np.ndarray, md_ref: np.ndarray,
+                  with_extents: bool) -> dict:
+    """The output rows of every table, in (table, offset) order: each
+    group's cells, and its routed media, which sort before a row at the
+    same offset."""
+    md = np.flatnonzero(regions["md_tab"] >= 0)
+    n_grp = len(regions["grp_tab"])
+    ev_tab = np.r_[regions["md_tab"][md], regions["grp_tab"]]
+    ev_is_row = np.r_[np.zeros(len(md), bool), np.ones(n_grp, bool)]
+    ev_id = np.r_[md, np.arange(n_grp)]
+    ev_off = np.r_[md_off[md], regions["grp_off"]]
+    order = np.lexsort((ev_is_row, ev_off, ev_tab))
+    ev_tab, ev_is_row, ev_id, ev_off = (
+        ev_tab[order], ev_is_row[order], ev_id[order], ev_off[order])
+    size = np.ones(len(order), dtype=np.int64)
+    size[ev_is_row] = regions["grp_ncols"][ev_id[ev_is_row]]
+    ev = np.repeat(np.arange(len(order)), size)
+    pos = np.arange(len(ev)) - np.repeat(np.cumsum(size) - size, size)
+    txt = np.flatnonzero(ev_is_row[ev])
+    med = np.flatnonzero(~ev_is_row[ev])
+    grp = ev_id[ev[txt]]
+    cell = regions["cell_base"][grp] + pos[txt]
+    n = len(ev)
+    rows = _meta_rows(regions["tab_doc"][ev_tab[ev]], spec.KIND_TEXT,
+                      np.empty(n, dtype=object), with_extents)
+    rows["kind"][med] = spec.KIND_MEDIA
+    rows["text"][txt] = regions["text"][cell]
+    rows["text"][med] = ""
+    ref = md_ref[ev_id[ev[med]]]
+    rows["media_ref"][med] = np.where(np.equal(ref, None), "", ref)
+    rows["offset"] = ev_off[ev]
+    rows["table"] = regions["tab_local"][ev_tab[ev]]
+    rows["row"][txt] = regions["grp_row"][grp]
+    rows["col"][txt] = pos[txt]
+    rows["fullspan"][txt] = regions["grp_fullspan"][grp]
+    if with_extents:
+        for c in ("cfirst", "clast", "rowspan"):
+            rows[c][txt] = regions[c][cell]
+    return rows
 
 
 # --------------------------------------------------------------------------
 # batch entry points
 # --------------------------------------------------------------------------
 
-def _append_meta_row(out: dict, kind: str, text: str) -> None:
-    """Append a row outside every table (a doc's error row), filling each
-    lineage column the accumulator carries."""
-    row = {"kind": kind, "text": text, "media_ref": "",
-           "offset": -1, "table": -1, "row": -1, "col": -1,
-           "fullspan": False, "cfirst": -1, "clast": -1, "rowspan": 1}
-    for c, vals in out.items():
-        vals.append(row[c])
+def _meta_rows(doc, kind: str, text, with_extents: bool) -> dict:
+    """Output rows outside every table (a failed doc's error row), one
+    per ``doc`` entry, with every lineage column the output carries."""
+    n = len(doc)
+    rows = {"doc": np.asarray(doc, dtype=np.int64),
+            "kind": np.full(n, kind, dtype=object),
+            "text": np.asarray(text, dtype=object),
+            "media_ref": np.full(n, "", dtype=object)}
+    for c in ("offset", "table", "row", "col"):
+        rows[c] = np.full(n, -1, dtype=np.int64)
+    rows["fullspan"] = np.zeros(n, dtype=bool)
+    if with_extents:
+        rows["cfirst"] = np.full(n, -1, dtype=np.int64)
+        rows["clast"] = np.full(n, -1, dtype=np.int64)
+        rows["rowspan"] = np.ones(n, dtype=np.int64)
+    return rows
+
+
+def _extract_docs(
+    spans: tuple,
+    docs: np.ndarray,
+    excepted_lines: list[int] | None,
+    excepted_pages: list[int] | None,
+    row_model: str,
+    gap_min_spaces: int,
+    with_extents: bool,
+    midcol_rowspans: bool,
+) -> dict:
+    """The batch-wide cascade over the docs ``docs`` (input rows) of the
+    (doc, offset)-sorted span columns ``spans``: output rows of every
+    doc's tables, in doc order."""
+    span_doc, kinds, texts, media_refs, offsets = spans
+    at = np.minimum(np.searchsorted(docs, span_doc), max(len(docs) - 1, 0))
+    keep = docs[at] == span_doc if len(docs) else np.zeros(len(span_doc), bool)
+    if not keep.all():
+        span_doc, kinds, texts, media_refs, offsets = (c[keep] for c in spans)
+    is_text = kinds == spec.KIND_TEXT
+    li_doc = span_doc[is_text]
+    li_off = offsets[is_text]
+    li_texts_raw = texts[is_text]
+    if excepted_lines:
+        li_keep = _excepted_mask(li_doc, excepted_lines)
+        li_doc = li_doc[li_keep]
+        li_off = li_off[li_keep]
+        li_texts_raw = li_texts_raw[li_keep]
+    li_text = pd.Series(li_texts_raw).fillna("").astype(str).to_numpy()
+
+    seg_line, seg_s, seg_e, seg_t, n_segs, indent = _segment_scan(
+        li_text, gap_min_spaces
+    )
+    has_rrid, is_header, sect_ok = _line_features(li_text)
+    region_id = _in_table_pass(
+        li_doc, n_segs, indent, has_rrid, is_header, sect_ok
+    )
+    is_media = kinds == spec.KIND_MEDIA
+    md_doc, md_off = span_doc[is_media], offsets[is_media]
+    regions = _build_regions(
+        li_doc, li_off, region_id, is_header, n_segs,
+        seg_line, seg_s, seg_e, seg_t, md_doc, md_off,
+        excepted_pages=excepted_pages, row_model=row_model,
+        with_extents=with_extents, midcol_rowspans=midcol_rowspans,
+    )
+    if regions is None:
+        return _meta_rows([], spec.KIND_TEXT, [], with_extents)
+    return _build_output(regions, md_off, media_refs[is_media], with_extents)
+
+
+def _isolated(spans: tuple, docs: np.ndarray, options: dict) -> list[dict]:
+    """``_extract_docs`` over ``docs``; if it raises, the same call on each
+    half, recursively, so a failing doc ends as a one-doc call and yields
+    its single ``kind='error'`` row (the reference stores per-job err_msg,
+    task_manager.py:56-59) while every other doc keeps its rows."""
+    try:
+        return [_extract_docs(spans, docs, **options)]
+    except Exception:
+        if len(docs) > 1:
+            half = len(docs) // 2
+            return (_isolated(spans, docs[:half], options)
+                    + _isolated(spans, docs[half:], options))
+        if not len(docs):
+            raise
+        return [_meta_rows(docs, spec.KIND_ERROR,
+                           [traceback.format_exc()[-500:]],
+                           options["with_extents"])]
 
 
 def extract_columnar(
@@ -554,20 +737,24 @@ def extract_columnar(
     null_offset: np.ndarray | None = None,
 ) -> dict:
     """Extraction over flat columnar span arrays for a batch of docs.
-    Returns a dict of output columns (lists / numpy arrays), including the
-    internal ``table``/``row``/``col`` lineage used by the nested renderer
-    and ``doc``, each output row's input row (its index in ``doc_ids``).
+    Returns a dict of numpy output columns, including the internal
+    ``table``/``row``/``col`` lineage used by the nested renderer and
+    ``doc``, each output row's input row (its index in ``doc_ids``).
     Each input row's rows are contiguous and in input order; ``seq``
     numbers them from 0, so two rows with the same ``doc_id`` come out as
     two docs, whatever batch they share.
 
     ``span_doc`` maps each span to its doc index in ``doc_ids``. Spans need
-    not be pre-sorted; we sort by (doc, offset) here.
+    not be pre-sorted; we sort by (doc, offset) here. Every stage then
+    runs once over the whole batch (see ``_isolated`` for how a failing
+    doc is kept from sinking it).
 
     ``with_extents=True`` additionally carries per-cell physical column
-    extents (``cfirst``/``clast``) for spanning-cell recovery — only the
-    colspan-aware nested renderer needs them, and the extra per-cell work
-    costs ~20% kernel throughput, so the flat path skips them.
+    extents (``cfirst``/``clast``) and recovered ``rowspan``s for
+    spanning-cell recovery. Only the colspan-aware nested renderer needs
+    them, so the flat path skips them; their kernel cost is within
+    run-to-run noise (2,000 seed-1 synth docs, one core,
+    ``scripts/kernel_profile.py``).
 
     ``null_offset`` marks spans whose offset was null in the input (their
     ``offsets`` entry is a placeholder): a doc with such a text or media
@@ -575,95 +762,37 @@ def extract_columnar(
     a doc whose ``doc_id`` is null, its error row's ``doc_id`` null too.
     A doc that fails keeps no row but its error row.
     """
-    bad_doc = np.fromiter((d is None for d in doc_ids), bool, len(doc_ids))
+    _seg_split_re(gap_min_spaces)  # an invalid gap fails the call, not docs
+    null_id = np.fromiter((d is None for d in doc_ids), bool, len(doc_ids))
+    bad = null_id.copy()
     if null_offset is not None:
         placed = (kinds == spec.KIND_TEXT) | (kinds == spec.KIND_MEDIA)
-        bad_doc[span_doc[null_offset & placed]] = True
+        bad[span_doc[null_offset & placed]] = True
     order = np.lexsort((offsets, span_doc))
-    span_doc, kinds, texts = span_doc[order], kinds[order], texts[order]
-    media_refs, offsets = media_refs[order], offsets[order]
-
-    is_text = kinds == spec.KIND_TEXT
-    li_doc = span_doc[is_text]
-    li_off = offsets[is_text]
-    li_texts_raw = texts[is_text]
-    if excepted_lines:
-        li_keep = _excepted_lines_keep_mask(li_doc, excepted_lines)
-        li_doc = li_doc[li_keep]
-        li_off = li_off[li_keep]
-        li_texts_raw = li_texts_raw[li_keep]
-    li_text_s = pd.Series(li_texts_raw).fillna("").astype(str)
-    li_text = li_text_s.to_numpy()
-
-    seg_line, seg_s, seg_e, seg_t, n_segs, indent = _segment_scan(
-        li_text, gap_min_spaces
+    spans = tuple(c[order] for c in (span_doc, kinds, texts, media_refs,
+                                     offsets))
+    options = dict(
+        excepted_lines=excepted_lines, excepted_pages=excepted_pages,
+        row_model=row_model, gap_min_spaces=gap_min_spaces,
+        with_extents=with_extents, midcol_rowspans=midcol_rowspans,
     )
-    has_rrid, is_header, sect_ok = _line_features(li_doc, li_text_s)
-    region_id = _in_table_pass(
-        li_doc, n_segs, indent, has_rrid, is_header, sect_ok
-    )
-
-    is_media = kinds == spec.KIND_MEDIA
-    md_doc = span_doc[is_media]
-    md_off = offsets[is_media]
-    md_ref = media_refs[is_media]
-
-    out: dict[str, list] = {
-        "kind": [], "text": [], "media_ref": [], "offset": [],
-        "table": [], "row": [], "col": [], "fullspan": [],
-    }
-    if with_extents:
-        out["cfirst"] = []
-        out["clast"] = []
-        out["rowspan"] = []
-    # per-doc slices (lines and media are doc-sorted)
-    line_doc_bounds = np.searchsorted(li_doc, np.arange(len(doc_ids) + 1))
-    media_doc_bounds = np.searchsorted(md_doc, np.arange(len(doc_ids) + 1))
-    seg_bounds = np.searchsorted(seg_line, line_doc_bounds)
-    n_rows = np.zeros(len(doc_ids), dtype=np.int64)
-    for d in range(len(doc_ids)):
-        l0, l1 = line_doc_bounds[d], line_doc_bounds[d + 1]
-        m0, m1 = media_doc_bounds[d], media_doc_bounds[d + 1]
-        s0, s1 = seg_bounds[d], seg_bounds[d + 1]
-        if l0 == l1 and not bad_doc[d]:
-            continue
-        n0 = len(out["kind"])
-        try:
-            if doc_ids[d] is None:
-                raise ValueError("the doc_id is null")
-            if bad_doc[d]:
-                raise ValueError("a text or media span has a null offset")
-            _extract_doc_regions(
-                li_off[l0:l1],
-                region_id[l0:l1],
-                is_header[l0:l1],
-                n_segs[l0:l1],
-                seg_line[s0:s1] - l0,
-                seg_s[s0:s1],
-                seg_e[s0:s1],
-                seg_t[s0:s1],
-                md_off[m0:m1],
-                md_ref[m0:m1],
-                out,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                with_extents=with_extents,
-                midcol_rowspans=midcol_rowspans,
-            )
-        except Exception:  # per-doc isolation (reference stores err_msg)
-            for vals in out.values():
-                del vals[n0:]
-            _append_meta_row(
-                out, spec.KIND_ERROR, traceback.format_exc()[-500:]
-            )
-        n_rows[d] = len(out["kind"]) - n0
-
-    first = np.cumsum(n_rows) - n_rows  # each input row's first output row
-    out["doc"] = np.repeat(np.arange(len(doc_ids)), n_rows)
-    out["doc_id"] = np.asarray(doc_ids, dtype=object)[out["doc"]]
-    out["seq"] = (np.arange(len(out["doc"])) - np.repeat(first, n_rows)
+    parts = _isolated(spans, np.flatnonzero(~bad), options)
+    for d in np.flatnonzero(bad):
+        reason = ValueError("the doc_id is null" if null_id[d] else
+                            "a text or media span has a null offset")
+        parts.append(_meta_rows(
+            [d], spec.KIND_ERROR,
+            ["".join(traceback.format_exception_only(reason))], with_extents))
+    order = np.argsort(np.concatenate([p["doc"] for p in parts]),
+                       kind="stable")
+    out = {c: np.concatenate([p[c] for p in parts])[order] for c in parts[0]}
+    doc = out["doc"]
+    first = np.flatnonzero(_run_starts(doc))
+    counts = np.diff(np.r_[first, len(doc)]).astype(np.int64)
+    out["doc_id"] = np.asarray(doc_ids, dtype=object)[doc]
+    out["seq"] = (np.arange(len(doc)) - np.repeat(first, counts)
                   ).astype(np.int32)
-    out["offset"] = np.asarray(out["offset"], dtype=np.int32)
+    out["offset"] = out["offset"].astype(np.int32)
     return out
 
 
@@ -734,19 +863,26 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
     (tests/test_colspan_rowspan.py)."""
     doc = out["doc"]
     starts = np.flatnonzero(np.diff(doc, prepend=-1))
+    # Python lists once: ``_pages`` indexes them per row, and json.dumps
+    # takes their ints
+    cols = {c: np.asarray(out[c]).tolist() for c in _PAGE_COLUMNS if c in out}
     ids, results = [], []
     for s, e in zip(starts, np.r_[starts[1:], len(doc)]):
         record = {"paper_id": out["doc_id"][s], "result": {"pages": []}}
-        if out["kind"][s] == spec.KIND_ERROR:  # a failed doc's only row
-            record["error"] = out["text"][s]
+        if cols["kind"][s] == spec.KIND_ERROR:  # a failed doc's only row
+            record["error"] = cols["text"][s]
         else:
-            record["result"]["pages"] = _pages(out, s, e, with_colspans)
+            record["result"]["pages"] = _pages(cols, s, e, with_colspans)
         ids.append(record["paper_id"])
         results.append(json.dumps(record, sort_keys=True))
     return pa.RecordBatch.from_arrays(
         [pa.array(ids, type=pa.string()), pa.array(results, type=pa.string())],
         names=NESTED_COLUMNS,
     )
+
+
+_PAGE_COLUMNS = ("kind", "text", "table", "row", "col", "fullspan",
+                 "cfirst", "clast", "rowspan")
 
 
 def _pages(out: dict, s: int, e: int, with_colspans: bool) -> list[dict]:

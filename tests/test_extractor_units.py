@@ -10,7 +10,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from key_resource_table_extractor_spark import oracle, spec
+from key_resource_table_extractor_spark import oracle, spec, synth
+from key_resource_table_extractor_spark.extractor import pipeline
 from key_resource_table_extractor_spark.extractor.pipeline import (
     _assign_columns,
     _column_union,
@@ -80,7 +81,8 @@ def test_header_rule():
 def test_column_union_merges_overlaps():
     s = np.array([0, 2, 30, 28, 60])
     e = np.array([10, 12, 40, 38, 70])
-    cs, ce = _column_union(s, e)
+    run, cs, ce = _column_union(np.zeros(5, dtype=np.int64), s, e)
+    assert list(run) == [0, 0, 0]
     assert list(cs) == [0, 28, 60]
     assert list(ce) == [12, 40, 70]
 
@@ -88,7 +90,8 @@ def test_column_union_merges_overlaps():
 def test_column_union_tolerance():
     s = np.array([0, 11])
     e = np.array([10, 20])
-    cs, _ = _column_union(s, e)  # gap of 1 <= tol → merged
+    # gap of 1 <= tol → merged
+    _, cs, _ = _column_union(np.zeros(2, dtype=np.int64), s, e)
     assert len(cs) == 1
 
 
@@ -97,7 +100,9 @@ def test_assign_columns_max_overlap_and_fallback():
     col_e = np.array([10, 30, 50])
     seg_s = np.array([2, 22, 45, 12])
     seg_e = np.array([8, 28, 60, 18])  # last seg sits in the gap after col0
-    got, first, last = _assign_columns(seg_s, seg_e, col_s, col_e)
+    got, first, last = _assign_columns(
+        np.zeros(4, dtype=np.int64), seg_s, seg_e,
+        np.zeros(3, dtype=np.int64), col_s, col_e)
     assert list(got[:3]) == [0, 1, 2]
     assert got[3] == 0  # fallback: rightmost column starting <= seg start
     # non-spanning segments: extent == assigned column (fallback included)
@@ -109,10 +114,33 @@ def test_assign_columns_extents_span_multiple_traps():
     col_e = np.array([10, 30, 50])
     seg_s = np.array([2, 25])
     seg_e = np.array([28, 50])  # seg0 spans cols 0-1; seg1 spans cols 1-2
-    best, first, last = _assign_columns(seg_s, seg_e, col_s, col_e)
+    best, first, last = _assign_columns(
+        np.zeros(2, dtype=np.int64), seg_s, seg_e,
+        np.zeros(3, dtype=np.int64), col_s, col_e)
     assert list(first) == [0, 1]
     assert list(last) == [1, 2]
     assert list(best) == [0, 2]  # max overlap: 8 in col0 vs 6 in col1; 10 in col2 vs 5 in col1
+
+
+def test_column_union_keeps_runs_apart():
+    run = np.array([1, 0, 1, 0])
+    s = np.array([0, 0, 5, 20])
+    e = np.array([10, 8, 30, 30])
+    r, cs, ce = _column_union(run, s, e)
+    assert list(zip(r, cs, ce)) == [(0, 0, 8), (0, 20, 30), (1, 0, 30)]
+
+
+def test_assign_columns_per_table():
+    col_tab = np.array([0, 0, 1, 1])
+    col_s = np.array([0, 20, 0, 40])
+    col_e = np.array([10, 30, 30, 50])
+    seg_tab = np.array([0, 1, 1, 0, 1])
+    seg_s = np.array([22, 2, 12, 12, 60])
+    seg_e = np.array([28, 8, 18, 18, 70])  # table 1's last column extends
+    best, first, last = _assign_columns(
+        seg_tab, seg_s, seg_e, col_tab, col_s, col_e)
+    assert list(best) == [1, 2, 2, 0, 3]
+    assert list(first) == list(best) and list(last) == list(best)
 
 
 # ---- merge votes ---------------------------------------------------------------
@@ -267,3 +295,38 @@ def test_error_isolation_bad_doc_does_not_fail_batch():
     assert counted.drop(columns=["bucket", "__tables", "__error"]).equals(out)
     assert counted["__tables"].sum() == 1
     assert not counted["__error"].any()
+
+
+def test_failing_doc_is_bisected_out_of_the_batch(monkeypatch):
+    """A stage that raises on one doc of a 64-doc batch: the batch-wide
+    call is retried on halves until that doc fails alone, so it yields
+    one error row and every other doc keeps its clean rows and counts."""
+    ids = [synth.KEY_FORMAT.format(i, seed=3) for i in range(64)]
+    pdf = pd.DataFrame({
+        "doc_id": ids,
+        "spans": [[{"kind": k, "text": t, "media_ref": m, "offset": o}
+                   for k, t, m, o in synth.generate_doc(d, seed=3)]
+                  for d in ids],
+        "bucket": 0,
+    })
+    clean = extract_batch(pdf)
+    per_doc = clean.groupby("doc_id")["__tables"].sum()
+    bad = ids.index(per_doc.idxmax())  # the doc with the most tables
+    assert per_doc.max() > 0
+    build = pipeline._build_regions
+
+    def failing(li_doc, *args, **kwargs):
+        if bad in li_doc:
+            raise RuntimeError("stage failed")
+        return build(li_doc, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_build_regions", failing)
+    got = extract_batch(pdf)
+    err = got[got["doc_id"] == ids[bad]]
+    assert list(err["kind"]) == [spec.KIND_ERROR] and list(err["seq"]) == [0]
+    assert "RuntimeError: stage failed" in err["text"].iloc[0]
+    keep = clean["doc_id"] != ids[bad]
+    assert got[got["doc_id"] != ids[bad]].reset_index(drop=True).equals(
+        clean[keep].reset_index(drop=True))
+    assert got["__error"].sum() == 1
+    assert got["__tables"].sum() == clean["__tables"].sum() - per_doc.max()

@@ -122,3 +122,40 @@ def test_batch_equals_oracle_on_random_docs(docs):
             )
         )
         assert got_list == exp, (doc_id, got_list[:5], exp[:5])
+
+
+# non-ASCII letters whose case mapping changes the text's length (ß, ﬀ,
+# İ) or that re's IGNORECASE folds to ASCII (ı, ſ, K): the line features
+# scan the joined lines of a batch and must agree with per-line regexes
+unicode_word = st.sampled_from(
+    ["rrıd:AB_1", "RRİD:SCR_2", "xRRID", "ſource", "SOURCE", "ıdentıfıer",
+     "REAGENT", "Straße", "ﬀoo", "İstanbul", "éclair", "Ünïcode", "K",
+     "Key", "Resources", "Table", "ǅ", "x-", "a", "试剂", ""]
+)
+
+
+@st.composite
+def unicode_doc(draw):
+    spans = []
+    for i in range(draw(st.integers(0, 20))):
+        parts = [draw(unicode_word) for _ in range(draw(st.integers(0, 4)))]
+        text = draw(indent) + draw(gap).join(parts)
+        spans.append(("text", text, "", i))
+    return spans
+
+
+@settings(max_examples=60, deadline=None, derandomize=True)
+@given(st.lists(unicode_doc(), min_size=1, max_size=4))
+def test_batch_equals_oracle_on_case_changing_text(docs):
+    pdf = pd.DataFrame({
+        "doc_id": [f"d{i}" for i in range(len(docs))],
+        "spans": [[{"kind": k, "text": t, "media_ref": m, "offset": o}
+                   for (k, t, m, o) in spans] for spans in docs],
+    })
+    out = extract_batch(pdf)
+    for i, spans in enumerate(docs):
+        got = out[out["doc_id"] == f"d{i}"]
+        assert list(zip(got["kind"], got["text"], got["media_ref"],
+                        got["offset"])) == [
+            (k, t, m, o) for (_s, k, t, m, o) in oracle.extract_document(spans)
+        ]
