@@ -6,9 +6,10 @@ function over one Arrow batch of ``(doc_id, spans)`` rows inside
 (or, for the fused synthetic-input queries, its ``make_extract_fn`` step).
 Every stage runs once over the whole batch, never per doc:
 
-- line passes: the segment scan is one regex split of the batch's
-  tab-joined lines; the RRID/header features are ``str.find`` of literal
-  words in the joined (case-mapped) text, each hit checked by its regex;
+- line passes: the segment scan finds gap runs with numpy over the code
+  points of the batch's tab-joined lines; the RRID/header features are
+  ``str.find`` of literal words in the joined (case-mapped) text, each
+  hit checked by its regex;
   in-table scoring, gap fill and island detection are pandas/numpy over
   all lines of all docs at once;
 - region build: every table of the batch at once. One lexsort of the
@@ -35,7 +36,6 @@ from __future__ import annotations
 import json
 import re
 import traceback
-from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -43,14 +43,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .. import spec
-
-
-@lru_cache(maxsize=None)
-def _seg_split_re(gap_min_spaces: int) -> re.Pattern:
-    """Splits text into [gap, segment, gap, ..., segment, gap]: segments
-    are maximal runs of non-gap characters, so what lies between them is
-    only spaces and tabs."""
-    return re.compile("(%s)" % spec.segment_regex(gap_min_spaces))
 
 
 _RRID_RE = re.compile(spec.RRID_REGEX)
@@ -109,21 +101,35 @@ def _lines_of(pos: list[int], line_at: np.ndarray) -> np.ndarray:
 
 def _segment_scan(texts, gap_min_spaces: int = spec.GAP_MIN_SPACES):
     """Flat segment arrays for all lines — (line_idx, start, end, text) —
-    plus each line's segment count and indent (its first segment's
-    start), from one regex split of the joined lines."""
+    plus each line's segment count and indent (its first segment's start).
+
+    A segment is a maximal run of ``spec.segment_regex``: what lies
+    between segments are gaps, maximal runs of spaces and tabs that hold
+    a tab or at least ``gap_min_spaces`` spaces (or touch the text's
+    edge). Found with numpy over the code points of the joined lines."""
     joined, line_at = _joined(texts)
-    parts = _seg_split_re(gap_min_spaces).split(joined)
-    plen = np.fromiter(map(len, parts), np.int64, len(parts))
-    seg_pos = (np.cumsum(plen) - plen)[1::2]
-    seg_line = np.searchsorted(line_at, seg_pos, "right") - 1
-    seg_s = seg_pos - line_at[seg_line]
-    seg_e = seg_s + plen[1::2]
+    n = len(joined)
+    if joined.isascii():
+        code = np.frombuffer(joined.encode("ascii"), np.uint8)
+    else:
+        code = np.frombuffer(
+            joined.encode("utf-32-le", "surrogatepass"), np.uint32)
+    blank = (code == 32) | (code == 9)
+    edge = np.diff(blank.view(np.int8), prepend=np.int8(0),
+                   append=np.int8(0))
+    run_s, run_e = np.flatnonzero(edge == 1), np.flatnonzero(edge == -1)
+    gap = (run_e - run_s >= gap_min_spaces) | (run_s == 0) | (run_e == n)
+    gap[np.searchsorted(run_s, np.flatnonzero(code == 9), "right") - 1] = True
+    seg_s, seg_e = np.r_[0, run_e[gap]], np.r_[run_s[gap], n]
+    seg_s, seg_e = seg_s[seg_s < seg_e], seg_e[seg_s < seg_e]
+    seg_t = np.frompyfunc(lambda a, b: joined[a:b], 2, 1)(seg_s, seg_e)
+    seg_line = np.searchsorted(line_at, seg_s, "right") - 1
+    seg_s, seg_e = seg_s - line_at[seg_line], seg_e - line_at[seg_line]
     n_segs = np.bincount(seg_line, minlength=len(texts)).astype(np.int32)
     indent = np.zeros(len(texts), dtype=np.int32)
     first = _run_starts(seg_line)
     indent[seg_line[first]] = seg_s[first]
-    return (seg_line, seg_s, seg_e, np.array(parts[1::2], dtype=object),
-            n_segs, indent)
+    return seg_line, seg_s, seg_e, seg_t, n_segs, indent
 
 
 def _section_shape(text: str) -> bool:
@@ -762,7 +768,8 @@ def extract_columnar(
     a doc whose ``doc_id`` is null, its error row's ``doc_id`` null too.
     A doc that fails keeps no row but its error row.
     """
-    _seg_split_re(gap_min_spaces)  # an invalid gap fails the call, not docs
+    if gap_min_spaces < 1:  # fails the call, not each doc
+        raise ValueError("gap_min_spaces must be >= 1")
     null_id = np.fromiter((d is None for d in doc_ids), bool, len(doc_ids))
     bad = null_id.copy()
     if null_offset is not None:

@@ -7,6 +7,9 @@ merge votes, empty-row cleanup, region relevance, media boundaries.
 
 from __future__ import annotations
 
+import random
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -15,6 +18,7 @@ from key_resource_table_extractor_spark.extractor import pipeline
 from key_resource_table_extractor_spark.extractor.pipeline import (
     _assign_columns,
     _column_union,
+    _segment_scan,
 )
 from tests.conftest import extract_batch
 
@@ -64,6 +68,29 @@ def test_split_segments_leading_gap_indent():
 def test_split_segments_blank():
     assert oracle.split_segments("") == []
     assert oracle.split_segments("     ") == []
+
+
+def test_segment_scan_equals_the_segment_regex_per_line():
+    """The batch-wide scan over the joined lines finds exactly the
+    matches of ``spec.segment_regex`` in each line, for every gap width;
+    lines mix spaces, tabs, newlines and non-ASCII text."""
+    rng = random.Random(7)
+    alphabet = ["a", "Bc", " ", " ", "  ", "   ", "\t", "\n", "é", "😀", "-"]
+    for _ in range(300):
+        texts = ["".join(rng.choice(alphabet)
+                         for _ in range(rng.randint(0, 12)))
+                 for _ in range(rng.randint(0, 6))]
+        for gap in (1, 2, 3):
+            line, start, end, text, n_segs, indent = _segment_scan(
+                np.array(texts, dtype=object), gap)
+            found = [list(re.finditer(spec.segment_regex(gap), t))
+                     for t in texts]
+            assert list(zip(line, start, end, text)) == [
+                (i, m.start(), m.end(), m.group())
+                for i, ms in enumerate(found) for m in ms]
+            assert list(n_segs) == [len(ms) for ms in found]
+            assert list(indent) == [ms[0].start() if ms else 0
+                                    for ms in found]
 
 
 # ---- header rule -------------------------------------------------------------
