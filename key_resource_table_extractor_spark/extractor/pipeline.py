@@ -292,11 +292,12 @@ def _assign_columns(seg_tab, seg_s, seg_e, col_tab, col_s, col_e,
     in segments plus overlaps."""
     n_tab = int(col_tab[-1]) + 1
     base = np.searchsorted(col_tab, np.arange(n_tab + 1))
-    ce = col_e.astype(np.int64)  # a copy: the last column of each table
-    seg_max = np.zeros(n_tab, dtype=np.int64)  # extends to its widest
-    np.maximum.at(seg_max, seg_tab, seg_e)  # segment (reference
-    ce[base[1:] - 1] = np.maximum(ce[base[1:] - 1], seg_max)  # expands the
-    # last column, PDFTableExtractor2.java:230-236)
+    # the last column of each table extends to its widest segment
+    # (reference expands the last column, PDFTableExtractor2.java:230-236)
+    ce = col_e.astype(np.int64)
+    seg_max = np.zeros(n_tab, dtype=np.int64)
+    np.maximum.at(seg_max, seg_tab, seg_e)
+    ce[base[1:] - 1] = np.maximum(ce[base[1:] - 1], seg_max)
     w = int(max(ce.max(), seg_e.max())) + 1
     col_ks, col_ke = col_tab * w + col_s, col_tab * w + ce
     seg_ks, seg_ke = seg_tab * w + seg_s, seg_tab * w + seg_e
@@ -453,7 +454,6 @@ def _build_regions(
         new_cell = _run_starts(key[order])
         cell_key = key[order][new_cell]
         cell_row = cell_key // ncols_max
-        filled = np.bincount(cell_row, minlength=n_rows)
         if row_model == "votes":
             merge = _merge_flags(
                 row_first | row_hdr, row_ncols, cell_row, cell_key,
@@ -474,6 +474,7 @@ def _build_regions(
                 # wrap fragment (wraps continue exactly one column). Keep
                 # it as its own logical row; the anchor's col-0 cell will
                 # carry rowspan = 1 + run of such covered rows below.
+                filled = np.bincount(cell_row, minlength=n_rows)
                 cont_full = merge & (filled >= 2)
                 merge &= ~cont_full
     row_gid = np.cumsum(~merge) - 1
