@@ -26,9 +26,9 @@ Every stage runs once over the whole batch, never per doc:
   never fails the stage — the batch-wide call is retried on halves until
   the failing doc runs alone.
 
-No per-row Python UDFs. The Python-level loops left run once per line
-(the section-header shape test), per literal hit, and per distinct first
-character of a cell.
+No per-row Python UDFs. The Python-level calls left run once per line
+(the section-header shape test), per segment (slicing out its text), per
+literal hit, and per distinct first character of a cell.
 """
 
 from __future__ import annotations
@@ -46,11 +46,9 @@ from .. import spec
 
 
 _RRID_RE = re.compile(spec.RRID_REGEX)
-# RRID_REGEX is "(?i)\b" + a word: the line pass finds the word in the
-# case-folded text with str.find and checks each hit with the regex
-_RRID_WORD = spec.RRID_REGEX.removeprefix(r"(?i)\b")
-assert _RRID_WORD.isalpha() and _RRID_WORD.islower(), spec.RRID_REGEX
-# the non-ASCII letters re's IGNORECASE matches to ASCII ones
+# The line pass finds RRID_WORD with str.find in the text lower-cased after
+# _RE_FOLDS maps the non-ASCII letters that re's IGNORECASE matches to ASCII
+# ones, then checks each hit with RRID_REGEX.
 _RE_FOLDS = str.maketrans("\u0130\u0131\u017f\u212a", "iisk")
 _KEYWORD_RES = {kw: re.compile(r"\b%s\b" % kw) for kw in spec.HEADER_KEYWORDS}
 
@@ -145,7 +143,7 @@ def _line_features(texts):
     joined, line_at = _joined(texts)
     low = joined.translate(_RE_FOLDS).lower()
     if len(low) == len(joined):
-        has_rrid = _lines_of([i for i in _hits(low, _RRID_WORD)
+        has_rrid = _lines_of([i for i in _hits(low, spec.RRID_WORD.lower())
                               if _RRID_RE.match(joined, i)], line_at)
     else:  # a character lower-cases to several: no shared positions
         has_rrid = np.array([bool(_RRID_RE.search(t)) for t in texts], bool)
@@ -620,8 +618,8 @@ def _build_output(regions: dict, md_off: np.ndarray, md_ref: np.ndarray,
     grp = ev_id[ev[txt]]
     cell = regions["cell_base"][grp] + pos[txt]
     n = len(ev)
-    rows = _meta_rows(regions["tab_doc"][ev_tab[ev]], spec.KIND_TEXT,
-                      np.empty(n, dtype=object), with_extents)
+    rows = _default_rows(regions["tab_doc"][ev_tab[ev]], spec.KIND_TEXT,
+                         np.empty(n, dtype=object), with_extents)
     rows["kind"][med] = spec.KIND_MEDIA
     rows["text"][txt] = regions["text"][cell]
     rows["text"][med] = ""
@@ -642,9 +640,10 @@ def _build_output(regions: dict, md_off: np.ndarray, md_ref: np.ndarray,
 # batch entry points
 # --------------------------------------------------------------------------
 
-def _meta_rows(doc, kind: str, text, with_extents: bool) -> dict:
-    """Output rows outside every table (a failed doc's error row), one
-    per ``doc`` entry, with every lineage column the output carries."""
+def _default_rows(doc, kind: str, text, with_extents: bool) -> dict:
+    """Output rows, one per ``doc`` entry, of ``kind`` and ``text``, every
+    other column at its value outside any table (a failed doc's error row
+    is such a row)."""
     n = len(doc)
     rows = {"doc": np.asarray(doc, dtype=np.int64),
             "kind": np.full(n, kind, dtype=object),
@@ -705,7 +704,7 @@ def _extract_docs(
         with_extents=with_extents, midcol_rowspans=midcol_rowspans,
     )
     if regions is None:
-        return _meta_rows([], spec.KIND_TEXT, [], with_extents)
+        return _default_rows([], spec.KIND_TEXT, [], with_extents)
     return _build_output(regions, md_off, media_refs[is_media], with_extents)
 
 
@@ -723,9 +722,9 @@ def _isolated(spans: tuple, docs: np.ndarray, options: dict) -> list[dict]:
                     + _isolated(spans, docs[half:], options))
         if not len(docs):
             raise
-        return [_meta_rows(docs, spec.KIND_ERROR,
-                           [traceback.format_exc()[-500:]],
-                           options["with_extents"])]
+        return [_default_rows(docs, spec.KIND_ERROR,
+                              [traceback.format_exc()[-500:]],
+                              options["with_extents"])]
 
 
 def extract_columnar(
@@ -788,7 +787,7 @@ def extract_columnar(
     for d in np.flatnonzero(bad):
         reason = ValueError("the doc_id is null" if null_id[d] else
                             "a text or media span has a null offset")
-        parts.append(_meta_rows(
+        parts.append(_default_rows(
             [d], spec.KIND_ERROR,
             ["".join(traceback.format_exception_only(reason))], with_extents))
     order = np.argsort(np.concatenate([p["doc"] for p in parts]),

@@ -57,7 +57,8 @@ GAP_REGEX = gap_regex()
 SEGMENT_REGEX = segment_regex()
 
 # ---- line features ----------------------------------------------------------
-RRID_REGEX = r"(?i)\brrid"  # reference scripts/data_prep.py:107-109 (F4)
+RRID_WORD = "rrid"  # reference scripts/data_prep.py:107-109 (F4)
+RRID_REGEX = r"(?i)\b" + RRID_WORD  # the word at a word start, any case
 HEADER_TITLE = "KEY RESOURCES TABLE"
 HEADER_KEYWORDS = ("REAGENT", "RESOURCE", "SOURCE", "IDENTIFIER")
 HEADER_MIN_KEYWORDS = 2  # >=2 distinct keywords as whole words => header line
