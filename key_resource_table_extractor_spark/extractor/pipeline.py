@@ -10,8 +10,8 @@ Every stage runs once over the whole batch, never per doc:
   points of the batch's tab-joined lines; the RRID/header features are
   ``str.find`` of literal words in the joined (case-mapped) text, each
   hit checked by its regex;
-  in-table scoring, gap fill and island detection are pandas/numpy over
-  all lines of all docs at once;
+  in-table scoring, gap fill and island detection are numpy running
+  max/min of line indexes over all lines of all docs at once;
 - region build: every table of the batch at once. One lexsort of the
   structural segments by (region, start) with a running max that
   restarts per region gives the column trap ranges; two ``searchsorted``
@@ -24,16 +24,22 @@ Every stage runs once over the whole batch, never per doc:
 - documents are isolated: a failing document yields a single ``kind='error'``
   row (the reference stores per-job err_msg, task_manager.py:56-59) and
   never fails the stage — the batch-wide call is retried on halves until
-  the failing doc runs alone.
+  the failing doc runs alone. Each retry level reruns the cascade over the
+  docs of the failing halves, so the cost grows with the failing docs
+  (2,000 seed-1 synth docs, one core, a late stage raising: about 8x a
+  clean call's CPU with 1% of them failing, 20x with 10%). An option no
+  doc could run with (``gap_min_spaces``, ``excepted_lines``/
+  ``excepted_pages``) is checked first and fails the call once.
 
 No per-row Python UDFs. The Python-level calls left run once per line
-(the section-header shape test), per segment (slicing out its text), per
-literal hit, and per distinct first character of a cell.
+(the section-header shape test, upper-casing), per segment (slicing out
+its text), per literal hit, and per distinct first character of a cell.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import re
 import traceback
 
@@ -46,10 +52,12 @@ from .. import spec
 
 
 _RRID_RE = re.compile(spec.RRID_REGEX)
-# The line pass finds RRID_WORD with str.find in the text lower-cased after
-# _RE_FOLDS maps the non-ASCII letters that re's IGNORECASE matches to ASCII
-# ones, then checks each hit with RRID_REGEX.
-_RE_FOLDS = str.maketrans("\u0130\u0131\u017f\u212a", "iisk")
+# The line pass finds RRID_WORD with str.find in the lower-cased text, then
+# checks each hit with RRID_REGEX. _RE_FOLDS maps the two non-ASCII letters
+# that re's IGNORECASE matches to a letter of the word (\u0130 and \u0131,
+# both to "i") first; \u0130 is also the one character whose lower() is two
+# characters long, so the fold keeps every position.
+_RE_FOLDS = str.maketrans("\u0130\u0131", "ii")
 _KEYWORD_RES = {kw: re.compile(r"\b%s\b" % kw) for kw in spec.HEADER_KEYWORDS}
 
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
@@ -142,16 +150,10 @@ def _line_features(texts):
     """RRID / header-keyword / section-header features per line."""
     joined, line_at = _joined(texts)
     low = joined.translate(_RE_FOLDS).lower()
-    if len(low) == len(joined):
-        has_rrid = _lines_of([i for i in _hits(low, spec.RRID_WORD.lower())
-                              if _RRID_RE.match(joined, i)], line_at)
-    else:  # a character lower-cases to several: no shared positions
-        has_rrid = np.array([bool(_RRID_RE.search(t)) for t in texts], bool)
-    up = joined.upper()
-    if len(up) != len(joined):  # a character upper-cases to several
-        up_at = _joined([t.upper() for t in texts])[1]
-    else:
-        up_at = line_at
+    has_rrid = _lines_of([i for i in _hits(low, spec.RRID_WORD.lower())
+                          if _RRID_RE.match(joined, i)], line_at)
+    # per line: a character may upper-case to several (\u00df -> "SS")
+    up, up_at = _joined([t.upper() for t in texts])
     kw_hits = sum(
         _lines_of([i for i in _hits(up, kw) if r.match(up, i)], up_at)
         .astype(np.int32) for kw, r in _KEYWORD_RES.items())
@@ -164,11 +166,27 @@ def _line_features(texts):
 def _in_table_pass(li_doc, n_segs, indent, has_rrid, is_header, sect_ok):
     """Base rule + continuation threading + gap fill + islands.
 
-    Returns ``region_id`` per line (-1 = not in a kept region). All steps are
-    groupby-ffill/cumsum tricks — the gaps-and-islands shape of SURVEY §2 A1/A2
-    executed batch-wide.
+    Returns ``region_id`` per line (-1 = not in a kept region). Each step
+    finds a line's nearest line of some kind before or after it in its doc
+    with a running max or min of line indexes — the gaps-and-islands shape
+    of SURVEY §2 A1/A2 executed batch-wide.
     """
     n = len(li_doc)
+    line = np.arange(n)
+    doc_change = _run_starts(li_doc)
+    starts = np.flatnonzero(doc_change)
+    counts = np.diff(np.r_[starts, n])
+    doc_start_of = np.repeat(starts, counts)
+    doc_end_of = doc_start_of + np.repeat(counts, counts)
+
+    def last(mask):  # the last line at or before each line with mask, or -1
+        at = np.maximum.accumulate(np.where(mask, line, -1))
+        return np.where(at >= doc_start_of, at, -1)
+
+    def next_(mask):  # the next line at or after each line with mask, or n
+        at = np.minimum.accumulate(np.where(mask, line, n)[::-1])[::-1]
+        return np.where(at < doc_end_of, at, n)
+
     blank = n_segs == 0
     base = (n_segs >= spec.MIN_SEGS_IN_TABLE) | has_rrid | is_header
     # prev-threaded lines: indented continuations and section headers
@@ -176,40 +194,24 @@ def _in_table_pass(li_doc, n_segs, indent, has_rrid, is_header, sect_ok):
         (indent >= spec.CONTINUATION_MIN_INDENT) | sect_ok
     )
 
-    df = pd.DataFrame({"doc": li_doc})
-    # anchors: non-blank lines whose effective state equals their base state
-    anchor = (~blank) & (~eligible | base)
-    carried = (
-        pd.Series(np.where(anchor, base, np.nan))
-        .groupby(df["doc"])
-        .ffill()
-        .fillna(0.0)
-        .to_numpy()
-        .astype(bool)
-    )
+    # anchors: non-blank lines whose effective state equals their base
+    # state; a prev-threaded line carries its last anchor's state
+    anchor = last((~blank) & (~eligible | base))
+    carried = (anchor >= 0) & base[anchor]
     in_tab = base | (eligible & ~base & carried)
 
     # gap fill (W4): short non-blank runs between two in-table lines
-    pos = df.groupby("doc").cumcount().to_numpy()
-    doc_start = np.flatnonzero(np.r_[True, li_doc[1:] != li_doc[:-1]])
-    doc_start_of = doc_start[np.searchsorted(doc_start, np.arange(n), "right") - 1]
-    tpos = pd.Series(np.where(in_tab, pos.astype(float), np.nan))
-    prev_t = tpos.groupby(df["doc"]).ffill().to_numpy()
-    next_t = tpos.groupby(df["doc"]).bfill().to_numpy()
-    blank_cum = pd.Series(blank.astype(np.int64)).groupby(df["doc"]).cumsum().to_numpy()
-    mid = (~in_tab) & (~blank) & ~np.isnan(prev_t) & ~np.isnan(next_t)
+    prev_t, next_t = last(in_tab), next_(in_tab)
+    m_idx = np.flatnonzero((~in_tab) & (~blank) & (prev_t >= 0)
+                           & (next_t < n))
+    p, q = prev_t[m_idx], next_t[m_idx]
+    blank_cum = np.cumsum(blank)
     fill = np.zeros(n, dtype=bool)
-    if mid.any():
-        m_idx = np.flatnonzero(mid)
-        p = prev_t[m_idx].astype(np.int64) + doc_start_of[m_idx]
-        q = next_t[m_idx].astype(np.int64) + doc_start_of[m_idx]
-        gap_len = next_t[m_idx] - prev_t[m_idx] - 1
-        blanks_between = blank_cum[q - 1] - blank_cum[p]
-        fill[m_idx] = (gap_len <= spec.GAP_FILL_MAX) & (blanks_between == 0)
+    fill[m_idx] = ((q - p - 1 <= spec.GAP_FILL_MAX)
+                   & (blank_cum[q - 1] == blank_cum[p]))
     in_tab = in_tab | fill
 
     # islands: contiguous in-table runs; keep relevant ones of size >= min
-    doc_change = np.r_[True, li_doc[1:] != li_doc[:-1]]
     start = in_tab & (doc_change | ~np.r_[False, in_tab[:-1]])
     island = np.where(in_tab, np.cumsum(start), 0)
     n_isl = int(island.max()) if n else 0
@@ -672,11 +674,16 @@ def _extract_docs(
     """The batch-wide cascade over the docs ``docs`` (input rows) of the
     (doc, offset)-sorted span columns ``spans``: output rows of every
     doc's tables, in doc order."""
-    span_doc, kinds, texts, media_refs, offsets = spans
-    at = np.minimum(np.searchsorted(docs, span_doc), max(len(docs) - 1, 0))
-    keep = docs[at] == span_doc if len(docs) else np.zeros(len(span_doc), bool)
+    # spans are sorted by doc: one slice holds those of docs[0]..docs[-1],
+    # so a retried call over a few docs costs their spans, not the batch's
+    lo, hi = (np.searchsorted(spans[0], [docs[0], docs[-1] + 1])
+              if len(docs) else (0, 0))
+    spans = tuple(c[lo:hi] for c in spans)
+    at = np.minimum(np.searchsorted(docs, spans[0]), max(len(docs) - 1, 0))
+    keep = docs[at] == spans[0]
     if not keep.all():
-        span_doc, kinds, texts, media_refs, offsets = (c[keep] for c in spans)
+        spans = tuple(c[keep] for c in spans)
+    span_doc, kinds, texts, media_refs, offsets = spans
     is_text = kinds == spec.KIND_TEXT
     li_doc = span_doc[is_text]
     li_off = offsets[is_text]
@@ -768,8 +775,12 @@ def extract_columnar(
     a doc whose ``doc_id`` is null, its error row's ``doc_id`` null too.
     A doc that fails keeps no row but its error row.
     """
-    if gap_min_spaces < 1:  # fails the call, not each doc
+    # a bad option fails the call, not each doc
+    if gap_min_spaces < 1:
         raise ValueError("gap_min_spaces must be >= 1")
+    excepted_lines, excepted_pages = (
+        None if e is None else [operator.index(i) for i in e]
+        for e in (excepted_lines, excepted_pages))
     null_id = np.fromiter((d is None for d in doc_ids), bool, len(doc_ids))
     bad = null_id.copy()
     if null_offset is not None:

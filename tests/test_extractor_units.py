@@ -12,6 +12,7 @@ import re
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from key_resource_table_extractor_spark import oracle, spec, synth
 from key_resource_table_extractor_spark.extractor import pipeline
@@ -357,3 +358,20 @@ def test_failing_doc_is_bisected_out_of_the_batch(monkeypatch):
         clean[keep].reset_index(drop=True))
     assert got["__error"].sum() == 1
     assert got["__tables"].sum() == clean["__tables"].sum() - per_doc.max()
+
+
+def test_bad_option_fails_the_call_not_each_doc():
+    """An option no doc could run with raises once from the call instead
+    of being retried on halves into one error row per doc."""
+    pdf = pd.DataFrame({
+        "doc_id": ["a", "b"],
+        "spans": [[{"kind": "text", "text": "x", "media_ref": "",
+                    "offset": 0}]] * 2,
+    })
+    for options in ({"excepted_lines": ["0"]}, {"excepted_pages": [1.5]},
+                    {"excepted_pages": 2}, {"gap_min_spaces": 0}):
+        with pytest.raises((TypeError, ValueError)):
+            extract_batch(pdf, **options)
+    out = extract_batch(pdf, excepted_lines=(np.int64(0),),
+                        excepted_pages=[-1])
+    assert not (out["kind"] == spec.KIND_ERROR).any()
